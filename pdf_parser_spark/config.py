@@ -21,7 +21,7 @@ class ExtractConfig:
     # force_mode override, pdf_api/core/pdf_image_extractor.py:67-71 +
     # routes.py:131): one of "text"/"digital"/"vector"/"scanned", or None to
     # classify. Flips every downstream dispatch (image pipeline vs page
-    # renders, CAD check, analyzer pdf_type) through the one doc_stats gate.
+    # renders, CAD check, analyzer pdf_type) through the one sample_stats gate.
     force_kind: str | None = None
 
     # classification (pdf_api/core/pdf_analyzer.py:66, :118-136)
@@ -31,7 +31,6 @@ class ExtractConfig:
     cad_drawings_threshold: int = 10000 # pdf_image_extractor.py:94-103
 
     # layout analysis (our from-scratch K5 kernel; SURVEY.md §7.2 step 4)
-    char_width_ratio: float = 0.6       # monospace metric: char width = 0.6 * fontsize
     word_gap_ratio: float = 0.31        # gap > ratio*fontsize between runs => space
     line_merge_tol_ratio: float = 0.2   # baselines within tol*fontsize merge to a line
     block_gap_ratio: float = 0.9        # inter-line gap > ratio*fontsize => new block

@@ -43,8 +43,8 @@ from ..config import (
     KIND_PLAIN,
 )
 from .html_extract import extract_html
-from .layout import byte_ranges_to_base64_spans, layout_text_and_offsets
-from .pdf_classify import doc_stats
+from .layout import byte_ranges_to_base64_spans, join_pages, page_text
+from .pdf_classify import sample_stats
 from .pdf_mini import PdfParseError, parse_pdf
 
 __all__ = ["sniff_kind", "extract_one", "extract_batch", "OUTPUT_COLUMNS"]
@@ -111,11 +111,14 @@ def extract_one(
         doc = parse_pdf(raw)
     except PdfParseError:
         return _pdf_failure(text, cfg)
-    stats = doc_stats(doc, cfg)
-    kind = _PDF_TYPE_TO_KIND[stats.pdf_type]
+    # each page is laid out once: the classification sample first, the rest
+    # only if the doc has text to extract
+    pages = [page_text(p, cfg) for p in doc.pages[: cfg.classify_page_cap]]
+    kind = _PDF_TYPE_TO_KIND[sample_stats(doc, [t for t, _, _ in pages], cfg).pdf_type]
     if kind == KIND_PDF_SCANNED:
         return kind, "", [], 0, True
-    out, byte_ranges, n_blocks = layout_text_and_offsets(doc.pages, cfg)
+    pages += [page_text(p, cfg) for p in doc.pages[len(pages) :]]
+    out, byte_ranges, n_blocks = join_pages(pages)
     # map decoded-byte ranges into base64-char spans over the raw payload.
     # leading whitespace before the base64 (if any) shifts offsets.
     lead = len(text) - len(text.lstrip())

@@ -20,7 +20,9 @@ from dataclasses import dataclass, field
 from .pdf_mini import ParsedChar, ParsedPage
 from ..config import ExtractConfig, DEFAULT_CONFIG
 
-__all__ = ["LayoutBlock", "layout_page", "layout_text_and_offsets"]
+__all__ = [
+    "LayoutBlock", "layout_page", "page_text", "join_pages", "layout_text_and_offsets",
+]
 
 
 @dataclass
@@ -39,24 +41,14 @@ class LayoutBlock:
     x1: float = 0.0
     y1: float = 0.0
 
-    @property
-    def text(self) -> str:
-        return "\n".join(_line_text(ln)[0] for ln in self.lines)
 
-
-def _line_text(line: LayoutLine, cfg: ExtractConfig = DEFAULT_CONFIG) -> tuple[str, list[int]]:
+def _line_text(line: LayoutLine, cfg: ExtractConfig) -> tuple[str, list[int]]:
     """Assemble a line's text; returns (text, byte_offset per char or -1).
 
     Chars are joined left-to-right; a gap > word_gap_ratio*size between
     consecutive chars inserts a single synthetic space (offset -1 — synthetic
     chars carry no span).
-
-    Memoized on the line (classification and extraction both assemble the
-    same lines; see layout_page).
     """
-    cached = getattr(line, "_text_cache", None)
-    if cached is not None and cached[0] is cfg:
-        return cached[1]
     parts: list[str] = []
     offs: list[int] = []
     prev: ParsedChar | None = None
@@ -72,9 +64,7 @@ def _line_text(line: LayoutLine, cfg: ExtractConfig = DEFAULT_CONFIG) -> tuple[s
     while parts and parts[-1] == " " and offs[-1] == -1:
         parts.pop()
         offs.pop()
-    result = ("".join(parts), offs)
-    line._text_cache = (cfg, result)
-    return result
+    return "".join(parts), offs
 
 
 def _group_lines(chars: list[ParsedChar], cfg: ExtractConfig) -> list[LayoutLine]:
@@ -111,17 +101,7 @@ def _mk_line(chs: list[ParsedChar]) -> LayoutLine:
 
 
 def layout_page(page: ParsedPage, cfg: ExtractConfig = DEFAULT_CONFIG) -> list[LayoutBlock]:
-    """Group a page's chars into reading-ordered blocks.
-
-    Memoized on the page object (identity-keyed on cfg): classification
-    (``_page_text_len``) and extraction (``layout_text_and_offsets``) both
-    need the layout of the same parsed page — without the cache every
-    pdf_text/digital turn paid for layout twice (measured 2x kernel cost).
-    Pure caching; results are immutable downstream.
-    """
-    cached = getattr(page, "_layout_cache", None)
-    if cached is not None and cached[0] is cfg:
-        return cached[1]
+    """Group a page's chars into reading-ordered blocks."""
     lines = _group_lines(page.chars, cfg)
     # lines already ordered top-to-bottom; split into blocks on big gaps
     blocks: list[LayoutBlock] = []
@@ -139,7 +119,6 @@ def layout_page(page: ParsedPage, cfg: ExtractConfig = DEFAULT_CONFIG) -> list[L
     # reading order: top-to-bottom, then left-to-right (stable tie-break by
     # construction order)
     blocks.sort(key=lambda b: (-b.y1, b.x0))
-    page._layout_cache = (cfg, blocks)
     return blocks
 
 
@@ -153,52 +132,51 @@ def _mk_block(lines: list[LayoutLine]) -> LayoutBlock:
     )
 
 
+def page_text(
+    page: ParsedPage, cfg: ExtractConfig = DEFAULT_CONFIG
+) -> tuple[str, list[int], int]:
+    """Lay out one page: (reading-order text, raw-PDF byte offset per char
+    or -1 for synthetic chars and joiners, n_blocks).
+
+    With join_pages, the only code that knows the text format: lines are
+    joined by a newline, blocks and pages by a blank line.
+    """
+    parts: list[str] = []
+    offs: list[int] = []
+    blocks = layout_page(page, cfg)
+    for blk in blocks:
+        joiner = "\n\n"
+        for ln in blk.lines:
+            if parts:
+                parts.append(joiner)
+                offs.extend([-1] * len(joiner))
+            joiner = "\n"
+            text, line_offs = _line_text(ln, cfg)
+            parts.append(text)
+            offs.extend(line_offs)
+    return "".join(parts), offs, len(blocks)
+
+
+def join_pages(
+    pages: list[tuple[str, list[int], int]]
+) -> tuple[str, list[tuple[int, int]], int]:
+    """Join ``page_text`` results into (text, sorted maximal byte ranges
+    into the raw PDF bytes, n_blocks). Pages without blocks leave no gap."""
+    text = "\n\n".join(t for t, _, n in pages if n)
+    ranges: list[list[int]] = []
+    for off in sorted({o for _, offs, _ in pages for o in offs if o >= 0}):
+        if ranges and ranges[-1][1] == off:
+            ranges[-1][1] = off + 1
+        else:
+            ranges.append([off, off + 1])
+    return text, [(s, e) for s, e in ranges], sum(n for _, _, n in pages)
+
+
 def layout_text_and_offsets(
     pages: list[ParsedPage], cfg: ExtractConfig = DEFAULT_CONFIG
 ) -> tuple[str, list[tuple[int, int]], int]:
-    """Full-document reading-order text + merged byte spans + block count.
-
-    Returns (text, [(byte_start, byte_end) ranges into the raw PDF bytes,
-    merged and ordered], n_blocks). Pages joined by a blank line; blocks
-    joined by a blank line; lines by newline.
-    """
-    out_parts: list[str] = []
-    byte_ranges: list[tuple[int, int]] = []
-    n_blocks = 0
-    for page in pages:
-        blocks = layout_page(page, cfg)
-        for blk in blocks:
-            n_blocks += 1
-            if out_parts:
-                out_parts.append("\n\n")
-            line_texts: list[str] = []
-            for ln in blk.lines:
-                text, offs = _line_text(ln, cfg)
-                line_texts.append(text)
-                # merge consecutive byte offsets into ranges
-                run_start: int | None = None
-                prev_off: int | None = None
-                for off in offs:
-                    if off < 0:
-                        continue
-                    if run_start is None:
-                        run_start = off
-                    elif off != prev_off + 1:
-                        byte_ranges.append((run_start, prev_off + 1))
-                        run_start = off
-                    prev_off = off
-                if run_start is not None:
-                    byte_ranges.append((run_start, prev_off + 1))
-            out_parts.append("\n".join(line_texts))
-    # merge adjacent/overlapping byte ranges, sorted
-    byte_ranges.sort()
-    merged: list[tuple[int, int]] = []
-    for s, e in byte_ranges:
-        if merged and s <= merged[-1][1]:
-            merged[-1] = (merged[-1][0], max(merged[-1][1], e))
-        else:
-            merged.append((s, e))
-    return "".join(out_parts), merged, n_blocks
+    """Full-document reading-order text + merged byte spans + block count."""
+    return join_pages([page_text(p, cfg) for p in pages])
 
 
 def byte_ranges_to_base64_spans(

@@ -21,11 +21,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from .pdf_mini import ParsedDoc, ParsedPage
-from .layout import layout_page, _line_text
+from .pdf_mini import ParsedDoc
+from .layout import page_text
 from ..config import ExtractConfig, DEFAULT_CONFIG
 
-__all__ = ["PageStats", "DocStats", "page_stats", "doc_stats", "classify_pdf"]
+__all__ = ["PageStats", "DocStats", "doc_stats", "sample_stats", "classify_pdf"]
 
 
 @dataclass
@@ -52,34 +52,28 @@ class DocStats:
     pdf_type: str
 
 
-def _page_text_len(page: ParsedPage, cfg: ExtractConfig) -> int:
-    # analog of len(page.extract_text() or "") — layout-assembled text length
-    blocks = layout_page(page, cfg)
-    n = 0
-    first = True
-    for blk in blocks:
-        if not first:
-            n += 2  # "\n\n" block joiner
-        first = False
-        line_texts = [_line_text(ln, cfg)[0] for ln in blk.lines]
-        n += sum(len(t) for t in line_texts) + max(0, len(line_texts) - 1)
-    return n
-
-
-def page_stats(page: ParsedPage, page_no: int, cfg: ExtractConfig = DEFAULT_CONFIG) -> PageStats:
-    return PageStats(
-        page=page_no,
-        text_chars=_page_text_len(page, cfg),
-        image_count=len(page.images),
-        curves=page.n_curves,
-        lines=page.n_lines,
-        rects=page.n_rects,
-    )
-
-
 def doc_stats(doc: ParsedDoc, cfg: ExtractConfig = DEFAULT_CONFIG) -> DocStats:
-    cap = min(cfg.classify_page_cap, len(doc.pages))
-    pages = [page_stats(p, i, cfg) for i, p in enumerate(doc.pages[:cap])]
+    """Lay out the first ``classify_page_cap`` pages and classify ``doc``."""
+    sample = doc.pages[: cfg.classify_page_cap]
+    return sample_stats(doc, [page_text(p, cfg)[0] for p in sample], cfg)
+
+
+def sample_stats(
+    doc: ParsedDoc, texts: list[str], cfg: ExtractConfig = DEFAULT_CONFIG
+) -> DocStats:
+    """Classify ``doc`` from the laid-out text of its first
+    ``classify_page_cap`` pages (the analog of ``page.extract_text()``)."""
+    pages = [
+        PageStats(
+            page=i,
+            text_chars=len(text),
+            image_count=len(p.images),
+            curves=p.n_curves,
+            lines=p.n_lines,
+            rects=p.n_rects,
+        )
+        for i, (p, text) in enumerate(zip(doc.pages, texts))
+    ]
     total_text = sum(p.text_chars for p in pages)
     total_images = sum(p.image_count for p in pages)
     total_vectors = sum(p.vector_count for p in pages)

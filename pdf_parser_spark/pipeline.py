@@ -135,10 +135,8 @@ def sniff_kind_col(text_col: str = "text"):
     )
 
 
-def _kernel_factory(cfg: ExtractConfig, keep_payload: bool):
+def _kernel_factory(cfg: ExtractConfig):
     out_cols = [f.name for f in RESULT_SCHEMA.fields]
-    if keep_payload:
-        out_cols = out_cols + ["text"]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -152,7 +150,6 @@ def extract_turns(
     df: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
     salt: bool = False,
-    keep_payload: bool = False,
 ) -> DataFrame:
     """transcripts DataFrame → extraction results (unordered).
 
@@ -177,12 +174,7 @@ def extract_turns(
     ship_package(df.sparkSession)
     if salt:
         df = df.repartition(F.xxhash64("conv_id", "turn_idx"))
-    schema = RESULT_SCHEMA
-    if keep_payload:
-        schema = T.StructType(
-            RESULT_SCHEMA.fields + [T.StructField("text", T.StringType(), True)]
-        )
-    return df.mapInPandas(_kernel_factory(cfg, keep_payload), schema=schema)
+    return df.mapInPandas(_kernel_factory(cfg), schema=RESULT_SCHEMA)
 
 
 def reassemble(extracted: DataFrame, num_partitions: int | None = None) -> DataFrame:

@@ -6,9 +6,10 @@ import base64
 import pytest
 
 from pdf_parser_spark.config import DEFAULT_CONFIG
+from pdf_parser_spark.kernels import layout
 from pdf_parser_spark.kernels.extract import extract_one
 from pdf_parser_spark.kernels.images import extract_image_records
-from pdf_parser_spark.kernels.layout import layout_page, layout_text_and_offsets
+from pdf_parser_spark.kernels.layout import layout_page, layout_text_and_offsets, page_text
 from pdf_parser_spark.kernels.pdf_classify import classify_pdf, doc_stats
 from pdf_parser_spark.kernels.pdf_mini import (
     ImageSpec,
@@ -51,10 +52,8 @@ def test_roundtrip_escapes():
 def test_layout_blocks_and_reading_order():
     spec = _page_with_text([["line one", "line two"], ["block two"]])
     page = parse_pdf(build_pdf([spec])).pages[0]
-    blocks = layout_page(page)
-    assert len(blocks) == 2
-    assert blocks[0].text == "line one\nline two"
-    assert blocks[1].text == "block two"
+    assert len(layout_page(page)) == 2
+    assert page_text(page)[0] == "line one\nline two\n\nblock two"
 
 
 def test_layout_two_runs_same_line_get_space():
@@ -68,13 +67,20 @@ def test_layout_two_runs_same_line_get_space():
 
 
 def test_layout_byte_offsets_point_at_chars():
-    page = _page_with_text([["abcdef"]])
-    raw = build_pdf([page])
-    doc = parse_pdf(raw)
-    text, ranges, _ = layout_text_and_offsets(doc.pages)
-    assert text == "abcdef"
-    recovered = b"".join(raw[s:e] for s, e in ranges).decode("latin-1")
-    assert recovered == "abcdef"
+    one_page = [_page_with_text([["abcdef"]])]
+    # pages join by a blank line; a page without chars leaves no gap
+    three_pages = [_page_with_text([["a"]]), PageSpec(), _page_with_text([["b"], ["c"]])]
+    for pages, want_text, want_blocks in (
+        (one_page, "abcdef", 1),
+        (three_pages, "a\n\nb\n\nc", 3),
+    ):
+        raw = build_pdf(pages)
+        doc = parse_pdf(raw)
+        text, ranges, n_blocks = layout_text_and_offsets(doc.pages)
+        assert text == want_text
+        assert n_blocks == want_blocks
+        recovered = b"".join(raw[s:e] for s, e in ranges).decode("latin-1")
+        assert recovered == want_text.replace("\n", "")
 
 
 def test_drawing_counts_and_classification():
@@ -110,6 +116,27 @@ def test_classify_three_page_cap():
     stats = doc_stats(parse_pdf(build_pdf(pages)))
     assert stats.total_vectors == 0
     assert stats.pdf_type == "text"
+
+
+def test_extract_one_lays_out_each_page_once(monkeypatch):
+    calls = []
+    group_lines = layout._group_lines
+    monkeypatch.setattr(
+        layout, "_group_lines", lambda chars, cfg: calls.append(1) or group_lines(chars, cfg)
+    )
+
+    def run(pages):
+        calls.clear()
+        kind = extract_one(base64.b64encode(build_pdf(pages)).decode())[0]
+        return kind, len(calls)
+
+    text_pages = [_page_with_text([[f"page {i} has some text"]]) for i in range(5)]
+    assert run(text_pages) == ("pdf_text", 5)
+    # a scanned doc stops after the classification sample: the text pages
+    # past it are never laid out
+    image = ImageSpec(100, 400, 300, 200, 600, 400, deterministic_bytes("A", 300))
+    scanned = [PageSpec(images=[image]) for _ in range(3)] + text_pages[:2]
+    assert run(scanned) == ("pdf_scanned", 3)
 
 
 def test_image_pipeline_filters():
