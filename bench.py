@@ -74,7 +74,7 @@ def ensure_scaled_dir(sf_dir: str, mult: int) -> str:
 
     from pdf_parser_spark import golden as G
 
-    out = os.path.join(G.CACHE_DIR, f"tables_{G.sf_tag(sf_dir)}_x{mult}")
+    out = G.cache_path(f"tables_x{mult}", sf_dir, suffix="")
     done = os.path.join(out, "_SCALED_OK")
     if os.path.exists(done):
         return out
@@ -151,7 +151,7 @@ def main() -> None:
 
     # extraction corpora (cached): continuity MULT and the x4 wide line
     def corpus(mult: int) -> str:
-        p = os.path.join(G.CACHE_DIR, f"transcripts_{G.sf_tag(SF_DIR)}_x{mult}.parquet")
+        p = G.cache_path(f"transcripts_x{mult}", SF_DIR)
         if not os.path.exists(p):
             generate_transcripts_multi(SF_DIR, p, mult=mult)
         return p

@@ -29,6 +29,34 @@ import zipfile as _zipfile
 _SHIPPED_CONTEXTS: set[int] = set()
 
 
+def _package_sources() -> list[tuple[str, str]]:
+    """(archive name, file path) of every package source file, sorted."""
+    pkg_dir = _os.path.dirname(_os.path.abspath(__file__))
+    sources = []
+    for root, _dirs, files in _os.walk(pkg_dir):
+        if "__pycache__" in root:
+            continue
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            full = _os.path.join(root, fn)
+            rel = _os.path.join("pdf_parser_spark", _os.path.relpath(full, pkg_dir))
+            sources.append((rel, full))
+    sources.sort()
+    return sources
+
+
+def package_digest() -> str:
+    """md5 hex over the names and bytes of the package sources: changes
+    whenever any kernel, datagen or operator code does."""
+    digest = _hashlib.md5()
+    for rel, full in _package_sources():
+        digest.update(rel.encode())
+        with open(full, "rb") as f:
+            digest.update(f.read())
+    return digest.hexdigest()
+
+
 def ship_package(spark) -> None:
     """Make ``pdf_parser_spark`` importable on executor Python workers.
 
@@ -44,35 +72,18 @@ def ship_package(spark) -> None:
     key = id(sc)
     if key in _SHIPPED_CONTEXTS:
         return
-    pkg_dir = _os.path.dirname(_os.path.abspath(__file__))
-    sources = []
-    for root, _dirs, files in _os.walk(pkg_dir):
-        if "__pycache__" in root:
-            continue
-        for fn in files:
-            if not fn.endswith(".py"):
-                continue
-            full = _os.path.join(root, fn)
-            rel = _os.path.join("pdf_parser_spark", _os.path.relpath(full, pkg_dir))
-            sources.append((rel, full))
-    sources.sort()
     # zip filename keyed by a content hash of the package sources (NOT pid:
     # a recycled pid on a long-lived host would re-ship a stale zip and
     # executors would silently import outdated kernel code)
-    digest = _hashlib.md5()
-    for rel, full in sources:
-        digest.update(rel.encode())
-        with open(full, "rb") as f:
-            digest.update(f.read())
     zip_dir = _os.path.join(_tempfile.gettempdir(), "pdf_parser_spark_cache")
     _os.makedirs(zip_dir, exist_ok=True)
     zip_path = _os.path.join(
-        zip_dir, f"pdf_parser_spark_pkg_{digest.hexdigest()[:16]}.zip"
+        zip_dir, f"pdf_parser_spark_pkg_{package_digest()[:16]}.zip"
     )
     if not _os.path.exists(zip_path):
         tmp = zip_path + f".tmp.{_os.getpid()}"
         with _zipfile.ZipFile(tmp, "w", _zipfile.ZIP_DEFLATED) as zf:
-            for rel, full in sources:
+            for rel, full in _package_sources():
                 zf.write(full, rel)
         _os.replace(tmp, zip_path)
     sc.addPyFile(zip_path)

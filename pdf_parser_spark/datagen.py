@@ -31,7 +31,7 @@ from .kernels.pdf_mini import (
     deterministic_bytes,
 )
 
-__all__ = ["generate_transcripts", "transcripts_path", "TRANSCRIPT_SCHEMA"]
+__all__ = ["generate_transcripts", "TRANSCRIPT_SCHEMA"]
 
 TRANSCRIPT_SCHEMA = pa.schema(
     [
@@ -313,8 +313,8 @@ def generate_transcripts(
 ) -> pd.DataFrame:
     """One turn per document row in ``{sf_dir}/documents.parquet``.
 
-    If ``out_path`` is given, also writes the table as parquet (idempotent:
-    skipped when the file already exists with the same row count).
+    If ``out_path`` is given, also writes the table as parquet, unless a
+    file already exists there.
     """
     docs = pq.read_table(
         os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
@@ -409,8 +409,3 @@ def _assemble(docs: pd.DataFrame, out_path: str | None = None) -> pd.DataFrame:
         os.replace(tmp, out_path)  # atomic: concurrent generators race safely
     return df
 
-
-def transcripts_path(sf_dir: str, cache_dir: str = "/tmp/pdf_parser_spark_cache") -> str:
-    """Canonical cache location for a generated transcripts parquet."""
-    tag = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    return os.path.join(cache_dir, f"transcripts_{tag}.parquet")

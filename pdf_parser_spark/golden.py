@@ -13,9 +13,12 @@ queries in ``__spark_entry__.py``: DuckDB reads it by path, so the driver's
 value-hash compares Spark's distributed output against the single-node
 golden — exactly the north metric (BASELINE.json:2), run by the driver.
 
-All writes are atomic (tmp + os.replace) so concurrent callers (Spark query
-and oracle harness) can race safely; content is a pure function of the sf
-dir, so a winner-takes-all replace is correct.
+Every artifact is cached under ``cache_path``, whose name is keyed on the
+package sources and the tables of the sf dir, so changed code or regenerated
+tables never read an artifact the old ones built. Writes are atomic (tmp +
+os.replace) so concurrent callers (Spark query and oracle harness) can race
+safely; content is a pure function of the key, so a winner-takes-all replace
+is correct.
 """
 from __future__ import annotations
 
@@ -29,6 +32,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from . import package_digest
 from .datagen import TRANSCRIPT_SCHEMA, generate_transcripts
 from .kernels.extract import extract_batch
 from .kernels.geometry import nms_keep_mask
@@ -36,6 +40,7 @@ from .kernels.geometry import nms_keep_mask
 __all__ = [
     "CACHE_DIR",
     "sf_tag",
+    "cache_path",
     "ensure_transcripts",
     "ensure_golden",
     "ensure_nms_boxes",
@@ -65,16 +70,35 @@ def sf_tag(sf_dir: str) -> str:
     return os.path.basename(sf_dir.rstrip("/")) or "sf"
 
 
-def _atomic_write(table: pa.Table, path: str) -> None:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".parquet.tmp")
-    os.close(fd)
-    try:
-        pq.write_table(table, tmp)
-        os.replace(tmp, path)
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
+def cache_path(name: str, sf_dir: str, suffix: str = ".parquet") -> str:
+    """``{name}_{sf_tag}_{key}{suffix}`` under CACHE_DIR; ``key`` hashes the
+    package digest and (file, size, mtime_ns) of each table in ``sf_dir``."""
+    key = hashlib.md5(package_digest().encode())
+    for fn in sorted(os.listdir(sf_dir)):
+        if fn.endswith(".parquet"):
+            st = os.stat(os.path.join(sf_dir, fn))
+            key.update(f"{fn}:{st.st_size}:{st.st_mtime_ns};".encode())
+    return os.path.join(
+        CACHE_DIR, f"{name}_{sf_tag(sf_dir)}_{key.hexdigest()[:16]}{suffix}"
+    )
+
+
+def _cached(name: str, sf_dir: str, schema: pa.Schema, build) -> str:
+    """The cached artifact's path, first writing ``build()`` (a DataFrame)
+    there under ``schema`` if it is missing."""
+    path = cache_path(name, sf_dir)
+    if not os.path.exists(path):
+        os.makedirs(CACHE_DIR, exist_ok=True)
+        table = pa.Table.from_pandas(build(), schema=schema, preserve_index=False)
+        fd, tmp = tempfile.mkstemp(dir=CACHE_DIR, suffix=".parquet.tmp")
+        os.close(fd)
+        try:
+            pq.write_table(table, tmp)
+            os.replace(tmp, path)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+    return path
 
 
 def spans_to_json(spans: list[dict]) -> str:
@@ -87,14 +111,9 @@ def spans_to_json(spans: list[dict]) -> str:
 
 def ensure_transcripts(sf_dir: str) -> str:
     """Generate-and-cache the transcripts parquet for an sf dir."""
-    path = os.path.join(CACHE_DIR, f"transcripts_{sf_tag(sf_dir)}.parquet")
-    if not os.path.exists(path):
-        df = generate_transcripts(sf_dir)
-        _atomic_write(
-            pa.Table.from_pandas(df, schema=TRANSCRIPT_SCHEMA, preserve_index=False),
-            path,
-        )
-    return path
+    return _cached(
+        "transcripts", sf_dir, TRANSCRIPT_SCHEMA, lambda: generate_transcripts(sf_dir)
+    )
 
 
 def ensure_golden(sf_dir: str) -> str:
@@ -110,12 +129,11 @@ def ensure_bpe_golden(sf_dir: str) -> str:
     SQL-expressible columns keep their independent DuckDB mirror."""
     from .kernels.bpe import count_batch
 
-    path = os.path.join(CACHE_DIR, f"bpe_golden_{sf_tag(sf_dir)}.parquet")
-    if not os.path.exists(path):
+    def build():
         docs = pq.read_table(
             os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
         ).to_pandas()
-        out = pd.DataFrame(
+        return pd.DataFrame(
             {
                 "doc_id": docs["doc_id"],
                 "n_bpe_tokens": pd.Series(
@@ -123,11 +141,9 @@ def ensure_bpe_golden(sf_dir: str) -> str:
                 ),
             }
         )
-        schema = pa.schema([("doc_id", pa.int64()), ("n_bpe_tokens", pa.int32())])
-        _atomic_write(
-            pa.Table.from_pandas(out, schema=schema, preserve_index=False), path
-        )
-    return path
+
+    schema = pa.schema([("doc_id", pa.int64()), ("n_bpe_tokens", pa.int32())])
+    return _cached("bpe_golden", sf_dir, schema, build)
 
 
 def ensure_golden_fallback(sf_dir: str) -> str:
@@ -140,8 +156,7 @@ def ensure_golden_fallback(sf_dir: str) -> str:
 
 
 def _ensure_extraction_golden(sf_dir: str, name: str, cfg) -> str:
-    path = os.path.join(CACHE_DIR, f"{name}_{sf_tag(sf_dir)}.parquet")
-    if not os.path.exists(path):
+    def build():
         df = generate_transcripts(sf_dir)
         g = extract_batch(df) if cfg is None else extract_batch(df, cfg)
         g = g.sort_values(["conv_id", "turn_idx"], kind="mergesort").reset_index(
@@ -149,11 +164,9 @@ def _ensure_extraction_golden(sf_dir: str, name: str, cfg) -> str:
         )
         g["turn_seq"] = (g.groupby("conv_id").cumcount() + 1).astype("int32")
         g["spans_json"] = [spans_to_json(s) for s in g["spans"]]
-        g = g[[f.name for f in GOLDEN_SCHEMA]]
-        _atomic_write(
-            pa.Table.from_pandas(g, schema=GOLDEN_SCHEMA, preserve_index=False), path
-        )
-    return path
+        return g[[f.name for f in GOLDEN_SCHEMA]]
+
+    return _cached(name, sf_dir, GOLDEN_SCHEMA, build)
 
 
 # ------------------------------------------- image-record / render goldens ---
@@ -195,16 +208,15 @@ PAGE_RENDER_PA_SCHEMA = pa.schema(
 
 
 def _ensure_record_golden(sf_dir: str, name: str, payload_fn, schema: pa.Schema) -> str:
-    path = os.path.join(CACHE_DIR, f"{name}_{sf_tag(sf_dir)}.parquet")
-    if not os.path.exists(path):
+    def build():
         df = generate_transcripts(sf_dir)
         rows = []
         for conv_id, turn_idx, text in zip(df["conv_id"], df["turn_idx"], df["text"]):
             for rec in payload_fn(text):
                 rows.append({"conv_id": conv_id, "turn_idx": int(turn_idx), **rec})
-        out = pd.DataFrame(rows, columns=[f.name for f in schema])
-        _atomic_write(pa.Table.from_pandas(out, schema=schema, preserve_index=False), path)
-    return path
+        return pd.DataFrame(rows, columns=[f.name for f in schema])
+
+    return _cached(name, sf_dir, schema, build)
 
 
 def ensure_image_records_golden(sf_dir: str) -> str:
@@ -312,8 +324,7 @@ def ensure_perceptual_golden(sf_dir: str, n_groups: int = 40) -> str:
         perceptual_keep_mask,
     )
 
-    path = os.path.join(CACHE_DIR, f"perceptual_{sf_tag(sf_dir)}.parquet")
-    if not os.path.exists(path):
+    def build():
         docs = pq.read_table(
             os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
         ).to_pandas()
@@ -331,14 +342,9 @@ def ensure_perceptual_golden(sf_dir: str, n_groups: int = 40) -> str:
                 out.append(
                     (gid, row["media_id"], bool(k), mostly_white(a), mostly_black(a))
                 )
-        res = pd.DataFrame(
-            out, columns=[f.name for f in PERCEPTUAL_PA_SCHEMA]
-        )
-        _atomic_write(
-            pa.Table.from_pandas(res, schema=PERCEPTUAL_PA_SCHEMA, preserve_index=False),
-            path,
-        )
-    return path
+        return pd.DataFrame(out, columns=[f.name for f in PERCEPTUAL_PA_SCHEMA])
+
+    return _cached("perceptual", sf_dir, PERCEPTUAL_PA_SCHEMA, build)
 
 
 # ----------------------------------------------------------- NMS fixture ---
@@ -392,19 +398,12 @@ def _nms_boxes_pdf(sf_dir: str, cap: int = 600) -> pd.DataFrame:
 
 
 def ensure_nms_boxes(sf_dir: str) -> str:
-    path = os.path.join(CACHE_DIR, f"nms_boxes_{sf_tag(sf_dir)}.parquet")
-    if not os.path.exists(path):
-        df = _nms_boxes_pdf(sf_dir)
-        _atomic_write(
-            pa.Table.from_pandas(df, schema=NMS_BOX_SCHEMA, preserve_index=False), path
-        )
-    return path
+    return _cached("nms_boxes", sf_dir, NMS_BOX_SCHEMA, lambda: _nms_boxes_pdf(sf_dir))
 
 
 def ensure_nms_golden(sf_dir: str) -> str:
     """Golden NMS output: the numpy kernel run single-node per group."""
-    path = os.path.join(CACHE_DIR, f"nms_golden_{sf_tag(sf_dir)}.parquet")
-    if not os.path.exists(path):
+    def build():
         df = _nms_boxes_pdf(sf_dir)
         kept = np.zeros(len(df), dtype=bool)
         for _, idx in df.groupby(["doc_id", "page"]).groups.items():
@@ -414,13 +413,10 @@ def ensure_nms_golden(sf_dir: str) -> str:
                 (sub["px_w"] * sub["px_h"]).to_numpy(dtype=float),
             )
             kept[sub.index.to_numpy()] = mask
-        out = df.copy()
-        out["kept"] = kept
-        schema = pa.schema(list(NMS_BOX_SCHEMA) + [pa.field("kept", pa.bool_())])
-        _atomic_write(
-            pa.Table.from_pandas(out, schema=schema, preserve_index=False), path
-        )
-    return path
+        return df.assign(kept=kept)
+
+    schema = pa.schema(list(NMS_BOX_SCHEMA) + [pa.field("kept", pa.bool_())])
+    return _cached("nms_golden", sf_dir, schema, build)
 
 
 JPEG_MEDIA_PA_SCHEMA = pa.schema(
@@ -496,8 +492,7 @@ def ensure_render_perceptual_golden(sf_dir: str) -> str:
     )
     from .kernels.records import payload_render_media
 
-    path = os.path.join(CACHE_DIR, f"render_perceptual_{sf_tag(sf_dir)}.parquet")
-    if not os.path.exists(path):
+    def build():
         df = generate_transcripts(sf_dir)
         out = []
         for conv_id, turn_idx, text in zip(df["conv_id"], df["turn_idx"], df["text"]):
@@ -513,11 +508,6 @@ def ensure_render_perceptual_golden(sf_dir: str) -> str:
                     out.append(
                         (gid, r["media_ord"], bool(k), mostly_white(a), mostly_black(a))
                     )
-        res = pd.DataFrame(out, columns=[f.name for f in RENDER_PERCEPTUAL_PA_SCHEMA])
-        _atomic_write(
-            pa.Table.from_pandas(
-                res, schema=RENDER_PERCEPTUAL_PA_SCHEMA, preserve_index=False
-            ),
-            path,
-        )
-    return path
+        return pd.DataFrame(out, columns=[f.name for f in RENDER_PERCEPTUAL_PA_SCHEMA])
+
+    return _cached("render_perceptual", sf_dir, RENDER_PERCEPTUAL_PA_SCHEMA, build)

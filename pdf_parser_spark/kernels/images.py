@@ -117,22 +117,19 @@ def decode_image_status(data: bytes) -> tuple[np.ndarray, str]:
 def decode_image_ex(data: bytes) -> tuple[np.ndarray, bool]:
     """Decode image bytes to (HxWx3 uint8 array, decode_ok).
 
-    PNG payloads (signature-sniffed) decode for REAL via the from-scratch
-    reader in ``kernels.png`` — rendered-page rasters flow through the
-    F5/F6/D3 pixel filters as actual pixels. Other formats (JPEG etc.) have
-    no decoder in this container (PIL/libjpeg absent): they fall back to the
-    deterministic fake that derives (w, h) from the byte length and fills
-    pixels from the bytes themselves, so downstream features stay
-    reproducible and testable. Swap the fallback for ``PIL.Image.open``
-    when the library is present.
+    PNG and JPEG payloads (signature-sniffed) decode for REAL via the
+    from-scratch readers in ``kernels.png`` and ``kernels.jpeg`` (the DCT
+    codec — /DCTDecode is the dominant embedded-image format), so
+    rendered-page rasters flow through the F5/F6/D3 pixel filters as actual
+    pixels. Every other payload falls back to the deterministic fake that
+    derives (w, h) from the byte length and fills pixels from the bytes
+    themselves, so downstream features stay reproducible and testable.
 
     ``decode_ok`` is True only when real pixels were produced; a truncated/
     malformed payload (or a format with no decoder) returns the fabricated
     fallback with decode_ok=False so downstream queries can tell decoded
     rasters from plausible-but-fake features instead of silently mixing
-    them. PNG and baseline JPEG (the from-scratch DCT codec in
-    ``kernels.jpeg`` — /DCTDecode is the dominant embedded-image format)
-    both decode for real.
+    them (``decode_image_status`` gives the reason).
     """
     arr, status = decode_image_status(data)
     return arr, status == "ok"

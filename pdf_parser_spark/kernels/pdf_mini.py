@@ -519,10 +519,12 @@ def parse_pdf(data: bytes) -> ParsedDoc:
     dict-index raise bare ValueError/KeyError), and an untyped exception
     inside mapInPandas would fail the Spark TASK — killing the other
     thousands of rows in the batch — instead of counting one error row.
+    MemoryError is the exception: resource exhaustion is the worker's
+    failure, not the row's, so it propagates.
     """
     try:
         return _parse_pdf_inner(data)
-    except PdfParseError:
+    except (PdfParseError, MemoryError):
         raise
     except Exception as e:  # typed wrapper, never a task-killing escape
         raise PdfParseError(f"malformed pdf ({type(e).__name__}: {e})") from e

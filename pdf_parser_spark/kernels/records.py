@@ -123,27 +123,31 @@ def payload_analysis(
     ]
 
 
+def _whole_page_renders(text: str | None, cfg: ExtractConfig, dpi: int):
+    """Yield (page_no, page, renderer, raster) for every page of a
+    vector/scanned PDF payload; nothing for any other payload."""
+    doc = _parse_payload(text)
+    if doc is None:
+        return
+    stats = doc_stats(doc, cfg)
+    if stats.pdf_type not in ("vector", "scanned"):
+        return
+    # CAD check on page 0's drawing count (pdf_image_extractor.py:94-103)
+    p0 = doc.pages[0]
+    is_cad = (p0.n_lines + p0.n_rects + p0.n_curves) > cfg.cad_drawings_threshold
+    for page_no, page in enumerate(doc.pages):
+        if stats.pdf_type == "vector" and is_cad:
+            yield page_no, page, "cad", render_cad_page(page, dpi=dpi * 2)
+        else:
+            yield page_no, page, "standard", render_page(page, dpi=dpi)
+
+
 def payload_page_renders(
     text: str | None, cfg: ExtractConfig = DEFAULT_CONFIG, dpi: int = 72
 ) -> list[dict]:
     """Whole-page render records for one payload (vector/scanned kinds)."""
-    doc = _parse_payload(text)
-    if doc is None:
-        return []
-    stats = doc_stats(doc, cfg)
-    if stats.pdf_type not in ("vector", "scanned"):
-        return []
-    # CAD check on page 0's drawing count (pdf_image_extractor.py:94-103)
-    p0 = doc.pages[0]
-    is_cad = (p0.n_lines + p0.n_rects + p0.n_curves) > cfg.cad_drawings_threshold
     out = []
-    for page_no, page in enumerate(doc.pages):
-        if stats.pdf_type == "vector" and is_cad:
-            img = render_cad_page(page, dpi=dpi * 2)
-            renderer = "cad"
-        else:
-            img = render_page(page, dpi=dpi)
-            renderer = "standard"
+    for page_no, _page, renderer, img in _whole_page_renders(text, cfg, dpi):
         png = encode_png(img)
         out.append(
             {
@@ -193,20 +197,8 @@ def payload_render_media(
     from .images import resize_nearest
     from .jpeg import encode_jpeg
 
-    doc = _parse_payload(text)
-    if doc is None:
-        return []
-    stats = doc_stats(doc, cfg)
-    if stats.pdf_type not in ("vector", "scanned"):
-        return []
-    p0 = doc.pages[0]
-    is_cad = (p0.n_lines + p0.n_rects + p0.n_curves) > cfg.cad_drawings_threshold
     out = []
-    for page_no, page in enumerate(doc.pages):
-        if stats.pdf_type == "vector" and is_cad:
-            full_img = render_cad_page(page, dpi=dpi * 2)
-        else:
-            full_img = render_page(page, dpi=dpi)
+    for page_no, page, _renderer, full_img in _whole_page_renders(text, cfg, dpi):
         full = encode_png(full_img)
         stripped = encode_png(render_page(page, dpi=dpi, text_stripped=True))
         jpeg = encode_jpeg(

@@ -13,8 +13,8 @@
 Scale notes (100 TB / 1000 executors):
 - The only wide exchange is the post-kernel range repartition, which moves
   the EXTRACTED rows (much smaller than the raw payloads for html/pdf kinds;
-  the heavy payload column is dropped before the shuffle unless the caller
-  asks to keep it). The kernel runs on scan partitions directly: the 16 MB
+  the heavy payload column is dropped before the shuffle). The kernel runs
+  on scan partitions directly: the 16 MB
   split ceiling bounds per-task payload regardless of conversation skew, so
   the pre-kernel salt shuffle (which moved the ENTIRE payload corpus once —
   100 TB through the network at target scale) buys nothing extraction needs.

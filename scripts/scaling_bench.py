@@ -59,9 +59,7 @@ N_TRIALS_WIDE = int(os.environ.get("SCALE_TRIALS_WIDE", "3"))
 def input_path(mult: int) -> str:
     from pdf_parser_spark import golden as G
 
-    return os.path.join(
-        G.CACHE_DIR, f"transcripts_{G.sf_tag(SF_DIR)}_x{mult}.parquet"
-    )
+    return G.cache_path(f"transcripts_x{mult}", SF_DIR)
 
 
 def worker(cpus: int, mult: int) -> None:

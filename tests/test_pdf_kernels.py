@@ -2,6 +2,9 @@
 from __future__ import annotations
 
 import base64
+import os
+import subprocess
+import sys
 
 import pytest
 
@@ -171,6 +174,21 @@ def test_extract_one_error_paths():
     assert extract_one("JVBERi0xLj!!corrupt!!")[0] == "error"
     truncated = base64.b64encode(b"%PDF-1.4\n1 0 obj\n<< trunca").decode()
     assert extract_one(truncated)[0] == "error"
+
+
+def test_extract_one_propagates_memory_error(monkeypatch):
+    """Resource exhaustion fails the task instead of counting an error row."""
+    from pdf_parser_spark.kernels import pdf_mini
+
+    payload = base64.b64encode(build_pdf([_page_with_text([["hello"]])])).decode()
+    assert extract_one(payload)[4]
+
+    def oom(data):
+        raise MemoryError
+
+    monkeypatch.setattr(pdf_mini, "_parse_pdf_inner", oom)
+    with pytest.raises(MemoryError):
+        extract_one(payload)
 
 
 def test_extract_one_pdf_spans_cover_text_bytes():
@@ -375,3 +393,24 @@ def test_parse_pdf_never_raises_untyped():
             pass  # typed: what the kernel's error accounting needs
         except Exception as e:  # pragma: no cover
             raise AssertionError(f"tamper {i} escaped untyped: {type(e).__name__}: {e}")
+
+
+def test_kernels_import_no_spark():
+    """The golden runner and the Spark layer wrap the same kernels, so no
+    kernel module may import Spark."""
+    code = (
+        "import importlib, pkgutil, sys\n"
+        "import pdf_parser_spark.kernels as k\n"
+        "mods = [m.name for m in pkgutil.iter_modules(k.__path__, k.__name__ + '.')]\n"
+        "for m in mods:\n"
+        "    importlib.import_module(m)\n"
+        "print(len(mods), sorted(n for n in sys.modules if n.startswith('pyspark')))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo, capture_output=True, text=True, check=True,
+    )
+    n_mods, spark_mods = out.stdout.split(" ", 1)
+    assert int(n_mods) > 0
+    assert spark_mods.strip() == "[]"

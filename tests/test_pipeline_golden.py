@@ -8,9 +8,14 @@ round-trip, range repartition, window reassembly.
 """
 from __future__ import annotations
 
+import os
+import shutil
+
 import pandas as pd
 import pytest
 
+from conftest import SF_SMOKE
+from pdf_parser_spark import golden as G
 from pdf_parser_spark.kernels.extract import extract_batch
 from pdf_parser_spark.pipeline import extract_turns, reassemble, run_extraction
 
@@ -104,3 +109,25 @@ def test_salting_spreads_hot_conversations(spark, transcripts_parquet):
         assert parts > 1  # hot conversations span multiple tasks pre-reassembly
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def test_cache_key_tracks_tables_and_code(tmp_path, monkeypatch):
+    """A golden is served only to the tables and package code that built it:
+    touching a source table or changing the code names a fresh cache file."""
+    sf_dir = tmp_path / "sf0.001"
+    sf_dir.mkdir()
+    table = sf_dir / "part.parquet"
+    shutil.copy(os.path.join(SF_SMOKE, "part.parquet"), table)
+    monkeypatch.setattr(G, "CACHE_DIR", str(tmp_path / "cache"))
+
+    first = G.ensure_nms_boxes(str(sf_dir))
+    assert G.ensure_nms_boxes(str(sf_dir)) == first
+
+    st = os.stat(table)
+    os.utime(table, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    second = G.ensure_nms_boxes(str(sf_dir))
+    assert second != first and os.path.exists(second)
+
+    monkeypatch.setattr(G, "package_digest", lambda: "other code")
+    third = G.ensure_nms_boxes(str(sf_dir))
+    assert third not in (first, second) and os.path.exists(third)
