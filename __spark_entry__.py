@@ -120,8 +120,8 @@ def q_extract_reassembly_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_fallback_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fallback replan (§4.1): second extraction pass over failed rows as a
-    filter → rescue-kernel → unionByName plan; vs the single-pass golden
-    run with cfg.fallback_plain=True."""
+    filter → rescue-kernel → unionByName plan; vs the strict golden with
+    every non-empty error row rescued as plain text."""
     from pdf_parser_spark.pipeline import job_session, scan_plan
 
     p = G.ensure_transcripts(sf_dir)
@@ -857,7 +857,7 @@ def q_media_features_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrong IHDR parse, wrong unfilter — breaks the hash; this cross-checks
     the decoder, not just the Arrow plumbing."""
     rm = images_op.render_media(_transcripts_df(spark, sf_dir))
-    feats = multimodal.media_features_keyed(
+    feats = multimodal.media_features(
         rm.filter(F.col("variant") == "full").select(
             "conv_id", "turn_idx", "page", F.col("png").alias("payload")
         ),
@@ -881,7 +881,7 @@ def q_media_features_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     PIL-decoded images of any format
     (pdfplumber/pdf_image_extractor_improved.py:77-124)."""
     rm = images_op.render_media(_transcripts_df(spark, sf_dir))
-    feats = multimodal.media_features_keyed(
+    feats = multimodal.media_features(
         rm.filter(F.col("variant") == "jpeg").select(
             "conv_id", "turn_idx", "page", F.col("png").alias("payload")
         ),

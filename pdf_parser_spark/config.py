@@ -40,13 +40,6 @@ class ExtractConfig:
     html_max_link_density: float = 0.30
     html_heading_min_chars: int = 8
 
-    # fallback replan (reference: 0 extracted -> try the other method,
-    # pdf_api/core/pdf_image_extractor.py:761-821). Our analog: a payload
-    # that looks like PDF but fails decode/parse is re-extracted as plain
-    # text instead of erroring. Default off — golden fixtures pin the strict
-    # semantics; the fallback query exercises the second-pass plan shape.
-    fallback_plain: bool = False
-
 
 DEFAULT_CONFIG = ExtractConfig()
 

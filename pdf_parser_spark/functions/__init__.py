@@ -9,59 +9,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 __all__ = [
-    "bbox_area",
-    "bbox_intersection_area",
-    "bbox_overlap_ratio",
-    "boxes_overlap_pred",
-    "box_contained_pred",
     "pdf_date_parse",
     "extension_of",
-    "size_bucket",
     "zoom_factor",
     "content_name",
 ]
-
-
-def bbox_area(x0: Column, y0: Column, x1: Column, y1: Column) -> Column:
-    """(x1-x0)*(y1-y0) — ``pdf_api/core/pdf_image_extractor.py:569-578``."""
-    return (x1 - x0) * (y1 - y0)
-
-
-def bbox_intersection_area(a: dict, b: dict) -> Column:
-    """a/b are dicts of Columns x0,y0,x1,y1."""
-    x_ov = F.greatest(
-        F.lit(0.0), F.least(a["x1"], b["x1"]) - F.greatest(a["x0"], b["x0"])
-    )
-    y_ov = F.greatest(
-        F.lit(0.0), F.least(a["y1"], b["y1"]) - F.greatest(a["y0"], b["y0"])
-    )
-    return x_ov * y_ov
-
-
-def bbox_overlap_ratio(a: dict, b: dict) -> Column:
-    """intersection / min(area_a, area_b) — core J3 semantics (:554-578)."""
-    inter = bbox_intersection_area(a, b)
-    area_a = bbox_area(a["x0"], a["y0"], a["x1"], a["y1"])
-    area_b = bbox_area(b["x0"], b["y0"], b["x1"], b["y1"])
-    return F.when(
-        F.least(area_a, area_b) > 0, inter / F.least(area_a, area_b)
-    ).otherwise(F.lit(0.0))
-
-
-def boxes_overlap_pred(a: dict, b: dict) -> Column:
-    """Interval-intersection predicate, touching edges overlap (J1, :536-552)."""
-    return ~(
-        (a["x0"] > b["x1"]) | (b["x0"] > a["x1"])
-        | (a["y0"] > b["y1"]) | (b["y0"] > a["y1"])
-    )
-
-
-def box_contained_pred(a: dict, b: dict) -> Column:
-    """a fully inside b (J2, :580-592)."""
-    return (
-        (a["x0"] >= b["x0"]) & (a["y0"] >= b["y0"])
-        & (a["x1"] <= b["x1"]) & (a["y1"] <= b["y1"])
-    )
 
 
 def pdf_date_parse(col: Column) -> Column:
@@ -73,16 +25,6 @@ def pdf_date_parse(col: Column) -> Column:
 def extension_of(name: Column) -> Column:
     """lowercased final extension (F1; ``pdf_api/api/routes.py:24-28``)."""
     return F.lower(F.element_at(F.split(name, r"\."), -1))
-
-
-def size_bucket(size_bytes: Column) -> Column:
-    """KB buckets <10 / 10-100 / >100 (A7; ``pdfplumber/smart_pdf_extractor.py:391-409``)."""
-    kb = size_bytes / F.lit(1024.0)
-    return (
-        F.when(kb < 10, F.lit("small(<10KB)"))
-        .when(kb <= 100, F.lit("medium(10-100KB)"))
-        .otherwise(F.lit("large(>100KB)"))
-    )
 
 
 def zoom_factor(dpi: Column) -> Column:

@@ -33,9 +33,26 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from . import package_digest
+from .config import KIND_ERROR, KIND_PLAIN, ExtractConfig
 from .datagen import TRANSCRIPT_SCHEMA, generate_transcripts
 from .kernels.extract import extract_batch
 from .kernels.geometry import nms_keep_mask
+from .kernels.images import (
+    decode_image_status,
+    mostly_black,
+    mostly_white,
+    perceptual_keep_mask,
+)
+from .kernels.records import (
+    IMAGE_RECORD_SCHEMA,
+    JPEG_MEDIA_SIZE,
+    PAGE_RENDER_SCHEMA,
+    explode_records,
+    payload_analysis,
+    payload_image_records,
+    payload_page_renders,
+    payload_render_media,
+)
 
 __all__ = [
     "CACHE_DIR",
@@ -118,7 +135,7 @@ def ensure_transcripts(sf_dir: str) -> str:
 
 def ensure_golden(sf_dir: str) -> str:
     """Run the single-node golden extractor; cache the result parquet."""
-    return _ensure_extraction_golden(sf_dir, "golden", None)
+    return _ensure_extraction_golden(sf_dir, "golden", rescue=False)
 
 
 def ensure_bpe_golden(sf_dir: str) -> str:
@@ -147,18 +164,25 @@ def ensure_bpe_golden(sf_dir: str) -> str:
 
 
 def ensure_golden_fallback(sf_dir: str) -> str:
-    """Golden with the fallback replan enabled (cfg.fallback_plain=True)."""
-    from .config import ExtractConfig
-
-    return _ensure_extraction_golden(
-        sf_dir, "golden_fb", ExtractConfig(fallback_plain=True)
-    )
+    """The strict golden with ``pipeline.extract_with_fallback``'s rescue
+    applied: every error row with a non-empty payload becomes plain text
+    (identity text, one full-range span, one block)."""
+    return _ensure_extraction_golden(sf_dir, "golden_fb", rescue=True)
 
 
-def _ensure_extraction_golden(sf_dir: str, name: str, cfg) -> str:
+def _ensure_extraction_golden(sf_dir: str, name: str, rescue: bool) -> str:
     def build():
-        df = generate_transcripts(sf_dir)
-        g = extract_batch(df) if cfg is None else extract_batch(df, cfg)
+        g = extract_batch(generate_transcripts(sf_dir))
+        if rescue:
+            m = (g["payload_kind"] == KIND_ERROR) & (g["text"].str.len() > 0)
+            g.loc[m, "payload_kind"] = KIND_PLAIN
+            g.loc[m, "extracted_text"] = g.loc[m, "text"]
+            g["spans"] = [
+                [{"start": 0, "end": len(t)}] if rescued else spans
+                for rescued, t, spans in zip(m, g["text"], g["spans"])
+            ]
+            g.loc[m, "n_blocks"] = 1
+            g.loc[m, "extraction_ok"] = True
         g = g.sort_values(["conv_id", "turn_idx"], kind="mergesort").reset_index(
             drop=True
         )
@@ -171,67 +195,22 @@ def _ensure_extraction_golden(sf_dir: str, name: str, cfg) -> str:
 
 # ------------------------------------------- image-record / render goldens ---
 
-IMAGE_RECORD_PA_SCHEMA = pa.schema(
-    [
-        ("conv_id", pa.string()),
-        ("turn_idx", pa.int32()),
-        ("page", pa.int32()),
-        ("img_idx", pa.int32()),
-        ("x0", pa.float64()),
-        ("y0", pa.float64()),
-        ("x1", pa.float64()),
-        ("y1", pa.float64()),
-        ("px_w", pa.int32()),
-        ("px_h", pa.int32()),
-        ("content_md5", pa.string()),
-        ("size_bytes", pa.int32()),
-        ("format", pa.string()),
-        ("color_mode", pa.string()),
-        ("kept", pa.bool_()),
-        ("drop_reason", pa.string()),
-        ("crop_md5", pa.string()),
-    ]
-)
-
-PAGE_RENDER_PA_SCHEMA = pa.schema(
-    [
-        ("conv_id", pa.string()),
-        ("turn_idx", pa.int32()),
-        ("page", pa.int32()),
-        ("renderer", pa.string()),
-        ("px_w", pa.int32()),
-        ("px_h", pa.int32()),
-        ("png_md5", pa.string()),
-        ("png_bytes", pa.int32()),
-    ]
-)
-
-
 def _ensure_record_golden(sf_dir: str, name: str, payload_fn, schema: pa.Schema) -> str:
     def build():
-        df = generate_transcripts(sf_dir)
-        rows = []
-        for conv_id, turn_idx, text in zip(df["conv_id"], df["turn_idx"], df["text"]):
-            for rec in payload_fn(text):
-                rows.append({"conv_id": conv_id, "turn_idx": int(turn_idx), **rec})
-        return pd.DataFrame(rows, columns=[f.name for f in schema])
+        return explode_records(generate_transcripts(sf_dir), payload_fn, schema.names)
 
     return _cached(name, sf_dir, schema, build)
 
 
 def ensure_image_records_golden(sf_dir: str) -> str:
-    from .kernels.records import payload_image_records
-
     return _ensure_record_golden(
-        sf_dir, "image_records", payload_image_records, IMAGE_RECORD_PA_SCHEMA
+        sf_dir, "image_records", payload_image_records, IMAGE_RECORD_SCHEMA
     )
 
 
 def ensure_page_renders_golden(sf_dir: str) -> str:
-    from .kernels.records import payload_page_renders
-
     return _ensure_record_golden(
-        sf_dir, "page_renders", payload_page_renders, PAGE_RENDER_PA_SCHEMA
+        sf_dir, "page_renders", payload_page_renders, PAGE_RENDER_SCHEMA
     )
 
 
@@ -239,15 +218,12 @@ def ensure_forced_renders_golden(sf_dir: str) -> str:
     """Golden for the force_mode override: force_kind='vector' routes every
     parseable PDF through the whole-page render dispatch regardless of its
     classified subtype (pdf_image_extractor.py:67-71)."""
-    from .config import ExtractConfig
-    from .kernels.records import payload_page_renders
-
     cfg = ExtractConfig(force_kind="vector")
     return _ensure_record_golden(
         sf_dir,
         "page_renders_forced",
         lambda t: payload_page_renders(t, cfg),
-        PAGE_RENDER_PA_SCHEMA,
+        PAGE_RENDER_SCHEMA,
     )
 
 
@@ -275,8 +251,6 @@ def ensure_analysis_golden(sf_dir: str) -> str:
     the REAL parsed /Info CreationDate, computed here with python strptime —
     fully independent of the Spark side's to_timestamp/date_format path."""
     import datetime as _dt
-
-    from .kernels.records import payload_analysis
 
     def fn(text):
         out = []
@@ -317,13 +291,6 @@ PERCEPTUAL_PA_SCHEMA = pa.schema(
 def ensure_perceptual_golden(sf_dir: str, n_groups: int = 40) -> str:
     """Golden for D3 perceptual dedup: documents + exact copies (media_id
     +1e6) grouped by doc_id % n_groups, single-node kernel run per group."""
-    from .kernels.images import (
-        decode_image,
-        mostly_black,
-        mostly_white,
-        perceptual_keep_mask,
-    )
-
     def build():
         docs = pq.read_table(
             os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
@@ -336,7 +303,7 @@ def ensure_perceptual_golden(sf_dir: str, n_groups: int = 40) -> str:
         out = []
         for gid, g in df.groupby("group_id"):
             g = g.sort_values("media_id", kind="mergesort")
-            arrays = [decode_image(t.encode()) for t in g["text"]]
+            arrays = [decode_image_status(t.encode())[0] for t in g["text"]]
             keep = perceptual_keep_mask(arrays)
             for (_, row), k, a in zip(g.iterrows(), keep, arrays):
                 out.append(
@@ -440,10 +407,6 @@ def ensure_jpeg_media_golden(sf_dir: str) -> str:
     encoder's target — the Spark side reports what the from-scratch baseline
     JPEG DECODER parsed out of SOF0 and assembled from the scan, so a
     decoder bug (header parse, huffman, MCU layout) breaks the hash."""
-    import hashlib
-
-    from .kernels.images import decode_image_ex
-    from .kernels.records import JPEG_MEDIA_SIZE, payload_render_media
 
     def fn(text):
         out = []
@@ -451,8 +414,8 @@ def ensure_jpeg_media_golden(sf_dir: str) -> str:
             if rec["variant"] != "jpeg":
                 continue
             b = rec["png"]
-            arr, ok = decode_image_ex(b)
-            if not ok:
+            arr, status = decode_image_status(b)
+            if status != "ok":
                 raise RuntimeError("golden jpeg failed to decode")  # hard stop
             out.append(
                 {
@@ -484,30 +447,22 @@ def ensure_render_perceptual_golden(sf_dir: str) -> str:
     """Golden for the REAL-pixel D3 path: per page-render group
     (full/stripped/dup PNGs), the perceptual keep mask + F5/F6 flags computed
     single-node over pixels decoded by the from-scratch PNG reader."""
-    from .kernels.images import (
-        decode_image,
-        mostly_black,
-        mostly_white,
-        perceptual_keep_mask,
-    )
-    from .kernels.records import payload_render_media
 
     def build():
-        df = generate_transcripts(sf_dir)
+        media = explode_records(
+            generate_transcripts(sf_dir),
+            payload_render_media,
+            ["conv_id", "turn_idx", "page", "media_ord", "png"],
+        )
         out = []
-        for conv_id, turn_idx, text in zip(df["conv_id"], df["turn_idx"], df["text"]):
-            pages: dict[int, list[dict]] = {}
-            for rec in payload_render_media(text):
-                pages.setdefault(rec["page"], []).append(rec)
-            for page_no, recs in sorted(pages.items()):
-                recs = sorted(recs, key=lambda r: r["media_ord"])
-                arrays = [decode_image(r["png"]) for r in recs]
-                keep = perceptual_keep_mask(arrays)
-                gid = f"{conv_id}|{int(turn_idx)}|{page_no}"
-                for r, k, a in zip(recs, keep, arrays):
-                    out.append(
-                        (gid, r["media_ord"], bool(k), mostly_white(a), mostly_black(a))
-                    )
+        keys = ["conv_id", "turn_idx", "page"]
+        for (conv_id, turn_idx, page_no), g in media.groupby(keys, sort=False):
+            g = g.sort_values("media_ord", kind="mergesort")
+            arrays = [decode_image_status(b)[0] for b in g["png"]]
+            keep = perceptual_keep_mask(arrays)
+            gid = f"{conv_id}|{turn_idx}|{page_no}"
+            for o, k, a in zip(g["media_ord"], keep, arrays):
+                out.append((gid, o, bool(k), mostly_white(a), mostly_black(a)))
         return pd.DataFrame(out, columns=[f.name for f in RENDER_PERCEPTUAL_PA_SCHEMA])
 
     return _cached("render_perceptual", sf_dir, RENDER_PERCEPTUAL_PA_SCHEMA, build)

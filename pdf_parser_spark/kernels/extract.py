@@ -27,7 +27,6 @@ is ambiguous/buggy in places — SURVEY.md §7.3):
 from __future__ import annotations
 
 import base64
-import binascii
 
 import pandas as pd
 
@@ -45,11 +44,9 @@ from ..config import (
 from .html_extract import extract_html
 from .layout import byte_ranges_to_base64_spans, join_pages, page_text
 from .pdf_classify import sample_stats
-from .pdf_mini import PdfParseError, parse_pdf
+from .pdf_mini import ParsedDoc, parse_pdf
 
-__all__ = ["sniff_kind", "extract_one", "extract_batch", "OUTPUT_COLUMNS"]
-
-OUTPUT_COLUMNS = ["payload_kind", "extracted_text", "spans", "n_blocks", "extraction_ok"]
+__all__ = ["sniff_kind", "open_pdf", "extract_one", "extract_batch"]
 
 _PDF_B64_PREFIX = "JVBERi0"  # base64 of b"%PDF-"
 
@@ -76,17 +73,20 @@ def sniff_kind(text: str | None) -> str:
     return KIND_PLAIN
 
 
+def open_pdf(text: str | None) -> ParsedDoc | None:
+    """The parsed document of a base64 PDF payload; None when the payload
+    does not sniff as PDF, is not valid base64, or does not parse.
+    ``MemoryError`` propagates (see ``parse_pdf``)."""
+    if sniff_kind(text) != "pdf":
+        return None
+    try:
+        return parse_pdf(base64.b64decode(text.strip(), validate=True))
+    except ValueError:  # binascii.Error and PdfParseError are ValueErrors
+        return None
+
+
 def _spans_to_dicts(spans: list[tuple[int, int]]) -> list[dict]:
     return [{"start": int(s), "end": int(e)} for s, e in spans]
-
-
-def _pdf_failure(text: str, cfg: ExtractConfig):
-    """Undecodable/unparseable PDF payload: error, or — with the fallback
-    replan enabled (reference ``pdf_image_extractor.py:761-821``: zero
-    results → try the other extraction method) — plain-text identity."""
-    if cfg.fallback_plain and text:
-        return KIND_PLAIN, text, _spans_to_dicts([(0, len(text))]), 1, True
-    return KIND_ERROR, "", [], 0, False
 
 
 def extract_one(
@@ -101,16 +101,9 @@ def extract_one(
     if kind == KIND_HTML:
         out, spans, n_blocks = extract_html(text, cfg)
         return KIND_HTML, out, _spans_to_dicts(spans), n_blocks, True
-    # pdf branch
-    payload = text.strip()
-    try:
-        raw = base64.b64decode(payload, validate=True)
-    except (binascii.Error, ValueError):
-        return _pdf_failure(text, cfg)
-    try:
-        doc = parse_pdf(raw)
-    except PdfParseError:
-        return _pdf_failure(text, cfg)
+    doc = open_pdf(text)
+    if doc is None:
+        return KIND_ERROR, "", [], 0, False
     # each page is laid out once: the classification sample first, the rest
     # only if the doc has text to extract
     pages = [page_text(p, cfg) for p in doc.pages[: cfg.classify_page_cap]]
@@ -124,7 +117,7 @@ def extract_one(
     lead = len(text) - len(text.lstrip())
     spans = [
         (s + lead, e + lead)
-        for s, e in byte_ranges_to_base64_spans(byte_ranges, len(payload))
+        for s, e in byte_ranges_to_base64_spans(byte_ranges, len(text.strip()))
     ]
     return kind, out, _spans_to_dicts(spans), n_blocks, True
 
@@ -132,7 +125,7 @@ def extract_one(
 def extract_batch(
     pdf: pd.DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
 ) -> pd.DataFrame:
-    """Vectorized-batch extraction: adds OUTPUT_COLUMNS, passes others through.
+    """Vectorized-batch extraction: adds the output columns, passes others through.
 
     The Python loop here iterates WITHIN an Arrow batch (the reference's
     per-file loops become per-row kernel work inside a vectorized batch —

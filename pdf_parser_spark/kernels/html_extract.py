@@ -113,8 +113,10 @@ def _entity_char(m: re.Match) -> str:
     cp = int(dec, 10) if dec is not None else int(hexa, 16)
     if cp in _C1_WINDOWS_1252:
         return _C1_WINDOWS_1252[cp]
-    if cp == 0 or 0xD800 <= cp <= 0xDFFF or cp > 0x10FFFF:
+    if cp > 0x10FFFF or 0xD800 <= cp <= 0xDFFF:
         return m.group(0)  # spec says U+FFFD; literal is safer for spans
+    if cp < 0x20 and cp not in (0x09, 0x0A):
+        return m.group(0)  # C0 controls (e.g. the \x1f digest separator)
     return chr(cp)
 
 

@@ -31,11 +31,8 @@ __all__ = [
     "extract_image_records",
     "mostly_white",
     "mostly_black",
-    "decode_image",
-    "decode_image_ex",
     "decode_image_status",
     "resize_nearest",
-    "perceptual_similarity",
     "perceptual_keep_mask",
 ]
 
@@ -89,7 +86,8 @@ def decode_image_status(data: bytes) -> tuple[np.ndarray, str]:
     Adam7-interlaced PNG, progressive (SOF2) JPEG, and non-interleaved
     multi-scan baseline JPEG all decode for REAL (kernels/png.py,
     kernels/jpeg.py); every non-"ok" status returns the deterministic
-    fabricated fallback so downstream features stay reproducible.
+    fabricated fallback — (w, h) from the byte length, pixels tiled from the
+    bytes — so downstream features stay reproducible.
     """
     from .jpeg import JpegError, decode_jpeg, is_jpeg
     from .png import PngError, decode_png, is_png
@@ -114,33 +112,6 @@ def decode_image_status(data: bytes) -> tuple[np.ndarray, str]:
     return arr.reshape(h, w, 3), status
 
 
-def decode_image_ex(data: bytes) -> tuple[np.ndarray, bool]:
-    """Decode image bytes to (HxWx3 uint8 array, decode_ok).
-
-    PNG and JPEG payloads (signature-sniffed) decode for REAL via the
-    from-scratch readers in ``kernels.png`` and ``kernels.jpeg`` (the DCT
-    codec — /DCTDecode is the dominant embedded-image format), so
-    rendered-page rasters flow through the F5/F6/D3 pixel filters as actual
-    pixels. Every other payload falls back to the deterministic fake that
-    derives (w, h) from the byte length and fills pixels from the bytes
-    themselves, so downstream features stay reproducible and testable.
-
-    ``decode_ok`` is True only when real pixels were produced; a truncated/
-    malformed payload (or a format with no decoder) returns the fabricated
-    fallback with decode_ok=False so downstream queries can tell decoded
-    rasters from plausible-but-fake features instead of silently mixing
-    them (``decode_image_status`` gives the reason).
-    """
-    arr, status = decode_image_status(data)
-    return arr, status == "ok"
-
-
-def decode_image(data: bytes) -> np.ndarray:
-    """``decode_image_ex`` without the flag (compat shim for callers that
-    only need pixels)."""
-    return decode_image_ex(data)[0]
-
-
 def resize_nearest(rgb: np.ndarray, size: int = 32) -> np.ndarray:
     """Deterministic nearest-neighbor resize to size x size (LANCZOS
     stand-in; PIL absent — ``pdf_image_extractor_improved.py:37`` resizes
@@ -151,22 +122,14 @@ def resize_nearest(rgb: np.ndarray, size: int = 32) -> np.ndarray:
     return rgb[ys][:, xs]
 
 
-def perceptual_similarity(a: np.ndarray, b: np.ndarray, size: int = 32) -> float:
-    """D3 similarity: 1 - (fraction of differing pixels) after resize —
-    the numpy analog of ``ImageChops.difference`` + nonzero count
-    (``pdfplumber/pdf_image_extractor_improved.py:22-59``)."""
-    ra = resize_nearest(a, size).astype(np.int16)
-    rb = resize_nearest(b, size).astype(np.int16)
-    diff = (np.abs(ra - rb) > 0).any(axis=-1)
-    return 1.0 - float(diff.mean())
-
-
 def perceptual_keep_mask(
     arrays: list[np.ndarray], sim_threshold: float = 0.9, size: int = 32
 ) -> np.ndarray:
     """Sequential first-wins perceptual dedup within one group: image i is
     dropped if similar (>= threshold) to ANY earlier kept image — matching
-    the reference's loop order (``pdf_image_extractor_improved.py:261-270``)."""
+    the reference's loop order (``pdf_image_extractor_improved.py:261-270``).
+    Similarity is 1 - (fraction of differing pixels) after resize, the numpy
+    analog of ``ImageChops.difference`` + nonzero count (``:22-59``)."""
     n = len(arrays)
     keep = np.ones(n, dtype=bool)
     small = [resize_nearest(a, size).astype(np.int16) for a in arrays]

@@ -36,7 +36,6 @@ PAGE_W = 612.0
 PAGE_H = 792.0
 
 _ESC = {"\\": "\\\\", "(": "\\(", ")": "\\)"}
-_UNESC = {"\\\\": "\\", "\\(": "(", "\\)": ")"}
 
 
 # ---------------------------------------------------------------- writer ---

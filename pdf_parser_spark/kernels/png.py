@@ -3,7 +3,7 @@ minimal encoder in ``render.py:encode_png``.
 
 Closes the round-1 gap where the mostly-white/black and perceptual operators
 (F5/F6/D3 — ``pdfplumber/pdf_image_extractor_improved.py:77-124``) had only
-ever seen fabricated pixels: ``decode_image`` now really decodes any PNG
+ever seen fabricated pixels: ``images.decode_image_status`` decodes any PNG
 payload (signature-sniffed), so those filters run on actual rendered-page
 rasters. PIL is absent in this container; this implements the subset a
 correct PNG reader needs for real-corpus files:

@@ -15,35 +15,76 @@ Dispatch parity with ``extractor.extract_images``
 """
 from __future__ import annotations
 
-import base64
-import binascii
 import hashlib
 
+import pandas as pd
+import pyarrow as pa
+
 from ..config import DEFAULT_CONFIG, ExtractConfig
+from .extract import open_pdf
 from .images import extract_image_records
 from .pdf_classify import doc_stats
-from .pdf_mini import ParsedDoc, PdfParseError, parse_pdf
 from .render import encode_png, render_cad_page, render_page, render_region
 
 __all__ = [
+    "IMAGE_RECORD_SCHEMA",
+    "PAGE_RENDER_SCHEMA",
+    "explode_records",
     "payload_image_records",
     "payload_page_renders",
     "payload_analysis",
     "payload_render_media",
 ]
 
+# the row formats of payload_image_records / payload_page_renders, keyed by
+# turn; the goldens write them as-is and the Spark operators derive theirs
+IMAGE_RECORD_SCHEMA = pa.schema(
+    [
+        ("conv_id", pa.string()),
+        ("turn_idx", pa.int32()),
+        ("page", pa.int32()),
+        ("img_idx", pa.int32()),
+        ("x0", pa.float64()),
+        ("y0", pa.float64()),
+        ("x1", pa.float64()),
+        ("y1", pa.float64()),
+        ("px_w", pa.int32()),
+        ("px_h", pa.int32()),
+        ("content_md5", pa.string()),
+        ("size_bytes", pa.int32()),
+        ("format", pa.string()),
+        ("color_mode", pa.string()),
+        ("kept", pa.bool_()),
+        ("drop_reason", pa.string()),
+        ("crop_md5", pa.string()),
+    ]
+)
 
-def _parse_payload(text: str | None) -> ParsedDoc | None:
-    if not text:
-        return None
-    payload = text.strip()
-    if not payload.startswith("JVBERi0"):
-        return None
-    try:
-        raw = base64.b64decode(payload, validate=True)
-        return parse_pdf(raw)
-    except (binascii.Error, ValueError, PdfParseError):
-        return None
+PAGE_RENDER_SCHEMA = pa.schema(
+    [
+        ("conv_id", pa.string()),
+        ("turn_idx", pa.int32()),
+        ("page", pa.int32()),
+        ("renderer", pa.string()),
+        ("px_w", pa.int32()),
+        ("px_h", pa.int32()),
+        ("png_md5", pa.string()),
+        ("png_bytes", pa.int32()),
+    ]
+)
+
+
+def explode_records(turns: pd.DataFrame, payload_fn, columns: list[str]) -> pd.DataFrame:
+    """One row per record ``payload_fn(text)`` returns for each turn of
+    ``turns`` (conv_id, turn_idx, text), prefixed by the turn's key."""
+    rows = [
+        {"conv_id": conv_id, "turn_idx": int(turn_idx), **rec}
+        for conv_id, turn_idx, text in zip(
+            turns["conv_id"], turns["turn_idx"], turns["text"].astype(object)
+        )
+        for rec in payload_fn(text if isinstance(text, str) else None)
+    ]
+    return pd.DataFrame(rows, columns=columns)
 
 
 def payload_image_records(
@@ -55,7 +96,7 @@ def payload_image_records(
     (content-addressed like ``img{i}_{md5[:8]}.png``,
     ``pdfplumber/smart_pdf_extractor.py:261``).
     """
-    doc = _parse_payload(text)
+    doc = open_pdf(text)
     if doc is None:
         return []
     stats = doc_stats(doc, cfg)
@@ -94,7 +135,7 @@ def payload_analysis(
     array of structs, capped at the first 3 pages like the reference's
     sample_pages ``:66``) plus document totals and the PDFType. [] for
     non-PDF payloads (the analyzer 400s on them, ``routes.py:56-59``)."""
-    doc = _parse_payload(text)
+    doc = open_pdf(text)
     if doc is None:
         return []
     stats = doc_stats(doc, cfg)
@@ -126,7 +167,7 @@ def payload_analysis(
 def _whole_page_renders(text: str | None, cfg: ExtractConfig, dpi: int):
     """Yield (page_no, page, renderer, raster) for every page of a
     vector/scanned PDF payload; nothing for any other payload."""
-    doc = _parse_payload(text)
+    doc = open_pdf(text)
     if doc is None:
         return
     stats = doc_stats(doc, cfg)

@@ -32,7 +32,6 @@ __all__ = ["render_page", "render_region", "render_cad_page", "encode_png"]
 
 _TEXT_GRAY = 40        # char-box ink
 _STROKE_GRAY = 90      # vector-stroke ink
-_IMG_BASE = 128        # image placements tile their own bytes
 
 
 def _canvas(w: int, h: int) -> np.ndarray:

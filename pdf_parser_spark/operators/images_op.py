@@ -18,9 +18,17 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..config import DEFAULT_CONFIG, ExtractConfig
-from ..kernels.records import payload_image_records, payload_page_renders
+from ..kernels import records
+from ..kernels.records import (
+    explode_records,
+    payload_analysis,
+    payload_image_records,
+    payload_page_renders,
+    payload_render_media,
+)
 
 __all__ = [
     "IMAGE_RECORD_SCHEMA",
@@ -31,40 +39,8 @@ __all__ = [
     "analysis_records",
 ]
 
-IMAGE_RECORD_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("page", T.IntegerType(), False),
-        T.StructField("img_idx", T.IntegerType(), False),
-        T.StructField("x0", T.DoubleType(), False),
-        T.StructField("y0", T.DoubleType(), False),
-        T.StructField("x1", T.DoubleType(), False),
-        T.StructField("y1", T.DoubleType(), False),
-        T.StructField("px_w", T.IntegerType(), False),
-        T.StructField("px_h", T.IntegerType(), False),
-        T.StructField("content_md5", T.StringType(), False),
-        T.StructField("size_bytes", T.IntegerType(), False),
-        T.StructField("format", T.StringType(), False),
-        T.StructField("color_mode", T.StringType(), False),
-        T.StructField("kept", T.BooleanType(), False),
-        T.StructField("drop_reason", T.StringType(), False),
-        T.StructField("crop_md5", T.StringType(), False),
-    ]
-)
-
-PAGE_RENDER_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("page", T.IntegerType(), False),
-        T.StructField("renderer", T.StringType(), False),
-        T.StructField("px_w", T.IntegerType(), False),
-        T.StructField("px_h", T.IntegerType(), False),
-        T.StructField("png_md5", T.StringType(), False),
-        T.StructField("png_bytes", T.IntegerType(), False),
-    ]
-)
+IMAGE_RECORD_SCHEMA = from_arrow_schema(records.IMAGE_RECORD_SCHEMA)
+PAGE_RENDER_SCHEMA = from_arrow_schema(records.PAGE_RENDER_SCHEMA)
 
 ANALYSIS_SCHEMA = T.StructType(
     [
@@ -99,25 +75,20 @@ ANALYSIS_SCHEMA = T.StructType(
     ]
 )
 
-_IR_COLS = [f.name for f in IMAGE_RECORD_SCHEMA.fields]
-_PR_COLS = [f.name for f in PAGE_RENDER_SCHEMA.fields]
-_AN_COLS = [f.name for f in ANALYSIS_SCHEMA.fields]
 
+def _explode(transcripts: DataFrame, payload_fn, schema: T.StructType) -> DataFrame:
+    """One mapInPandas crossing over (conv_id, turn_idx, text): each batch
+    becomes ``explode_records`` of its turns."""
+    from .. import ship_package
 
-def _explode_kernel(payload_fn, out_cols):
+    ship_package(transcripts.sparkSession)
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"].astype(object)
-            ):
-                for rec in payload_fn(text if isinstance(text, str) else None):
-                    rows.append(
-                        {"conv_id": conv_id, "turn_idx": int(turn_idx), **rec}
-                    )
-            yield pd.DataFrame(rows, columns=out_cols)
+            yield explode_records(pdf, payload_fn, schema.names)
 
-    return kernel
+    df = transcripts.select("conv_id", "turn_idx", "text")
+    return df.mapInPandas(kernel, schema=schema)
 
 
 def image_records(
@@ -126,23 +97,19 @@ def image_records(
     # no pre-shuffle: scan splits are payload-size-uniform (16 MB splits,
     # session_defaults), so shuffling the heavy text column would cost more
     # than it balances; the tiny record rows shuffle freely downstream
-    from .. import ship_package
-
-    ship_package(transcripts.sparkSession)
-    df = transcripts.select("conv_id", "turn_idx", "text")
-    fn = lambda t: payload_image_records(t, cfg, crop_dpi)  # noqa: E731
-    return df.mapInPandas(_explode_kernel(fn, _IR_COLS), schema=IMAGE_RECORD_SCHEMA)
+    return _explode(
+        transcripts,
+        lambda t: payload_image_records(t, cfg, crop_dpi),
+        IMAGE_RECORD_SCHEMA,
+    )
 
 
 def page_renders(
     transcripts: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG, dpi: int = 72
 ) -> DataFrame:
-    from .. import ship_package
-
-    ship_package(transcripts.sparkSession)
-    df = transcripts.select("conv_id", "turn_idx", "text")
-    fn = lambda t: payload_page_renders(t, cfg, dpi)  # noqa: E731
-    return df.mapInPandas(_explode_kernel(fn, _PR_COLS), schema=PAGE_RENDER_SCHEMA)
+    return _explode(
+        transcripts, lambda t: payload_page_renders(t, cfg, dpi), PAGE_RENDER_SCHEMA
+    )
 
 
 def analysis_records(
@@ -150,13 +117,7 @@ def analysis_records(
 ) -> DataFrame:
     """The analyzer envelope (``/api/analyze``) as a DataFrame: one row per
     PDF turn with the nested ArrayType(StructType) ``pages_info`` column."""
-    from .. import ship_package
-    from ..kernels.records import payload_analysis
-
-    ship_package(transcripts.sparkSession)
-    df = transcripts.select("conv_id", "turn_idx", "text")
-    fn = lambda t: payload_analysis(t, cfg)  # noqa: E731
-    return df.mapInPandas(_explode_kernel(fn, _AN_COLS), schema=ANALYSIS_SCHEMA)
+    return _explode(transcripts, lambda t: payload_analysis(t, cfg), ANALYSIS_SCHEMA)
 
 
 RENDER_MEDIA_SCHEMA = T.StructType(
@@ -170,18 +131,12 @@ RENDER_MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-_RM_COLS = [f.name for f in RENDER_MEDIA_SCHEMA.fields]
-
 
 def render_media(
     transcripts: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG, dpi: int = 72
 ) -> DataFrame:
     """Page renders as a binary media table (conv_id, turn_idx, page,
     media_ord, variant, png) — real PNG payloads for the pixel operators."""
-    from .. import ship_package
-    from ..kernels.records import payload_render_media
-
-    ship_package(transcripts.sparkSession)
-    df = transcripts.select("conv_id", "turn_idx", "text")
-    fn = lambda t: payload_render_media(t, cfg, dpi)  # noqa: E731
-    return df.mapInPandas(_explode_kernel(fn, _RM_COLS), schema=RENDER_MEDIA_SCHEMA)
+    return _explode(
+        transcripts, lambda t: payload_render_media(t, cfg, dpi), RENDER_MEDIA_SCHEMA
+    )

@@ -1,10 +1,11 @@
 """Multimodal binary-column plumbing: opaque payload bytes + typed metadata.
 
 A 100 TB training-data table carries image/audio/video as ``binary`` columns.
-The real decode libraries (PIL/ffmpeg) are not in this container, so the
-decode step is a deterministic fake behind ``decode_image`` (clearly marked);
-everything Spark-side — schema, Arrow batching via ``mapInPandas``, feature
-extraction shape, partitioning — is real and tested.
+Decoding goes through ``kernels.images.decode_image_status``: PNG and JPEG
+payloads decode for real (from-scratch readers, no PIL/ffmpeg), anything
+else gets deterministic fabricated pixels and a ``decode_status`` that says
+so. Everything Spark-side — schema, Arrow batching via ``mapInPandas``,
+feature extraction shape, partitioning — is real and tested.
 
 The reference's analog is its embedded-image byte handling
 (``PyMuPDF/pdf_image_extractor.py:143-166`` extract_image → bytes + ext;
@@ -13,43 +14,21 @@ md5 naming ``pdfplumber/smart_pdf_extractor.py:161``).
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..kernels.images import decode_image_status
+
 __all__ = [
-    "MEDIA_FEATURE_SCHEMA",
     "as_media_table",
     "media_features",
-    "decode_image",
     "perceptual_dedup",
 ]
-
-MEDIA_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("n_bytes", T.IntegerType(), False),
-        T.StructField("content_md5", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("mean_luma", T.DoubleType(), False),
-        T.StructField("decode_ok", T.BooleanType(), False),
-        T.StructField("decode_status", T.StringType(), False),
-    ]
-)
-
-# decode_image lives in the pure-kernel layer (golden runner needs it
-# without Spark imports); re-exported here for operator users
-from ..kernels.images import (  # noqa: E402,F401
-    decode_image,
-    decode_image_ex,
-    decode_image_status,
-)
 
 
 def as_media_table(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -61,29 +40,45 @@ def as_media_table(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def media_features(media: DataFrame, batch_size_hint: int = 256) -> DataFrame:
-    """Arrow-batched feature extraction over the binary payload column.
+def media_features(
+    media: DataFrame, key_cols: Sequence[str] = ("media_id",)
+) -> DataFrame:
+    """Arrow-batched feature extraction over the binary ``payload`` column,
+    keyed by the passthrough ``key_cols``.
 
     One ``mapInPandas`` crossing; the per-element numpy work stays inside the
     batch. Cheap scalar features (n_bytes, md5) intentionally ALSO exist as
     JVM expressions (F.octet_length / F.md5) — the oracle checks the
     Python-kernel output against the SQL-predicted values, proving the
-    plumbing is faithful.
+    plumbing is faithful. width/height come from the payload itself (real
+    decode for PNG/JPEG bytes), so joining them against independently
+    recorded dimensions cross-checks the decoder, not just the plumbing.
     """
-
     from .. import ship_package
 
     ship_package(media.sparkSession)
+    key_cols = list(key_cols)
+    schema = T.StructType(
+        [media.schema[c] for c in key_cols]
+        + [
+            T.StructField("n_bytes", T.IntegerType(), False),
+            T.StructField("content_md5", T.StringType(), False),
+            T.StructField("width", T.IntegerType(), False),
+            T.StructField("height", T.IntegerType(), False),
+            T.StructField("mean_luma", T.DoubleType(), False),
+            T.StructField("decode_ok", T.BooleanType(), False),
+            T.StructField("decode_status", T.StringType(), False),
+        ]
+    )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for mid, data in zip(pdf["media_id"], pdf["payload"]):
+            feats = []
+            for data in pdf["payload"]:
                 b = bytes(data) if data is not None else b""
                 arr, status = decode_image_status(b)
-                out.append(
+                feats.append(
                     (
-                        int(mid),
                         len(b),
                         hashlib.md5(b).hexdigest(),
                         int(arr.shape[1]),
@@ -93,11 +88,11 @@ def media_features(media: DataFrame, batch_size_hint: int = 256) -> DataFrame:
                         status,
                     )
                 )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in MEDIA_FEATURE_SCHEMA.fields]
-            )
+            out = pdf[key_cols].reset_index(drop=True)
+            fdf = pd.DataFrame(feats, columns=schema.names[len(key_cols):])
+            yield pd.concat([out, fdf], axis=1)
 
-    return media.mapInPandas(kernel, schema=MEDIA_FEATURE_SCHEMA)
+    return media.mapInPandas(kernel, schema=schema)
 
 
 def perceptual_dedup(
@@ -132,7 +127,8 @@ def perceptual_dedup(
     def _group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("media_id", kind="mergesort").reset_index(drop=True)
         arrays = [
-            decode_image(bytes(b) if b is not None else b"") for b in pdf["payload"]
+            decode_image_status(bytes(b) if b is not None else b"")[0]
+            for b in pdf["payload"]
         ]
         keep = perceptual_keep_mask(arrays, sim_threshold)
         return pd.DataFrame(
@@ -146,57 +142,3 @@ def perceptual_dedup(
         )
 
     return media.groupBy(group_col).applyInPandas(_group, schema=schema)
-
-
-def media_features_keyed(
-    media: DataFrame, key_cols: list[str], payload_col: str = "payload"
-) -> DataFrame:
-    """media_features with arbitrary passthrough key columns instead of a
-    single media_id — one mapInPandas crossing; the decoded width/height come
-    from the payload itself (real PNG decode for PNG bytes), so joining the
-    output against independently recorded dimensions cross-checks the
-    decoder, not just the plumbing."""
-    from .. import ship_package
-
-    ship_package(media.sparkSession)
-    schema = T.StructType(
-        [media.schema[c] for c in key_cols]
-        + [
-            T.StructField("n_bytes", T.IntegerType(), False),
-            T.StructField("content_md5", T.StringType(), False),
-            T.StructField("width", T.IntegerType(), False),
-            T.StructField("height", T.IntegerType(), False),
-            T.StructField("mean_luma", T.DoubleType(), False),
-            T.StructField("decode_ok", T.BooleanType(), False),
-            T.StructField("decode_status", T.StringType(), False),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for data in pdf[payload_col]:
-                b = bytes(data) if data is not None else b""
-                arr, status = decode_image_status(b)
-                feats.append(
-                    (
-                        len(b),
-                        hashlib.md5(b).hexdigest(),
-                        int(arr.shape[1]),
-                        int(arr.shape[0]),
-                        round(float(arr.mean()), 6),
-                        status == "ok",
-                        status,
-                    )
-                )
-            out = pdf[key_cols].reset_index(drop=True).copy()
-            fdf = pd.DataFrame(
-                feats,
-                columns=[
-                    "n_bytes", "content_md5", "width", "height", "mean_luma",
-                    "decode_ok", "decode_status",
-                ],
-            )
-            yield pd.concat([out, fdf], axis=1)
-
-    return media.mapInPandas(kernel, schema=schema)

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .caching import track
 from .config import DEFAULT_CONFIG, ExtractConfig
 from .kernels.extract import extract_batch
 
@@ -45,7 +46,6 @@ __all__ = [
     "SPANS_TYPE",
     "RESULT_SCHEMA",
     "session_defaults",
-    "sniff_kind_col",
     "extract_turns",
     "extract_with_fallback",
     "reassemble",
@@ -119,22 +119,6 @@ def session_defaults(builder, cpus: int | None = None):
     return b
 
 
-def sniff_kind_col(text_col: str = "text"):
-    """JVM-side payload-kind sniff (coarse: html/pdf/plain/error).
-
-    Mirrors kernels.extract.sniff_kind so cheap stats/pruning never cross
-    into Python (Catalyst can push/fold this; the fine pdf subtype needs the
-    kernel). 'JVBERi0' is base64('%PDF-').
-    """
-    c = F.ltrim(F.col(text_col))
-    return (
-        F.when(F.col(text_col).isNull() | (F.col(text_col) == ""), F.lit("error"))
-        .when(c.startswith("<"), F.lit("html"))
-        .when(c.startswith("JVBERi0"), F.lit("pdf"))
-        .otherwise(F.lit("plain"))
-    )
-
-
 def _kernel_factory(cfg: ExtractConfig):
     out_cols = [f.name for f in RESULT_SCHEMA.fields]
 
@@ -193,11 +177,13 @@ def reassemble(extracted: DataFrame, num_partitions: int | None = None) -> DataF
     re-executes the upstream extraction kernel — the whole Python kernel ran
     TWICE per job (measured: 244 core-s at local[2] vs 104 core-s of kernel
     cost for 320k turns). Extracted rows are small (payload column already
-    dropped), so MEMORY_AND_DISK is cheap relative to one kernel pass.
+    dropped), so MEMORY_AND_DISK is cheap relative to one kernel pass. The
+    persist is tracked: ``caching.release_persisted()`` frees it once the
+    consuming action has run.
     """
     from pyspark import StorageLevel
 
-    extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
+    extracted = track(extracted.persist(StorageLevel.MEMORY_AND_DISK))
     if num_partitions:
         ranged = extracted.repartitionByRange(num_partitions, "conv_id")
     else:
@@ -220,8 +206,8 @@ def extract_with_fallback(
     re-joined to the SOURCE by key — a broadcast hash join of the tiny error
     set against a streamed source scan, no shuffle of either side — and
     re-extracted as plain text (identity + full-range span); results union
-    back. Row-for-row equal to running the kernel once with
-    ``cfg.fallback_plain=True`` (tests pin this), but expressed as the
+    back. Row-for-row equal to the strict golden with that rescue applied
+    (``golden.ensure_golden_fallback``; tests pin this), expressed as the
     filter → rescue-join → unionByName plan the reference's control flow
     maps to.
 
@@ -235,14 +221,16 @@ def extract_with_fallback(
     ``first`` is persisted because it feeds two sub-plans of one action
     (ok_rows and the error set) and Spark has no cross-branch CSE — without
     it the extraction kernel executes twice per materialization. The persist
-    lives until the consuming action finishes; callers running many queries
-    per session should ``spark.catalog.clearCache()`` between actions.
+    must outlive the returned lazy plan, so it is tracked: callers running
+    many queries per session call ``caching.release_persisted()`` after
+    each action.
     """
     from pyspark import StorageLevel
 
     # ``salt`` applies to the KERNEL branch only — the rescue join's source
     # re-scan must stay shuffle-free (broadcast join against a streamed scan)
-    first = extract_turns(df, cfg, salt=salt).persist(StorageLevel.MEMORY_AND_DISK)
+    first = extract_turns(df, cfg, salt=salt)
+    first = track(first.persist(StorageLevel.MEMORY_AND_DISK))
     ok_rows = first.filter(F.col("payload_kind") != "error")
     err = first.filter(F.col("payload_kind") == "error")
     src = df.select("conv_id", "turn_idx", F.col("text").alias("_payload"))

@@ -3,22 +3,16 @@
 The reference's "sources" are per-request file opens
 (``pdf_api/api/routes.py:113-144`` multipart upload → temp file;
 ``pdfplumber.open``/``fitz.open``/``pdfium.PdfDocument`` per backend —
-SURVEY.md §2.1 S1-S4). Here every source is a table scan: Catalyst gets
-predicate pushdown + column pruning for free, and the binaryFile source
-covers the raw-PDF-files-on-disk case.
+SURVEY.md §2.1 S1-S4). Here the source is a scan of the transcripts table
+(``read_transcripts``): Catalyst gets predicate pushdown + column pruning
+for free, and PDFs arrive as base64 payloads opened inside the kernel
+(``kernels.extract.open_pdf``).
 """
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..pipeline import TRANSCRIPT_SPARK_SCHEMA
-
-TPCH_TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
@@ -32,22 +26,3 @@ def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
         # Iceberg jars are not in this image; keep the call-shape documented.
         return spark.read.table(path[len("iceberg:"):])
     return spark.read.schema(TRANSCRIPT_SPARK_SCHEMA).parquet(path)
-
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Driver-provided testdata table (TESTDATA.md)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def read_raw_pdf_files(spark: SparkSession, glob_path: str) -> DataFrame:
-    """Raw .pdf files on disk → (path, modificationTime, length, content).
-
-    The binaryFile analog of the reference's file-open sources (S1-S3);
-    ``content`` is BinaryType and feeds the same kernels after a
-    base64-encode-free branch.
-    """
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(glob_path)
-    )

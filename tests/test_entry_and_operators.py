@@ -93,6 +93,22 @@ def test_media_features_match_jvm_expressions(spark):
     assert r["width"] == 16 + (r["n_bytes"] % 48)
 
 
+def test_extension_of_and_zoom_factor(spark):
+    """F1's lowercased final extension and X7's dpi/72 zoom; these column
+    functions are the only implementation of either."""
+    from pdf_parser_spark.functions import extension_of, zoom_factor
+
+    r = (
+        spark.createDataFrame([("A.B.PDF", 144)], "name string, dpi int")
+        .select(
+            extension_of(F.col("name")).alias("ext"),
+            zoom_factor(F.col("dpi")).alias("zoom"),
+        )
+        .first()
+    )
+    assert (r["ext"], r["zoom"]) == ("pdf", 2.0)
+
+
 def test_exact_dedup_keeps_first(spark):
     docs = spark.read.parquet(os.path.join(SF, "documents.parquet")).select(
         "doc_id", "text"
@@ -108,8 +124,10 @@ def test_exact_dedup_keeps_first(spark):
 
 def test_fallback_two_pass_equals_kernel_flag(spark, transcripts_pdf, transcripts_parquet):
     """The filter→rescue→union DataFrame plan (extract_with_fallback) must be
-    row-for-row equal to the kernel run once with cfg.fallback_plain=True."""
-    from pdf_parser_spark.config import ExtractConfig
+    row-for-row equal to the fallback golden (the strict golden with every
+    non-empty error row rescued as plain text)."""
+    import pandas as pd
+
     from pdf_parser_spark.kernels.extract import extract_batch
     from pdf_parser_spark.pipeline import extract_with_fallback
 
@@ -120,7 +138,7 @@ def test_fallback_two_pass_equals_kernel_flag(spark, transcripts_pdf, transcript
         .reset_index(drop=True)
     )
     want = (
-        extract_batch(transcripts_pdf, ExtractConfig(fallback_plain=True))
+        pd.read_parquet(G.ensure_golden_fallback(SF))
         .sort_values(["conv_id", "turn_idx"], kind="mergesort")
         .reset_index(drop=True)
     )
@@ -136,6 +154,23 @@ def test_fallback_two_pass_equals_kernel_flag(spark, transcripts_pdf, transcript
     ).sum()
     assert n_rescuable > 0
     assert (want["extraction_ok"].sum() - strict["extraction_ok"].sum()) == n_rescuable
+
+
+def test_release_persisted_frees_pipeline_persists(spark, transcripts_parquet):
+    """extract_with_fallback and reassemble persist frames that outlive the
+    call; release_persisted() must free both once the action has run."""
+    from pdf_parser_spark.caching import release_persisted
+    from pdf_parser_spark.pipeline import extract_with_fallback, reassemble
+
+    jsc = spark.sparkContext._jsc.sc()
+    spark.catalog.clearCache()
+    release_persisted(blocking=True)
+    base = jsc.getPersistentRDDs().size()
+    out = reassemble(extract_with_fallback(spark.read.parquet(transcripts_parquet)))
+    out.write.format("noop").mode("overwrite").save()
+    assert jsc.getPersistentRDDs().size() == base + 2
+    assert release_persisted(blocking=True) == 2
+    assert jsc.getPersistentRDDs().size() == base
 
 
 def test_perceptual_dedup_drops_exact_copies(spark):

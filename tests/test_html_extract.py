@@ -100,6 +100,10 @@ def test_numeric_and_named_entities_decoded():
         "&amp": "&amp",                  # semicolon required
         "&#0;": "&#0;",                  # out of range stays literal
         "&#xD800;": "&#xD800;",          # surrogate stays literal
+        "a&#31;b": "a&#31;b",            # C0 controls stay literal: \x1f is
+        "a&#x1f;b": "a&#x1f;b",          # the digest queries' separator
+        "a&#12;b": "a&#12;b",
+        "a&#9;b": "a\tb",                # tab and newline still decode
     }
     for raw, want in cases.items():
         assert _decode_entities(raw) == want, raw

@@ -71,14 +71,15 @@ def test_arithmetic_sof_raises():
 
 
 def test_truncated_jpeg_flags_fallback():
-    from pdf_parser_spark.kernels.images import decode_image_ex
+    from pdf_parser_spark.kernels.images import decode_image_status
 
     good = encode_jpeg(np.full((16, 16, 3), 77, np.uint8))
-    arr, ok = decode_image_ex(good)
+    arr, status = decode_image_status(good)
     # DC of 77 quantizes on a .5 boundary -> off-by-one is correct lossy
-    assert ok and arr.shape == (16, 16, 3) and abs(int(arr[0, 0, 0]) - 77) <= 1
-    arr, ok = decode_image_ex(good[: len(good) // 2])
-    assert not ok  # fabricated pixels, visibly flagged
+    assert status == "ok" and arr.shape == (16, 16, 3)
+    assert abs(int(arr[0, 0, 0]) - 77) <= 1
+    arr, status = decode_image_status(good[: len(good) // 2])
+    assert status != "ok"  # fabricated pixels, visibly flagged
 
 
 def test_large_entropy_stream_decodes_in_linear_time():

@@ -414,3 +414,25 @@ def test_kernels_import_no_spark():
     n_mods, spark_mods = out.stdout.split(" ", 1)
     assert int(n_mods) > 0
     assert spark_mods.strip() == "[]"
+
+
+def test_every_module_imports_and_exports_resolve():
+    """Every package module imports and each name in its ``__all__``
+    resolves, so a deleted helper cannot leave its export behind."""
+    import importlib
+    import pkgutil
+
+    import pdf_parser_spark as pkg
+
+    mods = [pkg] + [
+        importlib.import_module(m.name)
+        for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")
+    ]
+    missing = [
+        f"{m.__name__}.{name}"
+        for m in mods
+        for name in getattr(m, "__all__", ())
+        if not hasattr(m, name)
+    ]
+    assert len(mods) > 20
+    assert missing == []

@@ -164,19 +164,19 @@ def test_depth16_rgba_drops_alpha():
 
 def test_malformed_png_surfaces_fallback():
     """A truncated PNG must NOT produce silently-plausible features:
-    decode_image_ex flags the fabricated fallback (ADVICE r02 #3)."""
-    from pdf_parser_spark.kernels.images import decode_image_ex
+    decode_image_status flags the fabricated fallback (ADVICE r02 #3)."""
+    from pdf_parser_spark.kernels.images import decode_image_status
     from pdf_parser_spark.kernels.render import encode_png
 
     rgb = np.zeros((4, 4, 3), dtype=np.uint8)
     good = encode_png(rgb)
-    arr, ok = decode_image_ex(good)
-    assert ok and arr.shape == (4, 4, 3)
+    arr, status = decode_image_status(good)
+    assert status == "ok" and arr.shape == (4, 4, 3)
     truncated = good[: len(good) // 2]
-    arr, ok = decode_image_ex(truncated)
-    assert not ok  # fabricated pixels, visibly flagged
-    arr, ok = decode_image_ex(b"plain text payload")
-    assert not ok
+    arr, status = decode_image_status(truncated)
+    assert status != "ok"  # fabricated pixels, visibly flagged
+    arr, status = decode_image_status(b"plain text payload")
+    assert status != "ok"
 
 
 def test_roundtrip_with_own_encoder_still_green():

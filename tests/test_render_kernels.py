@@ -214,14 +214,14 @@ def test_png_all_filters_decode():
 def test_decode_image_sniffs_png():
     import numpy as np
 
-    from pdf_parser_spark.kernels.images import decode_image
+    from pdf_parser_spark.kernels.images import decode_image_status
     from pdf_parser_spark.kernels.render import encode_png
 
     img = np.full((20, 30, 3), 250, dtype=np.uint8)
-    out = decode_image(encode_png(img))
+    out = decode_image_status(encode_png(img))[0]
     assert out.shape == (20, 30, 3) and np.array_equal(out, img)
     # non-png bytes fall back to the deterministic fake (documented stub)
-    fake = decode_image(b"not a png at all")
+    fake = decode_image_status(b"not a png at all")[0]
     assert fake.ndim == 3 and fake.shape[2] == 3
 
 
@@ -233,7 +233,7 @@ def test_render_media_real_pixels():
     import base64
 
     from pdf_parser_spark.kernels.images import (
-        decode_image,
+        decode_image_status,
         mostly_black,
         perceptual_keep_mask,
     )
@@ -247,14 +247,13 @@ def test_render_media_real_pixels():
     payload = base64.b64encode(build_pdf([page])).decode()
     recs = payload_render_media(payload)
     assert [r["variant"] for r in recs] == ["full", "stripped", "dup", "jpeg"]
-    arrays = [decode_image(r["png"]) for r in recs]
+    arrays = [decode_image_status(r["png"])[0] for r in recs]
     assert arrays[0].shape == arrays[1].shape
     keep = perceptual_keep_mask(arrays)
     assert keep[0] and not keep[2]  # dup always dropped
     assert not mostly_black(arrays[0])
     # the jpeg variant must be REAL decoded pixels at the downsample target
-    from pdf_parser_spark.kernels.images import decode_image_ex
     from pdf_parser_spark.kernels.records import JPEG_MEDIA_SIZE
 
-    arr, ok = decode_image_ex(recs[3]["png"])
-    assert ok and arr.shape == (JPEG_MEDIA_SIZE, JPEG_MEDIA_SIZE, 3)
+    arr, status = decode_image_status(recs[3]["png"])
+    assert status == "ok" and arr.shape == (JPEG_MEDIA_SIZE, JPEG_MEDIA_SIZE, 3)
