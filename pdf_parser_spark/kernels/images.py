@@ -80,6 +80,7 @@ def decode_image_status(data: bytes) -> tuple[np.ndarray, str]:
       (16-bit PNG depth, hierarchical/lossless/arithmetic JPEG, 12/16-bit
       precision, sampling factors > 2)
     - ``"corrupt"``           malformed/truncated PNG or JPEG stream
+    - ``"too_large"``         header dimensions over ``limits.MAX_PIXELS``
     - ``"unknown_format"``    no recognizable signature (the deterministic
       fabricated-pixel path)
 

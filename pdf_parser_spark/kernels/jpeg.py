@@ -45,14 +45,18 @@ import struct
 
 import numpy as np
 
+from .limits import MAX_PIXELS
+
 __all__ = ["is_jpeg", "decode_jpeg", "encode_jpeg", "encode_jpeg_progressive", "JpegError"]
 
 
 class JpegError(ValueError):
     """``status`` classifies failures for the corpus decode-coverage metric:
-    "corrupt" (malformed/truncated stream) or "unsupported_format"
-    (spec-legal files outside this decoder: hierarchical/lossless/
-    arithmetic SOFs, 12/16-bit precision, sampling factors > 2)."""
+    "corrupt" (malformed/truncated stream), "too_large" (a frame over
+    ``limits.MAX_PIXELS``, refused before any allocation) or
+    "unsupported_format" (spec-legal files outside this decoder:
+    hierarchical/lossless/arithmetic SOFs, 12/16-bit precision, sampling
+    factors > 2)."""
 
     def __init__(self, msg: str, status: str = "corrupt"):
         super().__init__(msg)
@@ -214,44 +218,45 @@ def _encode_plane_blocks(blocks: np.ndarray, qt: np.ndarray) -> np.ndarray:
     return quant.reshape(*quant.shape[:-2], 64)[..., _ZIGZAG]
 
 
-def encode_jpeg(rgb: np.ndarray, subsample: bool = False) -> bytes:
-    """Encode an HxWx3 uint8 array as a baseline JFIF JPEG.
+def _seg(marker: int, body: bytes) -> bytes:
+    return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
 
-    ``subsample=True`` emits 4:2:0 (luma 2x2 per MCU), else 4:4:4.
-    """
+
+def _ycc_planes(rgb: np.ndarray, subsample: bool) -> tuple[list, list]:
+    """(Y, Cb, Cr planes, per-component (h, v) sampling) of an HxWx3 array;
+    ``subsample`` averages each 2x2 of chroma (4:2:0), else 4:4:4."""
     if rgb.ndim != 3 or rgb.shape[2] != 3:
         raise JpegError("expected HxWx3")
     h, w = rgb.shape[:2]
     if h == 0 or w == 0:
         raise JpegError("empty image")
     ycc = _rgb_to_ycbcr(rgb)
-    if subsample:
-        # chroma: average each 2x2 (pad to even first)
-        ph, pw = -h % 2, -w % 2
-        cc = np.pad(ycc[1:], ((0, 0), (0, ph), (0, pw)), mode="edge")
-        cc = cc.reshape(2, cc.shape[1] // 2, 2, cc.shape[2] // 2, 2).mean(axis=(2, 4))
-        planes = [ycc[0], cc[0], cc[1]]
-        samp = [(2, 2), (1, 1), (1, 1)]
-    else:
-        planes = [ycc[0], ycc[1], ycc[2]]
-        samp = [(1, 1), (1, 1), (1, 1)]
-    qts = [_QT_LUMA, _QT_CHROMA, _QT_CHROMA]
-    qids = [0, 1, 1]
+    if not subsample:
+        return [ycc[0], ycc[1], ycc[2]], [(1, 1), (1, 1), (1, 1)]
+    cc = np.pad(ycc[1:], ((0, 0), (0, -h % 2), (0, -w % 2)), mode="edge")
+    cc = cc.reshape(2, cc.shape[1] // 2, 2, cc.shape[2] // 2, 2).mean(axis=(2, 4))
+    return [ycc[0], cc[0], cc[1]], [(2, 2), (1, 1), (1, 1)]
 
-    coefs = []  # per component: (bv, bh, 64)
-    for plane, qt in zip(planes, qts):
-        coefs.append(_encode_plane_blocks(_blocks_of(plane), qt))
 
-    # --- entropy-code MCU-interleaved
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
+def _write_baseline(
+    planes: list[np.ndarray], sampling: list[tuple[int, int]], qids: list[int],
+    app_segment: bytes,
+) -> bytes:
+    """One interleaved baseline (SOF0) scan over ``planes`` — the first at
+    full resolution — with quant table ``qids[i]`` (0 luma, 1 chroma) and
+    ``sampling[i]`` = (h, v) per component, after ``app_segment``."""
+    h, w = planes[0].shape
+    qt = (_QT_LUMA, _QT_CHROMA)
+    coefs = [_encode_plane_blocks(_blocks_of(p), qt[q]) for p, q in zip(planes, qids)]
+    hmax = max(s[0] for s in sampling)
+    vmax = max(s[1] for s in sampling)
     mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
     mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
     bw = _BitWriter()
-    pred = [0, 0, 0]
+    pred = [0] * len(planes)
     for my in range(mcus_y):
         for mx in range(mcus_x):
-            for ci, (sh, sv) in enumerate(samp):
+            for ci, (sh, sv) in enumerate(sampling):
                 c = coefs[ci]
                 for by in range(sv):
                     for bx in range(sh):
@@ -290,26 +295,31 @@ def encode_jpeg(rgb: np.ndarray, subsample: bool = False) -> bytes:
                             bw.write(code, ln)
     entropy = bw.flush()
 
-    # --- assemble segments
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, bytes([0x00]) + bytes(int(x) for x in _QT_LUMA[_ZIGZAG]))
-    out += seg(0xDB, bytes([0x01]) + bytes(int(x) for x in _QT_CHROMA[_ZIGZAG]))
-    sof = struct.pack(">BHHB", 8, h, w, 3)
-    for i, ((sh, sv), qid) in enumerate(zip(samp, qids), start=1):
+    n = len(planes)
+    out = bytearray(b"\xff\xd8") + app_segment
+    out += _seg(0xDB, bytes([0x00]) + bytes(int(x) for x in _QT_LUMA[_ZIGZAG]))
+    out += _seg(0xDB, bytes([0x01]) + bytes(int(x) for x in _QT_CHROMA[_ZIGZAG]))
+    sof = struct.pack(">BHHB", 8, h, w, n)
+    for i, ((sh, sv), qid) in enumerate(zip(sampling, qids), start=1):
         sof += bytes([i, (sh << 4) | sv, qid])
-    out += seg(0xC0, sof)
-    out += seg(0xC4, bytes([0x00]) + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
-    out += seg(0xC4, bytes([0x10]) + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
-    sos = bytes([3]) + b"".join(bytes([i + 1, 0x00]) for i in range(3))
-    sos += bytes([0, 63, 0])
-    out += seg(0xDA, sos)
-    out += entropy
-    out += b"\xff\xd9"
-    return bytes(out)
+    out += _seg(0xC0, sof)
+    out += _seg(0xC4, bytes([0x00]) + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
+    out += _seg(0xC4, bytes([0x10]) + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
+    sos = bytes([n]) + b"".join(bytes([i + 1, 0x00]) for i in range(n))
+    out += _seg(0xDA, sos + bytes([0, 63, 0]))
+    return bytes(out + entropy + b"\xff\xd9")
+
+
+_JFIF = _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+
+
+def encode_jpeg(rgb: np.ndarray, subsample: bool = False) -> bytes:
+    """Encode an HxWx3 uint8 array as a baseline JFIF JPEG.
+
+    ``subsample=True`` emits 4:2:0 (luma 2x2 per MCU), else 4:4:4.
+    """
+    planes, samp = _ycc_planes(rgb, subsample)
+    return _write_baseline(planes, samp, [0, 1, 1], _JFIF)
 
 
 def encode_jpeg_cmyk(cmyk: np.ndarray, ycck: bool = False) -> bytes:
@@ -329,72 +339,10 @@ def encode_jpeg_cmyk(cmyk: np.ndarray, ycck: bool = False) -> bytes:
     if ycck:
         ycc = _rgb_to_ycbcr(cmyk[:, :, :3])  # CMY ink through the RGB->YCC matrix
         planes = [ycc[0], ycc[1], ycc[2], 255.0 - ink[:, :, 3]]
-        transform = 2
     else:
         planes = [255.0 - ink[:, :, i] for i in range(4)]
-        transform = 0
-    qts = [_QT_LUMA, _QT_CHROMA, _QT_CHROMA, _QT_LUMA]
-    qids = [0, 1, 1, 0]
-    coefs = [_encode_plane_blocks(_blocks_of(p), qt) for p, qt in zip(planes, qts)]
-
-    bw = _BitWriter()
-    pred = [0, 0, 0, 0]
-    bv, bh = coefs[0].shape[:2]
-    for my in range(bv):
-        for mx in range(bh):
-            for ci in range(4):
-                blk = coefs[ci][my, mx]
-                diff = int(blk[0]) - pred[ci]
-                pred[ci] = int(blk[0])
-                size, bits = _magnitude(diff)
-                code, ln = _ENC_DC[size]
-                bw.write(code, ln)
-                if size:
-                    bw.write(bits, size)
-                run = 0
-                last_nz = 0
-                for k in range(63, 0, -1):
-                    if blk[k]:
-                        last_nz = k
-                        break
-                for k in range(1, last_nz + 1):
-                    v = int(blk[k])
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run >= 16:
-                        code, ln = _ENC_AC[0xF0]
-                        bw.write(code, ln)
-                        run -= 16
-                    size, bits = _magnitude(v)
-                    code, ln = _ENC_AC[(run << 4) | size]
-                    bw.write(code, ln)
-                    bw.write(bits, size)
-                    run = 0
-                if last_nz != 63:
-                    code, ln = _ENC_AC[0x00]
-                    bw.write(code, ln)
-    entropy = bw.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, transform))
-    out += seg(0xDB, bytes([0x00]) + bytes(int(x) for x in _QT_LUMA[_ZIGZAG]))
-    out += seg(0xDB, bytes([0x01]) + bytes(int(x) for x in _QT_CHROMA[_ZIGZAG]))
-    sof = struct.pack(">BHHB", 8, h, w, 4)
-    for i, qid in enumerate(qids, start=1):
-        sof += bytes([i, 0x11, qid])
-    out += seg(0xC0, sof)
-    out += seg(0xC4, bytes([0x00]) + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
-    out += seg(0xC4, bytes([0x10]) + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
-    sos = bytes([4]) + b"".join(bytes([i + 1, 0x00]) for i in range(4))
-    sos += bytes([0, 63, 0])
-    out += seg(0xDA, sos)
-    out += entropy
-    out += b"\xff\xd9"
-    return bytes(out)
+    adobe = _seg(0xEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, 2 if ycck else 0))
+    return _write_baseline(planes, [(1, 1)] * 4, [0, 1, 1, 0], adobe)
 
 
 # ---------------------------------------------------- progressive encoder ---
@@ -523,21 +471,8 @@ def encode_jpeg_progressive(
     ``encode_jpeg``'s, so decoding both encodings of the same image must
     yield byte-identical pixels — the property the codec tests pin.
     """
-    if rgb.ndim != 3 or rgb.shape[2] != 3:
-        raise JpegError("expected HxWx3")
-    h, w = rgb.shape[:2]
-    if h == 0 or w == 0:
-        raise JpegError("empty image")
-    ycc = _rgb_to_ycbcr(rgb)
-    if subsample:
-        ph, pw_ = -h % 2, -w % 2
-        cc = np.pad(ycc[1:], ((0, 0), (0, ph), (0, pw_)), mode="edge")
-        cc = cc.reshape(2, cc.shape[1] // 2, 2, cc.shape[2] // 2, 2).mean(axis=(2, 4))
-        planes = [ycc[0], cc[0], cc[1]]
-        samp = [(2, 2), (1, 1), (1, 1)]
-    else:
-        planes = [ycc[0], ycc[1], ycc[2]]
-        samp = [(1, 1), (1, 1), (1, 1)]
+    planes, samp = _ycc_planes(rgb, subsample)
+    h, w = planes[0].shape
     qts = [_QT_LUMA, _QT_CHROMA, _QT_CHROMA]
     qids = [0, 1, 1]
     coefs = [
@@ -548,19 +483,15 @@ def encode_jpeg_progressive(
     mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
     mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, bytes([0x00]) + bytes(int(x) for x in _QT_LUMA[_ZIGZAG]))
-    out += seg(0xDB, bytes([0x01]) + bytes(int(x) for x in _QT_CHROMA[_ZIGZAG]))
+    out = bytearray(b"\xff\xd8") + _JFIF
+    out += _seg(0xDB, bytes([0x00]) + bytes(int(x) for x in _QT_LUMA[_ZIGZAG]))
+    out += _seg(0xDB, bytes([0x01]) + bytes(int(x) for x in _QT_CHROMA[_ZIGZAG]))
     sof = struct.pack(">BHHB", 8, h, w, 3)
     for i, ((sh, sv), qid) in enumerate(zip(samp, qids), start=1):
         sof += bytes([i, (sh << 4) | sv, qid])
-    out += seg(0xC2, sof)  # SOF2: progressive
-    out += seg(0xC4, bytes([0x00]) + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
-    out += seg(0xC4, bytes([0x10]) + bytes(_ENC_ACP_BITS) + bytes(_AC_PROG_SYMBOLS))
+    out += _seg(0xC2, sof)  # SOF2: progressive
+    out += _seg(0xC4, bytes([0x00]) + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
+    out += _seg(0xC4, bytes([0x10]) + bytes(_ENC_ACP_BITS) + bytes(_AC_PROG_SYMBOLS))
 
     for comp_ids, ss, se, ah, al in script or _DEFAULT_SCRIPT:
         pw = _ProgressiveWriter()
@@ -603,7 +534,7 @@ def encode_jpeg_progressive(
         for ci in comp_ids:
             sos += bytes([ci + 1, 0x00 if ss == 0 else 0x10])
         sos += bytes([ss, se, (ah << 4) | al])
-        out += seg(0xDA, sos)
+        out += _seg(0xDA, sos)
         out += pw.finish()
     out += b"\xff\xd9"
     return bytes(out)
@@ -775,6 +706,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 raise JpegError("only 8-bit precision", status="unsupported_format")
             if fh == 0 or fw == 0:
                 raise JpegError("empty image")
+            if fh * fw > MAX_PIXELS:
+                raise JpegError(f"{fw}x{fh} exceeds the pixel budget", status="too_large")
             comps = []
             for i in range(nc):
                 cid, hv, tq = body[6 + 3 * i : 9 + 3 * i]

@@ -31,6 +31,8 @@ import zlib
 from dataclasses import dataclass, field
 from typing import NamedTuple
 
+from .limits import inflate
+
 CHAR_WIDTH_RATIO = 0.6
 PAGE_W = 612.0
 PAGE_H = 792.0
@@ -356,6 +358,12 @@ class PdfParseError(ValueError):
     pass
 
 
+# a Flate stream may inflate to this multiple of its compressed length, or
+# to the floor for short streams; a bomb past that is a malformed file
+_INFLATE_RATIO = 16
+_INFLATE_FLOOR = 1 << 20
+
+
 def _parse_objects(
     data: bytes,
 ) -> tuple[dict[int, bytes], dict[int, int], dict[int, int]]:
@@ -388,6 +396,13 @@ def _stream_of(body: bytes) -> bytes:
     return body[i + len(b"stream\n"): j]
 
 
+def _inflate_stream(body: bytes) -> bytes:
+    """A Flate stream's data, bounded at ``_INFLATE_RATIO`` times its
+    compressed length (``_INFLATE_FLOOR`` for short streams)."""
+    z = _stream_of(body)
+    return inflate(z, max(_INFLATE_FLOOR, _INFLATE_RATIO * len(z)))
+
+
 def _unpack_object_streams(objs: dict[int, bytes], offs: dict[int, int]) -> None:
     """PDF 1.5 ``/Type /ObjStm`` unpacking (spec §7.5.7), in place.
 
@@ -405,7 +420,7 @@ def _unpack_object_streams(objs: dict[int, bytes], offs: dict[int, int]) -> None
             raise PdfParseError("ObjStm without /N or /First")
         n, first = int(nm.group(1)), int(fm.group(1))
         try:
-            raw = zlib.decompress(_stream_of(body))
+            raw = _inflate_stream(body)
         except zlib.error as e:
             raise PdfParseError(f"bad ObjStm stream: {e}") from e
         head = raw[:first].split()
@@ -436,7 +451,7 @@ def _decode_xref_stream(body: bytes) -> dict[int, tuple[int, int, int]]:
     w = [int(x) for x in wm.group(1).split()]
     cols = sum(w)
     try:
-        raw = zlib.decompress(_stream_of(body))
+        raw = _inflate_stream(body)
     except zlib.error as e:
         raise PdfParseError(f"bad xref stream: {e}") from e
     pm = re.search(rb"/Predictor (\d+)", body)

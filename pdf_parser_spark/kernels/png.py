@@ -19,7 +19,9 @@ correct PNG reader needs for real-corpus files:
 - all five scanline filters (None/Sub/Up/Average/Paeth, PNG spec §9).
 
 ``PngError.status`` classifies failures for the corpus decode-coverage
-metric: "corrupt" (malformed / truncated) vs "unsupported_format" (an
+metric: "corrupt" (malformed / truncated, or IDAT inflating past the size
+IHDR implies), "too_large" (IHDR over ``limits.MAX_PIXELS``, refused before
+any allocation) vs "unsupported_format" (an
 IHDR depth/color-type combination outside the decoder's table — with
 16-bit support every spec-legal combination is now readable, so this
 status survives mainly for out-of-spec combinations and parity with the
@@ -43,6 +45,8 @@ import struct
 import zlib
 
 import numpy as np
+
+from .limits import MAX_PIXELS, inflate
 
 __all__ = ["is_png", "decode_png", "PngError"]
 
@@ -182,31 +186,29 @@ def decode_png(data: bytes) -> np.ndarray:
         raise PngError(f"bad IHDR method fields (comp={comp} filt={filt} il={interlace})")
     if w == 0 or h == 0:
         raise PngError("empty image")
+    if w * h > MAX_PIXELS:
+        raise PngError(f"{w}x{h} exceeds the pixel budget", status="too_large")
     ch = _CHANNELS[ctype]
-    try:
-        raw = zlib.decompress(bytes(idat))
+    fu = max(1, (ch * depth) // 8)
+    passes = []  # (x0, y0, x_step, y_step, width, height, row bytes)
+    for x0, y0, xs, ys in [(0, 0, 1, 1)] if interlace == 0 else _ADAM7:
+        pw = (w - x0 + xs - 1) // xs
+        ph = (h - y0 + ys - 1) // ys
+        if pw > 0 and ph > 0:  # Adam7 passes are absent for small images (§8.2)
+            passes.append((x0, y0, xs, ys, pw, ph, (pw * ch * depth + 7) // 8))
+    try:  # IHDR fixes the filtered size exactly; more data is corruption
+        raw = inflate(bytes(idat), sum(ph * (rb + 1) for *_, ph, rb in passes))
     except zlib.error as e:
         raise PngError(f"bad idat: {e}") from e
-    fu = max(1, (ch * depth) // 8)
-    if interlace == 0:
-        row_bytes = (w * ch * depth + 7) // 8
-        rows = _unfilter(raw, h, row_bytes, fu)
-        grid = _unpack_samples(rows, depth, w * ch).reshape(h, w, ch)
-    else:  # Adam7: seven independently filtered sub-images, one stream
-        grid = np.zeros((h, w, ch), dtype=np.int64)
-        pos = 0
-        for x0, y0, xs, ys in _ADAM7:
-            pw = (w - x0 + xs - 1) // xs
-            ph = (h - y0 + ys - 1) // ys
-            if pw <= 0 or ph <= 0:
-                continue  # pass absent for small images (spec §8.2)
-            rb = (pw * ch * depth + 7) // 8
-            need = ph * (rb + 1)
-            rows = _unfilter(raw[pos : pos + need], ph, rb, fu)
-            pos += need
-            grid[y0::ys, x0::xs, :] = _unpack_samples(rows, depth, pw * ch).reshape(
-                ph, pw, ch
-            )
+    grid = np.zeros((h, w, ch), dtype=np.int64)
+    pos = 0
+    for x0, y0, xs, ys, pw, ph, rb in passes:
+        need = ph * (rb + 1)
+        rows = _unfilter(raw[pos : pos + need], ph, rb, fu)
+        pos += need
+        grid[y0::ys, x0::xs, :] = _unpack_samples(rows, depth, pw * ch).reshape(
+            ph, pw, ch
+        )
 
     if ctype == 3:
         if plte is None or len(plte) % 3 != 0 or len(plte) == 0:

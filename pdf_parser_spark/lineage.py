@@ -13,13 +13,17 @@ Design:
 - Results are written ``partitionBy("bucket")`` with dynamic partition
   overwrite: re-processing a bucket atomically replaces exactly its own
   files — a crashed run can be re-run blindly (idempotence).
-- The lineage table is appended once per successful run with one row per
-  bucket. Resume = left-anti join of input buckets against committed
-  lineage buckets for the same input snapshot (broadcast: lineage is tiny).
+- A run commits in one pass (``run_job``): one lineage row per new bucket,
+  counted on the write itself. Resume = an anti-join of input buckets
+  against the snapshot's committed ones, collected to the driver (lineage
+  is tiny) and applied as a filter.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import hashlib
+
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
@@ -74,38 +78,32 @@ def cluster_by_bucket(
     function of conv_id — so Catalyst accepts hashpartitioning(bucket) as
     satisfying the window's required clustering and plans ONE exchange and
     a partition-local sort (pinned by ``test_cluster_by_bucket_plan``).
-    Measured at x256/local[32] (interleaved 3-pair A/B): wall PARITY with
-    the range shape — at bench scale the persisted output fits RAM, so
-    the sample pass re-reads cheap columnar cache. The win is at
-    production scale, where the range shape's MEMORY_AND_DISK persist
-    materializes the entire extracted corpus (at 100 TB: storage-memory
-    thrash + disk spill purely to feed a boundary sampler) while this
-    shape streams kernel output straight into its single exchange.
+    Measured at x256/local[32]: wall parity with the range shape, whose
+    persist spills the whole corpus at production scale to feed a sampler.
     ``turn_seq`` values are row-for-row identical to ``reassemble``'s
     (same partition-by set modulo the redundant bucket, same ordering).
     """
-    bucketed = with_bucket(extracted, n_buckets)
-    if num_partitions:
-        bucketed = bucketed.repartition(num_partitions, "bucket")
-    else:
-        bucketed = bucketed.repartition("bucket")
+    cols = (num_partitions, "bucket") if num_partitions else ("bucket",)
+    bucketed = with_bucket(extracted, n_buckets).repartition(*cols)
     w = Window.partitionBy("bucket", "conv_id").orderBy("turn_idx")
     return bucketed.withColumn("turn_seq", F.row_number().over(w))
+
+
+def _snapshot_lineage(
+    spark: SparkSession, lineage_path: str, snapshot_id: str
+) -> DataFrame:
+    try:
+        lin = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
+    except AnalysisException:
+        return spark.createDataFrame([], LINEAGE_SCHEMA)
+    return lin.filter(F.col("input_snapshot_id") == snapshot_id)
 
 
 def committed_buckets(
     spark: SparkSession, lineage_path: str, snapshot_id: str
 ) -> DataFrame:
     """Distinct committed bucket ids for a snapshot (empty if no lineage yet)."""
-    try:
-        lin = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
-    except AnalysisException:
-        return spark.createDataFrame([], "bucket int")
-    return (
-        lin.filter(F.col("input_snapshot_id") == snapshot_id)
-        .select("bucket")
-        .distinct()
-    )
+    return _snapshot_lineage(spark, lineage_path, snapshot_id).select("bucket").distinct()
 
 
 def run_job(
@@ -130,10 +128,23 @@ def run_job(
     so the caller's session is never mutated.
 
     Reassembly is bucket-aligned (``cluster_by_bucket``): one hash
-    exchange on the lineage bucket key serves the window AND the bucketed
-    write — the standalone ``pipeline.reassemble`` range shape would add
-    a persist + sampling pass for a global order the ``partitionBy``
-    write discards anyway.
+    exchange serves the window AND the bucketed write.
+
+    The commit is one pass. The snapshot's lineage rows are read once, at
+    the start, for the resume filter and the summary. Each new bucket's
+    counts come from an ``Observation`` on ``cluster_by_bucket``'s output,
+    so the write job computes them and nothing reads ``output_path`` back.
+
+    The observation sits above the one exchange, so its collecting
+    operator runs in the write's result stage. There the DAGScheduler
+    applies each partition's accumulator update once: a result task
+    updates only an unfinished output partition, and a failed attempt
+    reports only ``countFailedValues`` accumulators, which this is not;
+    a retried or speculative task counts once. ``histogram_numeric`` is
+    exact: its ``n_buckets`` bins are never fewer than the distinct ids,
+    so no two ids share a bin. One id may span bins (the driver sums
+    them), and a merged bin's centre is a weighted mean that can drift by
+    an ulp, so the ids go in as doubles and the driver rounds.
     """
     from .pipeline import job_session, scan_plan
 
@@ -144,47 +155,36 @@ def run_job(
     turns = spark.read.schema(TRANSCRIPT_SPARK_SCHEMA).parquet(input_path)
     turns = with_bucket(turns, n_buckets)
 
-    done = committed_buckets(spark, lineage_path, snapshot_id)
-    todo = turns.join(F.broadcast(done), "bucket", "left_anti")
+    committed = _snapshot_lineage(spark, lineage_path, snapshot_id).collect()
+    todo = turns.filter(~F.col("bucket").isin([r.bucket for r in committed]))
 
     extracted = extract_turns(todo.drop("bucket"), cfg, salt=salt)
-    result = cluster_by_bucket(extracted, n_buckets, num_partitions)
-
+    obs, bucket = Observation(), F.col("bucket").cast("double")
+    failed = F.when(~F.col("extraction_ok"), bucket)
+    result = cluster_by_bucket(extracted, n_buckets, num_partitions).observe(
+        obs,
+        F.histogram_numeric(bucket, F.lit(n_buckets)).alias("turns"),
+        F.histogram_numeric(failed, F.lit(n_buckets)).alias("failures"),
+    )
     result.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
 
-    out = spark.read.parquet(output_path)
-    out = out.join(F.broadcast(done), "bucket", "left_anti")
-    lineage_rows = (
-        out.groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("turn_count"),
-            F.sum(
-                F.when(F.col("extraction_ok"), F.lit(0)).otherwise(F.lit(1))
-            ).alias("extraction_failure_count"),
-        )
-        .select(
-            F.lit(snapshot_id).alias("input_snapshot_id"),
-            F.md5(F.concat_ws(":", F.lit(snapshot_id), F.col("bucket"))).alias(
-                "partition_hash"
-            ),
-            F.col("bucket").cast("int"),
-            F.col("turn_count").cast("long"),
-            F.col("extraction_failure_count").cast("long"),
-            F.lit(run_id).alias("committed_at_run"),
-        )
-    )
-    lineage_rows.write.mode("append").parquet(lineage_path)
+    observed, counts = obs.get, {}
+    for i, name in enumerate(("turns", "failures")):
+        for x, y in observed[name] or ():
+            counts.setdefault(round(x), [0, 0])[i] += int(y)
+    row = Row(*LINEAGE_SCHEMA.names)
+    new = [
+        row(snapshot_id, hashlib.md5(f"{snapshot_id}:{b}".encode()).hexdigest(),
+            b, n, f, run_id)
+        for b, (n, f) in sorted(counts.items())
+    ]
+    if new:  # from pandas, Arrow makes a local relation: no Python worker
+        lin = spark.createDataFrame(pd.DataFrame(new), LINEAGE_SCHEMA)
+        lin.coalesce(1).write.mode("append").parquet(lineage_path)
 
-    committed = spark.read.parquet(lineage_path).filter(
-        F.col("input_snapshot_id") == snapshot_id
-    )
-    agg = committed.agg(
-        F.countDistinct("bucket").alias("buckets"),
-        F.sum("turn_count").alias("turns"),
-        F.sum("extraction_failure_count").alias("failures"),
-    ).collect()[0]
+    rows = committed + new
     return {
-        "buckets_committed": agg["buckets"],
-        "turns": agg["turns"],
-        "failures": agg["failures"],
+        "buckets_committed": len({r.bucket for r in rows}),
+        "turns": sum(r.turn_count for r in rows),
+        "failures": sum(r.extraction_failure_count for r in rows),
     }
