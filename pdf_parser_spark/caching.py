@@ -8,6 +8,11 @@ expensive subtree once per consuming branch. But without any cleanup,
 repeated batch-ingestion calls (e.g. hourly incremental near-dup runs)
 accumulate MEMORY_AND_DISK blocks for the whole session.
 
+Per-call broadcasts have the same lifetime problem: the lazy plan reads
+them when it runs, and an undestroyed broadcast keeps its blocks on the
+driver and every executor for the whole session. Operators register those
+too, and ``release_persisted()`` destroys them.
+
 Contract: operators register their per-call persists via ``track``; a
 long-running caller (driver harness, bench loop, ingestion scheduler,
 notebook, service) calls ``release_persisted()`` AFTER materializing each
@@ -24,30 +29,36 @@ from __future__ import annotations
 
 import threading
 
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame
 
-_TRACKED: list[DataFrame] = []
+_TRACKED: list[DataFrame | Broadcast] = []
 _LOCK = threading.Lock()
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register an already-persisted DataFrame for later release."""
+def track(obj: DataFrame | Broadcast) -> DataFrame | Broadcast:
+    """Register an already-persisted DataFrame, or a per-call broadcast,
+    for later release."""
     with _LOCK:
-        _TRACKED.append(df)
-    return df
+        _TRACKED.append(obj)
+    return obj
 
 
 def release_persisted(blocking: bool = False) -> int:
-    """Unpersist every tracked frame; call after the batch result is
-    materialized. Returns the number of frames released."""
+    """Unpersist every tracked frame and destroy every tracked broadcast;
+    call after the batch result is materialized. Returns the number
+    released."""
     n = 0
     while True:
         with _LOCK:
             if not _TRACKED:
                 return n
-            df = _TRACKED.pop()
+            obj = _TRACKED.pop()
         try:
-            df.unpersist(blocking)
+            if isinstance(obj, Broadcast):
+                obj.destroy(blocking)
+            else:
+                obj.unpersist(blocking)
             n += 1
         except Exception:
             pass  # session already stopped — nothing to release

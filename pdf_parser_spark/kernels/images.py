@@ -94,16 +94,18 @@ def decode_image_status(data: bytes) -> tuple[np.ndarray, str]:
     from .png import PngError, decode_png, is_png
 
     status = "unknown_format"
-    if is_png(data):
+    decode = decode_png if is_png(data) else decode_jpeg if is_jpeg(data) else None
+    if decode is not None:
         try:
-            return decode_png(data), "ok"
-        except PngError as e:
+            return decode(data), "ok"
+        except (PngError, JpegError) as e:
             status = e.status
-    elif is_jpeg(data):
-        try:
-            return decode_jpeg(data), "ok"
-        except JpegError as e:
-            status = e.status
+        except MemoryError:
+            raise
+        except Exception:
+            # a damaged field read as given (struct, index, numpy shape):
+            # like parse_pdf, one bad row must not fail the task
+            status = "corrupt"
     n = max(1, len(data))
     w = 16 + (n % 48)
     h = 16 + ((n // 7) % 48)

@@ -1,4 +1,4 @@
-"""Layout analysis: char → word → line → block grouping + reading order.
+"""Layout analysis: run → line → block grouping + reading order.
 
 From-scratch reimplementation of the text-extraction semantics the reference
 delegates to pdfplumber's ``page.extract_text()`` (chars→words→lines layout
@@ -6,6 +6,14 @@ grouping, ``pdf_api/core/pdf_analyzer.py:72``) and PyMuPDF's
 ``extractBLOCKS()`` (``pdf_api/core/pdf_image_extractor.py:188-195``), per
 the north_star ("pdfminer-style layout analysis: char→word→line→block
 grouping by bbox clustering, reading-order sort").
+
+The unit is the parser's text run; a glyph is a run of length one. The
+result is that of grouping glyph by glyph, and a run is split into glyphs
+only where its glyphs could part: on a baseline whose runs differ in size
+or have size <= 0, on a page with a non-finite number or a negative gap
+ratio, and in a line whose runs overlap in x. Spans need no layout: every
+glyph lands in the text, so a document's byte ranges are the merged union
+of its runs' byte segments.
 
 Determinism contract (SURVEY.md §7.3): all thresholds are exact float64
 comparisons on writer-controlled coordinates (integers and 0.5 multiples);
@@ -16,8 +24,9 @@ inside the Spark Arrow kernel.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from math import isfinite
 
-from .pdf_mini import ParsedChar, ParsedPage
+from .pdf_mini import CHAR_WIDTH_RATIO, ParsedPage, ParsedRun
 from ..config import ExtractConfig, DEFAULT_CONFIG
 
 __all__ = [
@@ -27,7 +36,7 @@ __all__ = [
 
 @dataclass
 class LayoutLine:
-    chars: list[ParsedChar]
+    runs: list[ParsedRun]
     y0: float
     y1: float
     x0: float
@@ -42,74 +51,96 @@ class LayoutBlock:
     y1: float = 0.0
 
 
-def _line_text(line: LayoutLine, cfg: ExtractConfig) -> tuple[str, list[int]]:
-    """Assemble a line's text; returns (text, byte_offset per char or -1).
-
-    Chars are joined left-to-right; a gap > word_gap_ratio*size between
-    consecutive chars inserts a single synthetic space (offset -1 — synthetic
-    chars carry no span).
-    """
-    parts: list[str] = []
-    offs: list[int] = []
-    prev: ParsedChar | None = None
-    for ch in line.chars:
-        if prev is not None and (ch.x0 - prev.x1) > cfg.word_gap_ratio * ch.size:
-            if parts and parts[-1] != " ":
-                parts.append(" ")
-                offs.append(-1)
-        parts.append(ch.char)
-        offs.append(ch.byte_off)
-        prev = ch
-    # trim trailing synthetic space
-    while parts and parts[-1] == " " and offs[-1] == -1:
-        parts.pop()
-        offs.pop()
-    return "".join(parts), offs
+def _glyphs(run: ParsedRun) -> list[ParsedRun]:
+    """``run`` as one run per glyph, with glyph k's edges x0 + k*cw and
+    x0 + (k+1)*cw; a glyph comes back as is, its x1 never re-derived."""
+    if len(run.text) == 1:
+        return [run]
+    cw = CHAR_WIDTH_RATIO * run.size
+    offs = (o for s, e in run.segs for o in range(s, e))
+    return [
+        run._replace(text=c, x0=run.x0 + k * cw, x1=run.x0 + (k + 1) * cw, segs=((o, o + 1),))
+        for k, (c, o) in enumerate(zip(run.text, offs))
+    ]
 
 
-def _group_lines(chars: list[ParsedChar], cfg: ExtractConfig) -> list[LayoutLine]:
-    if not chars:
-        return []
+def _units(runs: list[ParsedRun], cfg: ExtractConfig) -> list[ParsedRun]:
+    """``runs`` in page order, split into glyphs where the module docstring
+    says whole runs could group differently."""
+    sizes: dict[float, set[float]] = {}
+    for r in runs:
+        sizes.setdefault(r.y0, set()).add(r.size)
+    finite = isfinite(sum(r.x0 + r.y0 + r.size for r in runs))
+    whole = finite and cfg.line_merge_tol_ratio >= 0 <= cfg.word_gap_ratio
+    return [
+        u for r in runs
+        for u in ([r] if whole and r.size > 0 and sizes[r.y0] == {r.size} else _glyphs(r))
+    ]
+
+
+def _line_text(line: LayoutLine, cfg: ExtractConfig) -> str:
+    """Join a line's runs left to right; a gap > word_gap_ratio*size before
+    a run inserts one space unless the text before it ends in a space."""
+    parts = [line.runs[0].text]
+    for prev, r in zip(line.runs, line.runs[1:]):
+        if r.x0 - prev.x1 > cfg.word_gap_ratio * r.size and prev.text[-1] != " ":
+            parts.append(" ")
+        parts.append(r.text)
+    return "".join(parts)
+
+
+def _group_lines(runs: list[ParsedRun], cfg: ExtractConfig) -> list[LayoutLine]:
+    units = _units(runs, cfg)
     # cluster by baseline y (descending = top of page first, y-up coords)
-    order = sorted(range(len(chars)), key=lambda i: (-chars[i].y0, chars[i].x0, i))
+    order = sorted(range(len(units)), key=lambda i: (-units[i].y0, units[i].x0, i))
     lines: list[LayoutLine] = []
-    cur: list[ParsedChar] = []
+    cur: list[ParsedRun] = []
     cur_y = None
     for i in order:
-        ch = chars[i]
-        if cur_y is None or abs(ch.y0 - cur_y) <= cfg.line_merge_tol_ratio * ch.size:
-            cur.append(ch)
+        r = units[i]
+        if cur_y is None or abs(r.y0 - cur_y) <= cfg.line_merge_tol_ratio * r.size:
+            cur.append(r)
             if cur_y is None:
-                cur_y = ch.y0
+                cur_y = r.y0
         else:
             lines.append(_mk_line(cur))
-            cur = [ch]
-            cur_y = ch.y0
+            cur = [r]
+            cur_y = r.y0
     if cur:
         lines.append(_mk_line(cur))
     return lines
 
 
-def _mk_line(chs: list[ParsedChar]) -> LayoutLine:
-    chs = sorted(chs, key=lambda c: (c.x0, c.byte_off))
+def _before(a: ParsedRun, b: ParsedRun) -> bool:
+    """Every glyph of ``a`` sorts before every glyph of ``b`` by (x0, byte)."""
+    last_x0 = a.x0 + (len(a.text) - 1) * (CHAR_WIDTH_RATIO * a.size)
+    return (last_x0, a.segs[-1][1] - 1) < (b.x0, b.segs[0][0])
+
+
+def _mk_line(units: list[ParsedRun]) -> LayoutLine:
+    runs = sorted(units, key=lambda r: (r.x0, r.segs[0][0]))
+    if not all(map(_before, runs, runs[1:])):
+        # the runs' glyphs interleave: order them one glyph at a time
+        glyphs = (g for r in units for g in _glyphs(r))
+        runs = sorted(glyphs, key=lambda g: (g.x0, g.segs[0][0]))
     return LayoutLine(
-        chars=chs,
-        y0=min(c.y0 for c in chs),
-        y1=max(c.y1 for c in chs),
-        x0=min(c.x0 for c in chs),
+        runs=runs,
+        y0=min(r.y0 for r in runs),
+        y1=max(r.y1 for r in runs),
+        x0=min(r.x0 for r in runs),
     )
 
 
 def layout_page(page: ParsedPage, cfg: ExtractConfig = DEFAULT_CONFIG) -> list[LayoutBlock]:
-    """Group a page's chars into reading-ordered blocks."""
-    lines = _group_lines(page.chars, cfg)
+    """Group a page's runs into reading-ordered blocks."""
+    lines = _group_lines(page.runs, cfg)
     # lines already ordered top-to-bottom; split into blocks on big gaps
     blocks: list[LayoutBlock] = []
     cur: list[LayoutLine] = []
     for ln in lines:
         if cur:
             gap = cur[-1].y0 - ln.y1  # bottom of prev line to top of this one
-            size = max(c.size for c in ln.chars)
+            size = max(r.size for r in ln.runs)
             if gap > cfg.block_gap_ratio * size:
                 blocks.append(_mk_block(cur))
                 cur = []
@@ -127,48 +158,44 @@ def _mk_block(lines: list[LayoutLine]) -> LayoutBlock:
         lines=lines,
         x0=min(ln.x0 for ln in lines),
         y0=min(ln.y0 for ln in lines),
-        x1=max(max(c.x1 for c in ln.chars) for ln in lines),
+        x1=max(max(r.x1 for r in ln.runs) for ln in lines),
         y1=max(ln.y1 for ln in lines),
     )
 
 
 def page_text(
     page: ParsedPage, cfg: ExtractConfig = DEFAULT_CONFIG
-) -> tuple[str, list[int], int]:
-    """Lay out one page: (reading-order text, raw-PDF byte offset per char
-    or -1 for synthetic chars and joiners, n_blocks).
+) -> tuple[str, list[tuple[int, int]], int]:
+    """Lay out one page: (reading-order text, raw-PDF byte ranges of its
+    glyphs, n_blocks).
 
     With join_pages, the only code that knows the text format: lines are
     joined by a newline, blocks and pages by a blank line.
     """
     parts: list[str] = []
-    offs: list[int] = []
     blocks = layout_page(page, cfg)
     for blk in blocks:
         joiner = "\n\n"
         for ln in blk.lines:
             if parts:
                 parts.append(joiner)
-                offs.extend([-1] * len(joiner))
             joiner = "\n"
-            text, line_offs = _line_text(ln, cfg)
-            parts.append(text)
-            offs.extend(line_offs)
-    return "".join(parts), offs, len(blocks)
+            parts.append(_line_text(ln, cfg))
+    return "".join(parts), [s for r in page.runs for s in r.segs], len(blocks)
 
 
 def join_pages(
-    pages: list[tuple[str, list[int], int]]
+    pages: list[tuple[str, list[tuple[int, int]], int]]
 ) -> tuple[str, list[tuple[int, int]], int]:
     """Join ``page_text`` results into (text, sorted maximal byte ranges
     into the raw PDF bytes, n_blocks). Pages without blocks leave no gap."""
     text = "\n\n".join(t for t, _, n in pages if n)
     ranges: list[list[int]] = []
-    for off in sorted({o for _, offs, _ in pages for o in offs if o >= 0}):
-        if ranges and ranges[-1][1] == off:
-            ranges[-1][1] = off + 1
+    for s, e in sorted(seg for _, segs, _ in pages for seg in segs):
+        if ranges and s <= ranges[-1][1]:
+            ranges[-1][1] = max(ranges[-1][1], e)
         else:
-            ranges.append([off, off + 1])
+            ranges.append([s, e])
     return text, [(s, e) for s, e in ranges], sum(n for _, _, n in pages)
 
 

@@ -12,16 +12,17 @@ scratch:
   a correct xref table, page objects, content streams using only
   ``BT/Tf/Td/Tj/ET`` text ops, ``m/l/re/S/f/c`` path ops and
   ``q/cm/Do/Q`` image placements, plus raw ``/Subtype /Image`` XObjects.
-- ``parse_pdf(data)``: tokenizes that subset back into per-page chars (with
-  bboxes AND absolute byte offsets into ``data`` — the span source), image
-  records (bbox + pixel dims + bytes), and vector-drawing counts.
+- ``parse_pdf(data)``: tokenizes that subset back into per-page text runs
+  (one ``ParsedRun`` per non-empty ``Tj``: text, bbox, size and the absolute
+  byte ranges of its glyphs in ``data`` — the span source; no per-glyph
+  object), image records (bbox + pixel dims + bytes), vector-drawing counts.
 
 Both sides are pure Python/stdlib, deterministic, and shared by the datagen,
 the golden runner and the Spark UDF kernels.
 
 Geometry contract (fixed, so layout analysis is exact):
 - MediaBox 0 0 612 792 (y-up, PDF convention).
-- Monospace char metric: advance = CHAR_WIDTH_RATIO * fontsize; char bbox
+- Monospace glyph metric: advance = CHAR_WIDTH_RATIO * fontsize; glyph bbox
   height = fontsize, baseline at Td y, top at y + fontsize.
 """
 from __future__ import annotations
@@ -130,7 +131,7 @@ def build_pdf(
     STREAM (``/Type /XRef``, ``/W [1 4 2]`` columns, rows PNG-Up-predicted
     via ``/DecodeParms << /Predictor 12 >>``). Content and image streams
     stay top-level (streams cannot live inside an object stream, spec
-    §7.5.7), so char byte-offset spans keep their raw-file anchors.
+    §7.5.7), so glyph byte-range spans keep their raw-file anchors.
     """
     objs: list[bytes] = []  # 1-indexed object bodies (without "N 0 obj")
     page_obj_ids: list[int] = []
@@ -291,17 +292,18 @@ def _serialize_objstm(objs: list[bytes], catalog_id: int, info_id: int | None) -
 
 # ---------------------------------------------------------------- parser ---
 
-class ParsedChar(NamedTuple):
-    # NamedTuple, not dataclass: chars are the highest-volume objects in the
-    # parse path (~100 per turn) and never mutated; tuple construction is
-    # ~2x cheaper and attribute access equal
-    char: str
+class ParsedRun(NamedTuple):
+    # one per non-empty Tj literal; glyph k spans x0 + k*cw .. x0 + (k+1)*cw
+    # (cw = CHAR_WIDTH_RATIO * size), so glyph boxes are never stored
+    text: str
     x0: float
     y0: float
-    x1: float
+    x1: float         # x0 + len(text) * cw, the last glyph's right edge
     y1: float
     size: float
-    byte_off: int     # absolute offset of this char in the raw PDF bytes
+    # raw-PDF byte ranges [start, end) holding the glyphs, one byte each in
+    # text order: a plain glyph is its byte, an escaped one its backslash
+    segs: tuple[tuple[int, int], ...]
 
 
 @dataclass
@@ -324,7 +326,7 @@ class ParsedImage:
 
 @dataclass
 class ParsedPage:
-    chars: list[ParsedChar] = field(default_factory=list)
+    runs: list[ParsedRun] = field(default_factory=list)
     images: list[ParsedImage] = field(default_factory=list)
     n_lines: int = 0
     n_rects: int = 0
@@ -369,7 +371,7 @@ def _parse_objects(
 ) -> tuple[dict[int, bytes], dict[int, int], dict[int, int]]:
     """ONE regex pass over the raw bytes -> (id -> body, id -> absolute
     offset of the body start, id -> absolute offset of the object HEADER).
-    The body offsets anchor char byte_offs (the span source); the header
+    The body offsets anchor glyph byte ranges (the span source); the header
     offsets are what xref rows record, kept from the actual match span so
     the xref cross-check never re-derives them from an assumed header
     layout ('N 0 obj\\n' exactly — a spec-valid writer may use \\r\\n or
@@ -408,7 +410,7 @@ def _unpack_object_streams(objs: dict[int, bytes], offs: dict[int, int]) -> None
 
     Modern writers pack every dict-only object into compressed object
     streams; only content/image streams remain top-level (streams cannot
-    nest), so char byte-offset spans keep their raw-file anchors. Packed
+    nest), so glyph byte-range spans keep their raw-file anchors. Packed
     objects get offset -1 — they are dicts and never anchor a span.
     """
     for body in list(objs.values()):
@@ -501,30 +503,34 @@ def _decode_xref_stream(body: bytes) -> dict[int, tuple[int, int, int]]:
     return entries
 
 
-def _read_literal(data: bytes, start: int) -> tuple[list[tuple[str, int]], int]:
+def _read_literal(data: bytes, start: int) -> tuple[str, list[tuple[int, int]], int]:
     """Read a PDF literal string starting just after '('.
 
-    Returns (list of (char, absolute_byte_offset), index just after ')').
-    Handles the three escapes the writer emits.
+    Returns (text, byte ranges of its glyphs, index just after ')'). A
+    backslash escapes the next byte (the writer emits ``\\( \\) \\\\``); the
+    escaped glyph's byte is its backslash.
     """
-    out: list[tuple[str, int]] = []
+    parts: list[str] = []
+    segs: list[tuple[int, int]] = []
     i = start
-    n = len(data)
-    while i < n:
-        c = data[i]
-        if c == 0x5C and i + 1 < n:  # backslash
-            out.append((chr(data[i + 1]), i))
-            i += 2
-        elif c == 0x29:  # ')'
-            return out, i + 1
-        else:
-            out.append((chr(c), i))
-            i += 1
-    raise PdfParseError("unterminated literal")
+    while True:
+        close = data.find(b")", i)
+        if close < 0:
+            raise PdfParseError("unterminated literal")
+        esc = data.find(b"\\", i, close)
+        if esc < 0:
+            parts.append(data[i:close].decode("latin-1"))
+            if close > i:
+                segs.append((i, close))
+            return "".join(parts), segs, close + 1
+        # esc < close, so the escaped byte exists
+        parts.append(data[i:esc].decode("latin-1") + chr(data[esc + 1]))
+        segs.append((i, esc + 1))
+        i = esc + 2
 
 
 def parse_pdf(data: bytes) -> ParsedDoc:
-    """Parse the simple-subset PDF back into chars/images/drawing counts.
+    """Parse the simple-subset PDF back into text runs/images/drawing counts.
 
     Raises PdfParseError on anything outside the subset (malformed rows feed
     ``extraction_failure_count`` lineage accounting, BASELINE.json:14).
@@ -595,10 +601,8 @@ def _parse_pdf_inner(data: bytes) -> ParsedDoc:
         ibody = objs.get(int(im.group(1)))
         if ibody is not None:
             for km in re.finditer(rb"/(\w+) \(", ibody):
-                chars, _end = _read_literal(ibody, km.end())
-                doc.metadata[km.group(1).decode("latin-1")] = "".join(
-                    c for c, _ in chars
-                )
+                value, _segs, _end = _read_literal(ibody, km.end())
+                doc.metadata[km.group(1).decode("latin-1")] = value
     for pid in kids_order:
         body = objs[pid]
         page = ParsedPage()
@@ -625,20 +629,12 @@ def _parse_pdf_inner(data: bytes) -> ParsedDoc:
             size = float(m.group(1))
             x = float(m.group(2))
             y = float(m.group(3))
-            chars, _end = _read_literal(stream, m.end())
-            cw = CHAR_WIDTH_RATIO * size
-            for k, (ch, off) in enumerate(chars):
-                page.chars.append(
-                    ParsedChar(
-                        char=ch,
-                        x0=x + k * cw,
-                        y0=y,
-                        x1=x + (k + 1) * cw,
-                        y1=y + size,
-                        size=size,
-                        byte_off=sbase + off,
-                    )
-                )
+            text, segs, _end = _read_literal(stream, m.end())
+            if text:
+                page.runs.append(ParsedRun(
+                    text, x, y, x + len(text) * (CHAR_WIDTH_RATIO * size), y + size,
+                    size, tuple((sbase + s, sbase + e) for s, e in segs),
+                ))
         # images
         for k, m in enumerate(_IMG_OP.finditer(stream)):
             w = float(m.group(1))

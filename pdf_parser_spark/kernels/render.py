@@ -4,7 +4,7 @@ dual-render enhancement, K7 text-stripped rebuild — pure numpy, deterministic.
 Reference parity (SURVEY.md §2.10):
 - K1: ``page.get_pixmap(matrix=Matrix(z, z), alpha=False)`` at zoom = dpi/72
   (``pdf_api/core/pdf_image_extractor.py:174-233``). PIL/fitz are not in this
-  container; the rasterizer draws the parsed page model (char boxes, vector
+  container; the rasterizer draws the parsed page model (text-run boxes, vector
   strokes, image placements) onto an RGB canvas with the same geometry
   contract as the parser — validated by shape/hash invariants, not
   pixel-parity with fitz (SURVEY.md §7.3 "not hard / explicitly skipped").
@@ -30,7 +30,7 @@ from .pdf_mini import PAGE_H, PAGE_W, ParsedPage
 
 __all__ = ["render_page", "render_region", "render_cad_page", "encode_png"]
 
-_TEXT_GRAY = 40        # char-box ink
+_TEXT_GRAY = 40        # text-run ink
 _STROKE_GRAY = 90      # vector-stroke ink
 
 
@@ -93,8 +93,9 @@ def render_page(
         if x1 > x0 and ry1 > ry0:
             img[ry0:ry1, x0:x1] = _tile_bytes(im.data, ry1 - ry0, x1 - x0)
     if not text_stripped:
-        for c in page.chars:
-            _fill_rect(img, c.x0, c.y0, c.x1, c.y1, zoom, ph, _TEXT_GRAY)
+        # one rect per run: its glyphs share edge floats, so their pixels tile it
+        for r in page.runs:
+            _fill_rect(img, r.x0, r.y0, r.x1, r.y1, zoom, ph, _TEXT_GRAY)
     return img
 
 

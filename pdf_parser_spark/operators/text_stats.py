@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import track
+
 __all__ = [
     "occurrences",
     "lang_id",
@@ -197,7 +199,8 @@ def with_bpe_token_count(
     from ..kernels.bpe import count_batch, default_ranks
 
     ship_package(docs.sparkSession)
-    bc = docs.sparkSession.sparkContext.broadcast(default_ranks())
+    # released with the call's persists: caching.release_persisted()
+    bc = track(docs.sparkSession.sparkContext.broadcast(default_ranks()))
     schema = T.StructType(
         docs.schema.fields + [T.StructField(out_col, T.IntegerType(), False)]
     )

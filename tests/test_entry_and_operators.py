@@ -173,6 +173,30 @@ def test_release_persisted_frees_pipeline_persists(spark, transcripts_parquet):
     assert jsc.getPersistentRDDs().size() == base
 
 
+def test_release_persisted_destroys_bpe_broadcasts(spark, monkeypatch):
+    """with_bpe_token_count broadcasts the merge table on every call;
+    release_persisted() must destroy each one once its result is built."""
+    from pyspark import SparkContext
+
+    from pdf_parser_spark.caching import release_persisted
+    from pdf_parser_spark.operators.text_stats import with_bpe_token_count
+
+    made = []
+    broadcast = SparkContext.broadcast
+    monkeypatch.setattr(
+        SparkContext, "broadcast", lambda sc, value: made.append(broadcast(sc, value)) or made[-1]
+    )
+    docs = spark.createDataFrame(
+        [(1, "the attention is all"), (2, "xyzzy 12345")], "doc_id long, text string"
+    )
+    release_persisted(blocking=True)
+    for _ in range(20):
+        assert with_bpe_token_count(docs).agg(F.sum("n_bpe_tokens")).first()[0] > 0
+        release_persisted(blocking=True)
+        assert made and not any(bc._jbroadcast.isValid() for bc in made)
+    assert len(made) == 20
+
+
 def test_perceptual_dedup_drops_exact_copies(spark):
     import __spark_entry__ as em
 

@@ -38,18 +38,28 @@ def _page_with_text(lines_blocks: list[list[str]], size: float = 10.0) -> PageSp
 
 def test_roundtrip_chars():
     page = _page_with_text([["hello world"], ["second block"]])
-    doc = parse_pdf(build_pdf([page]))
+    raw = build_pdf([page])
+    doc = parse_pdf(raw)
     assert len(doc.pages) == 1
-    chars = doc.pages[0].chars
-    assert "".join(c.char for c in chars) == "hello worldsecond block"
-    # monospace metric: each char advances 6pt at size 10
-    assert chars[1].x0 - chars[0].x0 == pytest.approx(6.0)
+    runs = doc.pages[0].runs
+    assert [r.text for r in runs] == ["hello world", "second block"]
+    # monospace metric: each glyph advances 6pt at size 10
+    assert (runs[0].x0, runs[0].x1, runs[0].y0, runs[0].y1) == (72.0, 138.0, 750.0, 760.0)
+    # one segment per unescaped run, one byte per glyph
+    ((s, e),) = runs[0].segs
+    assert raw[s:e] == b"hello world"
 
 
 def test_roundtrip_escapes():
-    page = PageSpec(text_runs=[TextRun(72, 700, 10, r"a(b)c\d")])
-    doc = parse_pdf(build_pdf([page]))
-    assert "".join(c.char for c in doc.pages[0].chars) == r"a(b)c\d"
+    page = PageSpec(text_runs=[TextRun(72, 700, 10, r"a(b)c\d"), TextRun(72, 690, 10, "")])
+    raw = build_pdf([page])
+    (run,) = parse_pdf(raw).pages[0].runs  # an empty literal makes no run
+    assert run.text == r"a(b)c\d"
+    # an escaped glyph's byte is its backslash: a\(b\)c\\d at s gives
+    # [s,s+2) [s+3,s+5) [s+6,s+8) [s+9,s+10)
+    s = run.segs[0][0]
+    assert run.segs == ((s, s + 2), (s + 3, s + 5), (s + 6, s + 8), (s + 9, s + 10))
+    assert raw[s : s + 11] == rb"a\(b\)c\\d)"
 
 
 def test_layout_blocks_and_reading_order():
@@ -125,7 +135,7 @@ def test_extract_one_lays_out_each_page_once(monkeypatch):
     calls = []
     group_lines = layout._group_lines
     monkeypatch.setattr(
-        layout, "_group_lines", lambda chars, cfg: calls.append(1) or group_lines(chars, cfg)
+        layout, "_group_lines", lambda runs, cfg: calls.append(1) or group_lines(runs, cfg)
     )
 
     def run(pages):
@@ -247,11 +257,11 @@ def test_objstm_layout_parses_identically():
     assert p15.metadata == p14.metadata == info
     assert len(p15.pages) == len(p14.pages)
     for a, b in zip(p14.pages, p15.pages):
-        assert "".join(c.char for c in a.chars) == "".join(c.char for c in b.chars)
+        assert [r.text for r in a.runs] == [r.text for r in b.runs]
         assert [i.data for i in a.images] == [i.data for i in b.images]
         assert (a.n_lines, a.n_rects, a.n_curves) == (b.n_lines, b.n_rects, b.n_curves)
-    ch = p15.pages[0].chars[0]
-    assert d15[ch.byte_off : ch.byte_off + 1] == b"h"
+    s, e = p15.pages[0].runs[0].segs[0]
+    assert d15[s:e].startswith(b"h")
 
 
 def test_xref_stream_decode_and_consistency():
