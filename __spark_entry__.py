@@ -464,6 +464,14 @@ def q_x2_pdf_date_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ============================================================ dedup suite ==
 
+def _truncated_copies(docs: DataFrame) -> DataFrame:
+    """Each doc shifted to id +1000000 with its last 15 chars cut."""
+    return docs.select(
+        (F.col("doc_id") + 1000000).alias("doc_id"),
+        F.expr("substring(text, 1, length(text) - 15)").alias("text"),
+    )
+
+
 def _doubled_docs(spark: SparkSession, sf_dir: str, exact: bool) -> DataFrame:
     """documents ∪ shifted copies (exact or 15-char-truncated) — guarantees
     the dedup/near-dup operators have real positives to find."""
@@ -471,10 +479,7 @@ def _doubled_docs(spark: SparkSession, sf_dir: str, exact: bool) -> DataFrame:
     if exact:
         copy = docs.select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
     else:
-        copy = docs.select(
-            (F.col("doc_id") + 1000000).alias("doc_id"),
-            F.expr("substring(text, 1, length(text) - 15)").alias("text"),
-        )
+        copy = _truncated_copies(docs)
     return docs.unionByName(copy)
 
 
@@ -499,12 +504,8 @@ def q_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus via a band-table JOIN — no corpus self-join. The daily-crawl
     shape of minhash_lsh_pairs."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    new = docs.select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.expr("substring(text, 1, length(text) - 15)").alias("text"),
-    )
     return dedup.minhash_lsh_pairs_incremental(
-        new, docs, k=3, num_hashes=8, bands=4,
+        _truncated_copies(docs), docs, k=3, num_hashes=8, bands=4,
         jaccard_threshold=0.6, max_bucket=50,
     )
 
@@ -626,9 +627,8 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs, ~4-char subword estimate) + the PII scan arm (email/phone/IPv4
     hit counts, redacted-text md5) + the EXACT BPE count (broadcast merge
     table, one mapInPandas crossing — r05; the estimate column stays for
-    comparison) in one scan — the former token_stats and
-    subword_token_stats entries merged (registry curation to the driver's
-    50-row cap)."""
+    comparison) in one scan: text_stats.token_profile's single projection
+    (registry curation to the 50-entry cap)."""
     enriched = text_stats.with_bpe_token_count(
         _t(spark, sf_dir, "documents").select("doc_id", "text")
     )
@@ -738,9 +738,12 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _doubled_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings ∪ slightly-perturbed copies (dim 1 += 0.05): deterministic
-    near-duplicate positives for the cosine near-dup operator."""
+def _embeddings_and_copies(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(embeddings as doubles, their slightly-perturbed copies: ids
+    +1000000, dim 1 += 0.05) — deterministic near-duplicate positives for
+    the cosine near-dup operators."""
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
@@ -752,12 +755,13 @@ def _doubled_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.slice("embedding", 2, 63),
         ).alias("embedding"),
     )
-    return emb.unionByName(pert)
+    return emb, pert
 
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb, pert = _embeddings_and_copies(spark, sf_dir)
     return similarity.embedding_near_dup_pairs(
-        _doubled_embeddings(spark, sf_dir),
+        emb.unionByName(pert),
         threshold=0.9, planes=10, n_tables=4, dims=64, max_bucket=200,
     )
 
@@ -767,17 +771,7 @@ def q_embedding_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFra
     the new batch and are matched against the corpus via an SRP bucket
     JOIN per plane family — no corpus self-join (the ANN ingestion
     shape, mirroring minhash_incremental)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    new = emb.select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("embedding", 1) + F.lit(0.05)),
-            F.slice("embedding", 2, 63),
-        ).alias("embedding"),
-    )
+    emb, new = _embeddings_and_copies(spark, sf_dir)
     return similarity.embedding_near_dup_incremental(
         new, emb, threshold=0.9, planes=10, n_tables=4, dims=64, max_bucket=200,
     )
@@ -791,9 +785,8 @@ def q_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means for the IVF quantizer. Every round is deterministic
     fixed-point (see similarity.ivf_train), so the fixed n_iters=3 loop
-    unrolls mechanically into three chained CTE blocks of the
-    ivf_train_step template — _ivf_train_sql(3) is the full hash oracle
-    (rows+schema+values), closing the board's last rows-only cell."""
+    unrolls mechanically into three chained CTE blocks, one per round —
+    _ivf_train_sql(3) is the full hash oracle (rows+schema+values)."""
     return similarity.ivf_train(_t(spark, sf_dir, "embeddings"), n_cells=8, n_iters=3)
 
 
@@ -803,20 +796,6 @@ def q_ivf_probe2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors at 2x the (cell-sized) scan cost."""
     return similarity.ivf_probe_topk(
         _t(spark, sf_dir, "embeddings"), query_id=0, k=10, n_cells=8, nprobe=2
-    )
-
-
-def q_ivf_train_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One Lloyd iteration (seed -> assign -> exact fixed-point mean) — the
-    single-round k-means update as one declarative query with a full SQL
-    oracle; the multi-round loop stays in ivf_train (rows-only by design)."""
-    return similarity.ivf_train_step(_t(spark, sf_dir, "embeddings"), n_cells=8)
-
-
-def q_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF nprobe=1 probe: cosine top-k within the query's cell only."""
-    return similarity.ivf_probe_topk(
-        _t(spark, sf_dir, "embeddings"), query_id=0, k=10, n_cells=8
     )
 
 
@@ -944,8 +923,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "neardup_survivors": q_neardup_survivors,
         "decontamination_hits": q_decontamination_hits,
         "fingerprint48": q_fingerprint48,
-        # subword_token_stats merged into token_stats (one projection);
-        # the freed slot holds gopher_quality
+        # one token_profile projection carries the whitespace, regex-run
+        # and subword counts; the freed slot holds gopher_quality
         "token_stats": q_token_stats,
         "gopher_quality": q_gopher_quality,
         "lang_id_histogram": q_lang_id_histogram,
@@ -957,12 +936,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_near_dup": q_embedding_near_dup,
         "embedding_neardup_incremental": q_embedding_neardup_incremental,
         "ivf_assign": q_ivf_assign,
-        # ivf_train_step retired from the registry: ivf_train is now fully
-        # hash-oracled via the unrolled CTE chain of the same template (and
-        # equals the step at n_iters=1); ivf_probe_topk likewise folded into
-        # ivf_probe2_topk (same operator, nprobe knob — the superset-
-        # domination pytest still exercises nprobe=1). Registry curation to
-        # the driver's 50-row cap, r03 verdict #1.
+        # ivf_train is hash-oracled via its unrolled CTE chain (one block
+        # per round, so it covers the one-round update too); ivf_probe2_topk
+        # is the probe's only entry (the superset-domination pytest still
+        # exercises nprobe=1). Registry curation to the 50-entry cap, r03
+        # verdict #1.
         "ivf_train": q_ivf_train,
         "ivf_probe2_topk": q_ivf_probe2_topk,
         "media_features": q_media_features,
@@ -1012,8 +990,8 @@ sh AS (
 
 
 def _minhash_sql() -> str:
-    # mirrors dedup.minhash_signature: ONE md5 per shingle, chunked into 8
-    # disjoint 4-hex substrings, min per chunk
+    # mirrors dedup._minhash_doc_table's signature: ONE md5 per shingle,
+    # chunked into 8 disjoint 4-hex substrings, min per chunk
     mh = ",\n    ".join(
         f"min(substr(md5(shingle), {s * 4 + 1}, 4)) AS mh{s}" for s in range(8)
     )
@@ -1265,13 +1243,13 @@ ORDER BY corpus_id, j.eval_id
 
 
 def _ivf_train_sql(n_iters: int = 3, n_cells: int = 8, dims: int = 64) -> str:
-    """Unrolled Lloyd loop: ``n_iters`` chained CTE blocks of the exact
-    ivf_train_step template. Each round is deterministic (fixed-point means,
+    """Unrolled Lloyd loop: ``n_iters`` chained CTE blocks, one per round of
+    similarity.ivf_train. Each round is deterministic (fixed-point means,
     l2sq rounded to 6, ties to lower cell), so chaining is mechanical:
     round i assigns against centroids c{i-1} and emits c{i}; empty cells
     carry the previous centroid via a LEFT JOIN COALESCE. The summary takes
-    n_members from the LAST assignment and the norm from the LAST centroids
-    — the same convention ivf_train_step uses for one round."""
+    n_members from the LAST assignment and the norm from the LAST centroids,
+    as ivf_train does."""
     l2 = (
         "round(list_reduce(list_prepend(0.0, "
         f"list_transform(range(1, {dims + 1}), "

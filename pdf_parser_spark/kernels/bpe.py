@@ -1,9 +1,8 @@
 """Exact BPE (byte-pair-encoding) token counting — pure Python/pandas, no
 Spark imports (kernel rule, SURVEY.md §7.1).
 
-r04 verdict task #5: the ~4-chars-per-token estimate in
-``subword_token_stats`` budgets, but a training pipeline PACKS by exact
-tokenizer counts. This kernel runs the classic BPE merge loop (Sennrich et
+r04 verdict task #5: ``token_profile``'s ~4-chars-per-token ``n_subwords``
+estimate budgets, but a training pipeline PACKS by exact tokenizer counts. This kernel runs the classic BPE merge loop (Sennrich et
 al. 2016; the GPT-2 tokenizer's core) against a DETERMINISTIC merge table
 trained at import time from an embedded word-frequency list — a committed
 fixture that is a pure function of this file, so both harnesses (single-node

@@ -5,6 +5,6 @@
                       Jaccard (the reference's D1 generalized to corpus scale)
 - ``similarity.py``   embedding similarity search (brute-force + LSH-bucketed)
 - ``text_stats.py``   language-ID, quality scoring, token counts, fingerprints
-- ``multimodal.py``   binary-column plumbing for image/audio payloads (decode
-                      stubbed — libs not in container; Spark plumbing real)
+- ``multimodal.py``   binary-column plumbing for image/audio payloads (PNG and
+                      JPEG decode for real; other formats get a status)
 """

@@ -18,8 +18,11 @@ Scale notes:
   shuffle on doc_id), band explode, bucket self-join (shuffle on the band
   signature — the whole point: candidate pairs only, never the full n²),
   verified by exact Jaccard on the candidates.
-- skew: identical boilerplate docs make hot LSH buckets; cap bucket width
-  via a count filter (documented drop, logged — "no silent caps").
+- skew: identical boilerplate docs make hot LSH buckets; ``_capped`` drops
+  any bucket wider than ``max_bucket`` (a documented under-report).
+- every LSH operator here and in ``similarity`` runs the same steps:
+  ``_capped`` → ``_bucket_pairs`` (bucket equi-join to distinct id pairs)
+  → an exact verify on the candidates.
 """
 from __future__ import annotations
 
@@ -32,7 +35,6 @@ from ..caching import track
 __all__ = [
     "exact_dedup",
     "shingles",
-    "minhash_signature",
     "minhash_lsh_pairs",
     "minhash_lsh_pairs_incremental",
     "ngram_jaccard_pairs",
@@ -90,25 +92,6 @@ def _shingle_stream(
     ).filter(F.length("shingle") > 0)
 
 
-def minhash_signature(
-    sh: DataFrame, num_hashes: int = 8
-) -> DataFrame:
-    """Per-doc minhash signature: ONE md5 per shingle, chunked into
-    ``num_hashes`` disjoint hex substrings; component s is the lexicographic
-    min over shingles of chunk s. One hash computation instead of
-    ``num_hashes`` (md5 over every shingle of a 100 TB corpus is the
-    dominant signature cost); md5-hex substrings compare identically in any
-    engine. num_hashes must divide 32 (the md5 hex width)."""
-    assert 32 % num_hashes == 0, "num_hashes must divide 32"
-    w = 32 // num_hashes
-    h = F.md5(F.col("shingle"))
-    aggs = [
-        F.min(F.substring(h, s * w + 1, w)).alias(f"mh{s}")
-        for s in range(num_hashes)
-    ]
-    return sh.groupBy("id").agg(*aggs)
-
-
 def _minhash_doc_table(
     docs: DataFrame, text_col: str, id_col: str, k: int, num_hashes: int
 ) -> DataFrame:
@@ -119,6 +102,11 @@ def _minhash_doc_table(
     pre-distinct pass) and the distinct-shingle array (unsorted — verify
     only takes array_intersect SIZES). Persisted: feeds the band table and
     both verify sides.
+
+    Signature: ONE md5 per shingle, chunked into ``num_hashes`` disjoint
+    hex substrings; component s is the lexicographic min over shingles of
+    chunk s. One hash instead of ``num_hashes`` per shingle, and md5-hex
+    substrings compare identically in any engine.
     """
     assert 32 % num_hashes == 0, "num_hashes must divide 32"
     w = 32 // num_hashes
@@ -157,6 +145,64 @@ def _band_rows(agg: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     return agg.select("id", band_col.alias("band"))
 
 
+def _capped(rows: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
+    """``rows`` minus every bucket (``keys``) holding more than
+    ``max_bucket`` rows — the skew guard: a boilerplate flood would make
+    one bucket an O(n²) task. A dropped bucket under-reports pairs, which
+    LSH recall tolerates."""
+    sizes = rows.groupBy(*keys).agg(F.count("*").alias("n"))
+    return rows.join(sizes.filter(F.col("n") <= max_bucket).select(*keys), keys)
+
+
+def _bucket_pairs(
+    a: DataFrame, b: DataFrame, keys: list[str], names: tuple[str, str]
+) -> DataFrame:
+    """Distinct (names[0], names[1]) id pairs sharing a bucket: the bucket
+    equi-join every LSH operator runs instead of the n² cross product.
+    Self-join callers add ``id_a < id_b``; Catalyst pushes it into the
+    join."""
+    return (
+        a.alias("a")
+        .join(b.alias("b"), keys)
+        .select(F.col("a.id").alias(names[0]), F.col("b.id").alias(names[1]))
+        .distinct()
+    )
+
+
+def _verified_jaccard(
+    cand: DataFrame,
+    agg_a: DataFrame,
+    agg_b: DataFrame,
+    names: tuple[str, str],
+    threshold: float,
+) -> DataFrame:
+    """Exact Jaccard on the candidate pairs only: join each side's
+    doc-level shingle array and intersect them per pair
+    (``F.array_intersect`` — O(na+nb) per candidate)."""
+    id_a, id_b = names
+    la = agg_a.select(
+        F.col("id").alias(id_a), F.col("shs").alias("sa"), F.col("n_sh").alias("na")
+    )
+    lb = agg_b.select(
+        F.col("id").alias(id_b), F.col("shs").alias("sb"), F.col("n_sh").alias("nb")
+    )
+    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
+    return (
+        cand.join(la, id_a)
+        .join(lb, id_b)
+        .withColumn("inter", inter)
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
+            ),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select(id_a, id_b, "jaccard")
+        .orderBy(id_a, id_b)
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -178,53 +224,22 @@ def minhash_lsh_pairs(
     Plan shape (the 100 TB concern): the exploded shingle stream shuffles
     exactly ONCE — a single groupBy(id) computes BOTH the minhash signature
     (min over duplicates == min over the set, so no pre-distinct pass) and
-    the sorted distinct-shingle array. Exact verification then joins the
-    candidate pairs against that doc-level table and intersects the two
-    arrays per pair (``F.array_intersect`` — O(na+nb) per candidate). The
-    earlier shape re-joined the full shingle table twice per candidate side
-    (a sort-merge join on (id, shingle) over the corpus — measured 61% of
-    the whole bench suite); this one touches only doc-level rows after the
+    the distinct-shingle array (unsorted: verify only needs intersection
+    sizes). Exact verification then joins the candidate pairs against that
+    doc-level table and intersects the two arrays per pair. The earlier
+    shape re-joined the full shingle table twice per candidate side (a
+    sort-merge join on (id, shingle) over the corpus — measured 61% of the
+    whole bench suite); this one touches only doc-level rows after the
     single agg. Trade-off: the per-doc shingle array is the same order of
     size as the document text itself — fine wherever the corpus itself fits
     the cluster.
     """
     agg = _minhash_doc_table(docs, text_col, id_col, k, num_hashes)
-    stacked = _band_rows(agg, num_hashes, bands)
-    # cap hot buckets (skew guard); a silent flood would O(n²) one task
-    sizes = stacked.groupBy("band").agg(F.count("*").alias("n"))
-    stacked = stacked.join(
-        sizes.filter(F.col("n") <= max_bucket).select("band"), "band", "inner"
+    stacked = _capped(_band_rows(agg, num_hashes, bands), ["band"], max_bucket)
+    cand = _bucket_pairs(stacked, stacked, ["band"], ("id_a", "id_b")).filter(
+        F.col("id_a") < F.col("id_b")
     )
-    a = stacked.alias("a")
-    b = stacked.alias("b")
-    cand = (
-        a.join(b, "band")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    # exact Jaccard on candidates only, via per-doc array intersection
-    la = agg.select(
-        F.col("id").alias("id_a"), F.col("shs").alias("sa"), F.col("n_sh").alias("na")
-    )
-    lb = agg.select(
-        F.col("id").alias("id_b"), F.col("shs").alias("sb"), F.col("n_sh").alias("nb")
-    )
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-    return (
-        cand.join(la, "id_a")
-        .join(lb, "id_b")
-        .withColumn("inter", inter)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-        .orderBy("id_a", "id_b")
-    )
+    return _verified_jaccard(cand, agg, agg, ("id_a", "id_b"), jaccard_threshold)
 
 
 def minhash_lsh_pairs_incremental(
@@ -239,53 +254,21 @@ def minhash_lsh_pairs_incremental(
     max_bucket: int = 50,
 ) -> DataFrame:
     """Dedup an incoming BATCH against an existing CORPUS — the shape a
-    daily ingestion pipeline actually runs: candidates come from an
-    equi-JOIN of the batch's band rows against the corpus band table,
-    never a corpus self-join, so the corpus-sized work is one (cached /
-    precomputed) band-table build instead of an all-corpus pairing per
-    batch. At 100 TB the corpus side's (id, band) table and doc-level
-    shingle arrays are persisted storage bucketed by band/id; a batch run
-    touches only matching buckets.
+    daily ingestion pipeline runs: candidates come from an equi-JOIN of the
+    batch's band rows against the corpus band rows, never a corpus
+    self-join. Each call still re-shingles and re-bands the whole corpus;
+    a persisted, band-bucketed corpus table is ROADMAP item 7.
 
     Returns (id_new, id_corpus, jaccard >= threshold), ordered.
     ``max_bucket`` caps the CORPUS side of each band bucket (boilerplate
-    floods); the batch side is assumed small.
+    floods); the batch side is assumed small and is never capped.
     """
     agg_new = _minhash_doc_table(new_docs, text_col, id_col, k, num_hashes)
     agg_cor = _minhash_doc_table(corpus_docs, text_col, id_col, k, num_hashes)
-    sn = _band_rows(agg_new, num_hashes, bands)
-    sc = _band_rows(agg_cor, num_hashes, bands)
-    sizes = sc.groupBy("band").agg(F.count("*").alias("n"))
-    sc = sc.join(sizes.filter(F.col("n") <= max_bucket).select("band"), "band")
-    cand = (
-        sn.alias("n")
-        .join(sc.alias("c"), "band")
-        .select(F.col("n.id").alias("id_new"), F.col("c.id").alias("id_corpus"))
-        .distinct()
-    )
-    ln = agg_new.select(
-        F.col("id").alias("id_new"), F.col("shs").alias("sa"), F.col("n_sh").alias("na")
-    )
-    lc = agg_cor.select(
-        F.col("id").alias("id_corpus"),
-        F.col("shs").alias("sb"),
-        F.col("n_sh").alias("nb"),
-    )
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-    return (
-        cand.join(ln, "id_new")
-        .join(lc, "id_corpus")
-        .withColumn("inter", inter)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_new", "id_corpus", "jaccard")
-        .orderBy("id_new", "id_corpus")
-    )
+    sc = _capped(_band_rows(agg_cor, num_hashes, bands), ["band"], max_bucket)
+    names = ("id_new", "id_corpus")
+    cand = _bucket_pairs(_band_rows(agg_new, num_hashes, bands), sc, ["band"], names)
+    return _verified_jaccard(cand, agg_new, agg_cor, names, jaccard_threshold)
 
 
 def decontamination_hits(
@@ -488,18 +471,10 @@ def simhash_hamming_pairs(
             "band_idx", "band_val"
         ),
     )
-    sizes = bands.groupBy("band_idx", "band_val").agg(F.count("*").alias("n"))
-    bands = bands.join(
-        sizes.filter(F.col("n") <= max_bucket).select("band_idx", "band_val"),
-        ["band_idx", "band_val"],
-        "inner",
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+    keys = ["band_idx", "band_val"]
+    bands = _capped(bands, keys, max_bucket)
+    cand = _bucket_pairs(bands, bands, keys, ("id_a", "id_b")).filter(
+        F.col("id_a") < F.col("id_b")
     )
     ca = ch.select(*[F.col(c).alias(f"a_{c}") for c in ch.columns])
     cb = ch.select(*[F.col(c).alias(f"b_{c}") for c in ch.columns])

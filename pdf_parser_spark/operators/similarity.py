@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..caching import track
+from .dedup import _bucket_pairs, _capped
 
 __all__ = [
     "cosine_topk",
@@ -32,7 +33,6 @@ __all__ = [
     "ivf_assign",
     "ivf_probe_topk",
     "ivf_train",
-    "ivf_train_step",
 ]
 
 
@@ -54,6 +54,22 @@ def _norm(a):
     )
 
 
+def _cosine(a, b):
+    """Cosine of two array columns, each sum a sequential fold, rounded to
+    6 — the score every operator here reports and the oracles mirror."""
+    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6)
+
+
+def _top_by_cosine(cand: DataFrame, id_col: str, vec_col: str, k: int) -> DataFrame:
+    """The ``k`` candidates nearest their ``qvec`` by cosine, ties to the
+    lower id — the last step of every top-k search here."""
+    return (
+        cand.select(F.col(id_col), _cosine(F.col(vec_col), F.col("qvec")).alias("cosine"))
+        .orderBy(F.desc("cosine"), F.asc(id_col))
+        .limit(k)
+    )
+
+
 def cosine_topk(
     embeddings: DataFrame,
     query_id: int = 0,
@@ -70,19 +86,8 @@ def cosine_topk(
     q = embeddings.filter(F.col(id_col) == query_id).select(
         F.col(vec_col).alias("qvec")
     )
-    scored = (
-        embeddings.filter(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col),
-            F.round(
-                _dot(F.col(vec_col), F.col("qvec"))
-                / (_norm(F.col(vec_col)) * _norm(F.col("qvec"))),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    cand = embeddings.filter(F.col(id_col) != query_id).crossJoin(F.broadcast(q))
+    return _top_by_cosine(cand, id_col, vec_col, k)
 
 
 def srp_bucket(vec_col, planes: int, dims: int, plane_offset: int = 0):
@@ -101,12 +106,7 @@ def srp_bucket(vec_col, planes: int, dims: int, plane_offset: int = 0):
                 for d in range(dims)
             ]
         )
-        proj = F.aggregate(
-            F.zip_with(vec_col, signs, lambda x, s: x.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
+        bits.append(F.when(_dot(vec_col, signs) >= 0, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*bits)
 
 
@@ -131,7 +131,7 @@ def with_srp_buckets(
     a batched float64 recurrence that is BIT-IDENTICAL to the sequential
     fold (see ``kernels.vectors.srp_bits_batch``), so the DuckDB oracles and
     the HOF reference implementation agree exactly (pinned by
-    tests/test_similarity.py::test_srp_kernel_matches_hof).
+    tests/test_entry_and_operators.py::test_srp_kernel_matches_hof).
 
     Scale shape: narrow map, no shuffle, no state — the bucket column lands
     before any exchange, so at 100 TB this is scan-speed Arrow batches.
@@ -188,15 +188,7 @@ def ann_lsh_topk(
     cand = bucketed.join(
         F.broadcast(q), F.col("bucket") == F.col("qbucket"), "inner"
     ).filter(F.col(id_col) != query_id)
-    scored = cand.select(
-        F.col(id_col),
-        F.round(
-            _dot(F.col(vec_col), F.col("qvec"))
-            / (_norm(F.col(vec_col)) * _norm(F.col("qvec"))),
-            6,
-        ).alias("cosine"),
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    return _top_by_cosine(cand, id_col, vec_col, k)
 
 
 def _l2sq(a, b):
@@ -207,6 +199,28 @@ def _l2sq(a, b):
         ),
         F.lit(0.0),
         lambda acc, v: acc + v,
+    )
+
+
+def _nearest_cell(
+    e: DataFrame,
+    cents: DataFrame,
+    id_col: str,
+    vec_col: str,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """(id, *keep, cell, l2sq): each row's nearest of the (cell, cvec)
+    centroids — broadcast the k centroids, cross-join, argmin by a window
+    over l2sq rounded to 6 (ties to the lower cell). Shared by ivf_assign
+    and every ivf_train round."""
+    d = F.round(_l2sq(F.col(vec_col), F.col("cvec")), 6)
+    w = Window.partitionBy(id_col).orderBy(F.asc("l2sq"), F.asc("cell"))
+    return (
+        e.crossJoin(F.broadcast(cents))
+        .select(F.col(id_col), *keep, F.col("cell"), d.alias("l2sq"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
     )
 
 
@@ -227,16 +241,7 @@ def ivf_assign(
     cents = embeddings.filter(F.col(id_col) < n_cells).select(
         F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec")
     )
-    d = F.round(_l2sq(F.col(vec_col), F.col("cvec")), 6)
-    w = Window.partitionBy(id_col).orderBy(F.asc("l2sq"), F.asc("cell"))
-    return (
-        embeddings.crossJoin(F.broadcast(cents))
-        .select(F.col(id_col), F.col("cell"), d.alias("l2sq"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-        .orderBy(id_col)
-    )
+    return _nearest_cell(embeddings, cents, id_col, vec_col).orderBy(id_col)
 
 
 def ivf_train(
@@ -249,9 +254,9 @@ def ivf_train(
     """Lloyd's iterations for the IVF coarse quantizer — the iterative-
     algorithm shape expressed as a driver loop over DataFrame ops.
 
-    Each iteration is EXACTLY one ``ivf_train_step``: broadcast the k
-    centroids → argmin assignment (l2sq rounded to 6, window, ties to lower
-    cell) → posexplode to (cell, dim, component) → EXACT fixed-point mean
+    Each iteration: broadcast the k centroids → argmin assignment
+    (``_nearest_cell``, shared with ivf_assign; ties to lower cell) →
+    posexplode to (cell, dim, component) → EXACT fixed-point mean
     (components scaled to 1e-6 ints, summed as BIGINT — no float-sum order
     sensitivity across partitions) → collect the k×dims (ssum, n) table to
     the driver (tiny — the ONLY driver-side data movement; the corpus never
@@ -261,11 +266,10 @@ def ivf_train(
     Returns (cell, n_members, centroid_norm) where n_members counts the
     FINAL iteration's assignment — the E-step that produced the final
     M-step — and centroid_norm is the final updated centroid's norm (the
-    per-dim means folded sequentially in dim order, like ivf_train_step).
-    ``n_iters=1`` is bit-identical to ``ivf_train_step``. Because every
-    round is deterministic fixed-point, a fixed ``n_iters`` unrolls
-    mechanically into chained ANSI CTE blocks of the ivf_train_step
-    template — the full SQL oracle lives in __spark_entry__._ivf_train_sql.
+    per-dim means folded sequentially in dim order). Because every round is
+    deterministic fixed-point, a fixed ``n_iters`` unrolls mechanically into
+    chained ANSI CTE blocks, one per round — the full SQL oracle lives in
+    __spark_entry__._ivf_train_sql.
 
     ONE broadcast-argmin pass per iteration: member counts ride along the
     mean-update aggregation (n is constant across a cell's dims), so no
@@ -282,15 +286,8 @@ def ivf_train(
     ]
     members: dict[int, int] = {}
     for _ in range(n_iters):
-        cent_df = e.sparkSession.createDataFrame(cents, "cell int, cv array<double>")
-        d = F.round(_l2sq(F.col("v"), F.col("cv")), 6)
-        w = Window.partitionBy("id").orderBy(F.asc("l2sq"), F.asc("cell"))
-        assign = (
-            e.crossJoin(F.broadcast(cent_df))
-            .select("id", "v", "cell", d.alias("l2sq"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-        )
+        cent_df = e.sparkSession.createDataFrame(cents, "cell int, cvec array<double>")
+        assign = _nearest_cell(e, cent_df, "id", "v", keep=("v",))
         sums = (
             assign.select("cell", F.posexplode("v").alias("dim", "x"))
             .select(
@@ -312,9 +309,9 @@ def ivf_train(
             for c, cv in cents
         ]
     # summary over the k-row centroid table only — n_members already known
-    # from the last iteration's sums; the norm uses the SAME JVM sequential
-    # fold + round as ivf_train_step so rounding matches the SQL oracle
-    # bit-for-bit (Python round() is half-even; SQL round is half-up)
+    # from the last iteration's sums; the norm is a JVM sequential fold +
+    # round so rounding matches the SQL oracle bit-for-bit (Python round()
+    # is half-even; SQL round is half-up)
     final = e.sparkSession.createDataFrame(
         [(c, cv, members[c]) for c, cv in cents if c in members],
         "cell int, cv array<double>, n_members long",
@@ -367,17 +364,50 @@ def ivf_probe_topk(
     cand = e.join(F.broadcast(q), F.col("cell") == F.col("qcell")).filter(
         F.col(id_col) != query_id
     )
+    return _top_by_cosine(cand, id_col, vec_col, k)
+
+
+def _srp_bands(
+    df: DataFrame, id_col: str, vec_col: str, planes: int, n_tables: int, dims: int
+) -> tuple[DataFrame, DataFrame]:
+    """(vectors, bucket rows): the persisted (id, v, b0..) table with one
+    SRP bucket column per plane family, and its (id, t, bucket) explode.
+
+    Persisted WITH the bucket columns materialized: the bucket rows feed the
+    cap, both join sides and both verify sides, plus the final orderBy's
+    range-sampling pass — unpersisted, the bucket kernel's Arrow crossing
+    re-executes ~8x."""
+    e = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    e = track(with_srp_buckets(
+        e, "v", [(f"b{t}", planes, t * planes) for t in range(n_tables)], dims
+    ).persist())
+    stacked = e.select(
+        "id",
+        F.posexplode(F.array(*[F.col(f"b{t}") for t in range(n_tables)])).alias(
+            "t", "bucket"
+        ),
+    )
+    return e, stacked
+
+
+def _verified_cosine(
+    cand: DataFrame,
+    ea: DataFrame,
+    eb: DataFrame,
+    names: tuple[str, str],
+    threshold: float,
+) -> DataFrame:
+    """Exact cosine on the candidate pairs only: join each side's vector
+    and keep pairs at or above ``threshold``."""
+    id_a, id_b = names
+    la = ea.select(F.col("id").alias(id_a), F.col("v").alias("va"))
+    lb = eb.select(F.col("id").alias(id_b), F.col("v").alias("vb"))
     return (
-        cand.select(
-            F.col(id_col),
-            F.round(
-                _dot(F.col(vec_col), F.col("qvec"))
-                / (_norm(F.col(vec_col)) * _norm(F.col("qvec"))),
-                6,
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
+        cand.join(la, id_a)
+        .join(lb, id_b)
+        .select(id_a, id_b, _cosine(F.col("va"), F.col("vb")).alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
+        .orderBy(id_a, id_b)
     )
 
 
@@ -407,51 +437,13 @@ def embedding_near_dup_pairs(
     ``max_bucket`` caps degenerate buckets (e.g. zero-vector floods) like
     minhash's skew guard. Exact cosine verifies candidates only.
     """
-    e = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    # persist WITH the bucket columns materialized: the plan consumes the
-    # bucketed rows from four sub-plans (sizes, both self-join sides, both
-    # verify sides) plus the final orderBy's range-sampling pass — without
-    # this persist the bucket kernel's Arrow crossing re-executes ~8x.
-    # Buckets come from the vectorized numpy kernel (one mapInPandas pass,
-    # bit-identical to the old HOF folds — see kernels.vectors).
-    e = track(with_srp_buckets(
-        e, "v", [(f"b{t}", planes, t * planes) for t in range(n_tables)], dims
-    ).persist())
-    stacked = e.select(
-        "id",
-        F.posexplode(F.array(*[F.col(f"b{t}") for t in range(n_tables)])).alias(
-            "t", "bucket"
-        ),
+    e, stacked = _srp_bands(embeddings, id_col, vec_col, planes, n_tables, dims)
+    keys = ["t", "bucket"]
+    stacked = _capped(stacked, keys, max_bucket)
+    cand = _bucket_pairs(stacked, stacked, keys, ("id_a", "id_b")).filter(
+        F.col("id_a") < F.col("id_b")
     )
-    sizes = stacked.groupBy("t", "bucket").agg(F.count("*").alias("n"))
-    stacked = stacked.join(
-        sizes.filter(F.col("n") <= max_bucket).select("t", "bucket"),
-        ["t", "bucket"],
-        "inner",
-    )
-    a, b = stacked.alias("a"), stacked.alias("b")
-    cand = (
-        a.join(b, ["t", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    la = e.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
-    lb = e.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
-    return (
-        cand.join(la, "id_a")
-        .join(lb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb"))),
-                6,
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .orderBy("id_a", "id_b")
-    )
+    return _verified_cosine(cand, e, e, ("id_a", "id_b"), threshold)
 
 
 def embedding_near_dup_incremental(
@@ -468,123 +460,15 @@ def embedding_near_dup_incremental(
     """Near-dup an incoming embedding BATCH against an existing CORPUS —
     the ANN counterpart of ``minhash_lsh_pairs_incremental``: candidates
     come from an equi-join of the batch's SRP bucket rows against the
-    corpus bucket table (per plane family), never a corpus self-join. At
-    100 TB the corpus's (table, bucket) rows are precomputed and
-    partitioned by bucket, so a batch run is partition-pruned bucket
-    lookups + exact cosine on the candidates. ``max_bucket`` caps the
-    CORPUS side of each bucket. Returns (id_new, id_corpus, cosine).
+    corpus bucket rows (per plane family), never a corpus self-join, then
+    exact cosine on the candidates. Each call still re-buckets the whole
+    corpus; a persisted, bucket-partitioned corpus table is ROADMAP item 7.
+    ``max_bucket`` caps the CORPUS side of each bucket only. Returns
+    (id_new, id_corpus, cosine).
     """
-    specs = [(f"b{t}", planes, t * planes) for t in range(n_tables)]
-
-    def bucketed(df):
-        e = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        b = track(with_srp_buckets(e, "v", specs, dims).persist())
-        stacked = b.select(
-            "id",
-            F.posexplode(F.array(*[F.col(f"b{t}") for t in range(n_tables)])).alias(
-                "t", "bucket"
-            ),
-        )
-        return b, stacked
-
-    bn, sn = bucketed(new_embeddings)
-    bc, sc = bucketed(corpus_embeddings)
-    sizes = sc.groupBy("t", "bucket").agg(F.count("*").alias("n"))
-    sc = sc.join(
-        sizes.filter(F.col("n") <= max_bucket).select("t", "bucket"), ["t", "bucket"]
-    )
-    cand = (
-        sn.alias("n")
-        .join(sc.alias("c"), ["t", "bucket"])
-        .select(F.col("n.id").alias("id_new"), F.col("c.id").alias("id_corpus"))
-        .distinct()
-    )
-    ln = bn.select(F.col("id").alias("id_new"), F.col("v").alias("va"))
-    lc = bc.select(F.col("id").alias("id_corpus"), F.col("v").alias("vb"))
-    return (
-        cand.join(ln, "id_new")
-        .join(lc, "id_corpus")
-        .select(
-            "id_new",
-            "id_corpus",
-            F.round(
-                _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb"))),
-                6,
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .orderBy("id_new", "id_corpus")
-    )
-
-
-def ivf_train_step(
-    embeddings: DataFrame,
-    n_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ONE Lloyd iteration, fully declarative — the single-round k-means
-    update IS one ANSI query, so unlike the multi-round driver loop
-    (``ivf_train``) this operator carries a full SQL oracle.
-
-    Seed centroids = vectors with id < n_cells (same deterministic init as
-    ivf_assign); assignment = broadcast-centroid argmin; the updated
-    centroid mean is computed in EXACT fixed-point (components scaled to
-    1e-6 ints, summed as BIGINT — no float-sum order sensitivity across
-    partitions), then the norm folds the per-dim means in dim order
-    sequentially on both engines. Returns (cell, n_members, centroid_norm)
-    for the post-update model.
-    """
-    e = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
-    )
-    cents = e.filter(F.col("id") < n_cells).select(
-        F.col("id").alias("cell"), F.col("v").alias("cv")
-    )
-    d = F.round(_l2sq(F.col("v"), F.col("cv")), 6)
-    w = Window.partitionBy("id").orderBy(F.asc("l2sq"), F.asc("cell"))
-    from pyspark import StorageLevel
-
-    # assign feeds two sub-plans (the mean update and the member counts);
-    # persist or the broadcast-argmin pass runs twice (no cross-branch CSE)
-    assign = (
-        e.crossJoin(F.broadcast(cents))
-        .select("id", "v", "cell", d.alias("l2sq"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    assign = track(assign)
-    comp = assign.select(
-        "cell",
-        F.posexplode("v").alias("dim", "x"),
-    ).select("cell", "dim", F.round(F.col("x") * 1000000).cast("long").alias("sx"))
-    sums = comp.groupBy("cell", "dim").agg(
-        F.sum("sx").alias("ssum"), F.count("*").alias("n")
-    )
-    m = sums.select(
-        "cell", "dim", (F.col("ssum") / (F.col("n") * 1000000.0)).alias("md")
-    )
-    norms = (
-        m.groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "md"))), lambda s: s["md"]
-            ).alias("mds")
-        )
-        .select(
-            "cell",
-            F.round(
-                F.sqrt(
-                    F.aggregate(
-                        F.transform("mds", lambda x: x * x),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    )
-                ),
-                6,
-            ).alias("centroid_norm"),
-        )
-    )
-    members = assign.groupBy("cell").agg(F.count("*").cast("long").alias("n_members"))
-    return members.join(norms, "cell").orderBy("cell")
+    bn, sn = _srp_bands(new_embeddings, id_col, vec_col, planes, n_tables, dims)
+    bc, sc = _srp_bands(corpus_embeddings, id_col, vec_col, planes, n_tables, dims)
+    keys = ["t", "bucket"]
+    names = ("id_new", "id_corpus")
+    cand = _bucket_pairs(sn, _capped(sc, keys, max_bucket), keys, names)
+    return _verified_cosine(cand, bn, bc, names, threshold)

@@ -36,6 +36,14 @@ def test_queries_and_oracles_aligned():
     assert set(oracles) <= set(qs)
     # every registered query is callable
     assert all(callable(f) for f in qs.values())
+    # every module-level q_* is registered: an entry left out of queries()
+    # has no oracle and no caller
+    defined = {
+        f for n, f in vars(entrymod).items() if n.startswith("q_") and callable(f)
+    }
+    assert defined <= set(qs.values()), sorted(
+        f.__name__ for f in defined - set(qs.values())
+    )
 
 
 def test_nms_filter_matches_numpy_golden(spark):
@@ -371,6 +379,61 @@ def test_srp_banding_shrinks_buckets(spark):
 
     m4, m6 = max_bucket(4), max_bucket(6)
     assert m6 < m4 * 0.6, (m4, m6)
+
+
+def test_lsh_bucket_cap_drops_floods_only(spark):
+    """``max_bucket`` in all five LSH operators: a flood of identical
+    docs/vectors fills its buckets past the cap, so its pairs are dropped,
+    while a normal near-dup pair in small buckets survives. The incremental
+    operators cap only the corpus side: a flooded batch still pairs with
+    its corpus original. The registry's data never reaches the cap except
+    in simhash, so this is the only check of the cap for the other four."""
+    from pdf_parser_spark.operators import similarity
+
+    flood, cap = 8, 5
+    flood_ids = range(100, 100 + flood)
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    def vecs(rows):
+        return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def pairs(df):
+        return {(r[0], r[1]) for r in df.collect()}
+
+    words = [f"a{i}" for i in range(40)]
+    a, a2 = " ".join(words), " ".join(words[:-1] + ["zz"])  # one word changed
+    x, y = (" ".join(f"{p}{i}" for i in range(40)) for p in "xy")
+    self_docs = docs([(1, a), (2, a2)] + [(i, y) for i in flood_ids])
+    new_docs = docs([(2, a2), (3, y)] + [(i, x) for i in flood_ids])
+    corpus_docs = docs([(1, a), (9, x)] + [(i, y) for i in range(200, 200 + flood)])
+
+    dims = 16
+    va = [float(d % 5) - 2.0 + 0.1 * d for d in range(dims)]
+    va2 = [va[0] + 0.01] + va[1:]
+    vx = [float((d * 7) % 3) - 1.0 for d in range(dims)]
+    vy = [(-1.0) ** d * (1 + d) for d in range(dims)]
+    self_vecs = vecs([(1, va), (2, va2)] + [(i, vy) for i in flood_ids])
+    new_vecs = vecs([(2, va2), (3, vy)] + [(i, vx) for i in flood_ids])
+    corpus_vecs = vecs([(1, va), (9, vx)] + [(i, vy) for i in range(200, 200 + flood)])
+
+    # self-join operators: the flood's C(8, 2) pairs are gone, (1, 2) stays
+    assert pairs(dedup.minhash_lsh_pairs(self_docs, max_bucket=cap)) == {(1, 2)}
+    assert pairs(dedup.simhash_hamming_pairs(self_docs, max_bucket=cap)) == {(1, 2)}
+    assert pairs(
+        similarity.embedding_near_dup_pairs(self_vecs, dims=dims, max_bucket=cap)
+    ) == {(1, 2)}
+    # incremental: the corpus flood (y) is capped, the batch flood (x) is not
+    want = {(2, 1)} | {(i, 9) for i in flood_ids}
+    assert pairs(
+        dedup.minhash_lsh_pairs_incremental(new_docs, corpus_docs, max_bucket=cap)
+    ) == want
+    assert pairs(
+        similarity.embedding_near_dup_incremental(
+            new_vecs, corpus_vecs, dims=dims, max_bucket=cap
+        )
+    ) == want
 
 
 def test_srp_kernel_matches_hof(spark):

@@ -139,10 +139,11 @@ def test_embedding_near_dup_buckets_computed_once(spark):
 
 def test_ivf_broadcasts_centroids(spark):
     """IVF assignment must broadcast the k centroids, never shuffle or
-    cartesian the corpus side."""
+    cartesian the corpus side. Both entries run the shared
+    ``_nearest_cell`` argmin."""
     import __spark_entry__ as em
 
-    for q in (em.q_ivf_assign, em.q_ivf_train_step):
+    for q in (em.q_ivf_assign, em.q_ivf_probe2_topk):
         plan = physical_plan(q(spark, SF))
         assert "BroadcastNestedLoopJoin" in plan, q
         assert "CartesianProduct" not in plan, q
