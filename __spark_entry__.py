@@ -778,7 +778,7 @@ def q_embedding_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 def q_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF coarse quantization (broadcast-join argmin over 8 centroids)."""
+    """IVF coarse quantization (in-row argmin over 8 broadcast centroids)."""
     return similarity.ivf_assign(_t(spark, sf_dir, "embeddings"), n_cells=8)
 
 
@@ -791,9 +791,9 @@ def q_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ivf_probe2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF probe with nprobe=2 — the recall knob: scan the two cells whose
+    """IVF probe with nprobe=2 — the recall knob: score the two cells whose
     centroids are nearest the query instead of one, recovering boundary
-    neighbors at 2x the (cell-sized) scan cost."""
+    neighbors at 2x the (cell-sized) scoring cost."""
     return similarity.ivf_probe_topk(
         _t(spark, sf_dir, "embeddings"), query_id=0, k=10, n_cells=8, nprobe=2
     )

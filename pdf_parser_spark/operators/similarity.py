@@ -16,7 +16,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -202,26 +202,26 @@ def _l2sq(a, b):
     )
 
 
-def _nearest_cell(
-    e: DataFrame,
-    cents: DataFrame,
-    id_col: str,
-    vec_col: str,
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
-    """(id, *keep, cell, l2sq): each row's nearest of the (cell, cvec)
-    centroids — broadcast the k centroids, cross-join, argmin by a window
-    over l2sq rounded to 6 (ties to the lower cell). Shared by ivf_assign
-    and every ivf_train round."""
-    d = F.round(_l2sq(F.col(vec_col), F.col("cvec")), 6)
-    w = Window.partitionBy(id_col).orderBy(F.asc("l2sq"), F.asc("cell"))
-    return (
-        e.crossJoin(F.broadcast(cents))
-        .select(F.col(id_col), *keep, F.col("cell"), d.alias("l2sq"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
+def _ranked_cells(vec, cents):
+    """(l2sq, cell) of ``vec`` to each (cell, cvec) in ``cents``, nearest
+    first and ties to the lower cell (struct order) — computed in the row,
+    so the argmin needs no shuffle."""
+    return F.array_sort(
+        F.transform(
+            cents,
+            lambda c: F.struct(
+                F.round(_l2sq(vec, c["cvec"]), 6).alias("l2sq"),
+                c["cell"].alias("cell"),
+            ),
+        )
     )
+
+
+def _centroids(e: DataFrame, n_cells: int, id_col: str, vec_col: str) -> DataFrame:
+    """One row ``cents`` of (cell, cvec) seeds: the embeddings of ids
+    0..n_cells-1 (the k-means++-free degenerate init)."""
+    cent = F.struct(F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec"))
+    return e.filter(F.col(id_col) < n_cells).agg(F.collect_list(cent).alias("cents"))
 
 
 def ivf_assign(
@@ -232,16 +232,19 @@ def ivf_assign(
 ) -> DataFrame:
     """IVF coarse quantization: assign every vector to its nearest centroid.
 
-    Deterministic centroid seeding: the embeddings of ids 0..n_cells-1 (the
-    k-means++-free degenerate init; a production index would run Lloyd's
-    iterations on top — the assignment operator below is the piece that runs
-    per-row over 100 TB and must be a broadcast join + argmin, never a
-    shuffle). Ties break to the lower cell id. Returns (id, cell, l2sq).
+    The seed centroids (``_centroids``; a production index would run
+    Lloyd's iterations on top, see ``ivf_train``) are one broadcast row;
+    each vector's cell is element 0 of ``_ranked_cells``, computed inside
+    its own row — a narrow map over the corpus, no shuffle before the
+    final sort. Ties break to the lower cell id. Returns (id, cell, l2sq).
     """
-    cents = embeddings.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec")
+    cents = F.broadcast(_centroids(embeddings, n_cells, id_col, vec_col))
+    return (
+        embeddings.crossJoin(cents)
+        .select(id_col, _ranked_cells(F.col(vec_col), F.col("cents"))[0].alias("m"))
+        .select(id_col, "m.cell", "m.l2sq")
+        .orderBy(id_col)
     )
-    return _nearest_cell(embeddings, cents, id_col, vec_col).orderBy(id_col)
 
 
 def ivf_train(
@@ -254,8 +257,8 @@ def ivf_train(
     """Lloyd's iterations for the IVF coarse quantizer — the iterative-
     algorithm shape expressed as a driver loop over DataFrame ops.
 
-    Each iteration: broadcast the k centroids → argmin assignment
-    (``_nearest_cell``, shared with ivf_assign; ties to lower cell) →
+    Each iteration: broadcast the k centroids → in-row argmin
+    (``_ranked_cells``, shared with ivf_assign; ties to lower cell) →
     posexplode to (cell, dim, component) → EXACT fixed-point mean
     (components scaled to 1e-6 ints, summed as BIGINT — no float-sum order
     sensitivity across partitions) → collect the k×dims (ssum, n) table to
@@ -271,7 +274,7 @@ def ivf_train(
     chained ANSI CTE blocks, one per round — the full SQL oracle lives in
     __spark_entry__._ivf_train_sql.
 
-    ONE broadcast-argmin pass per iteration: member counts ride along the
+    ONE argmin pass per iteration: member counts ride along the
     mean-update aggregation (n is constant across a cell's dims), so no
     post-loop corpus pass re-derives them.
     """
@@ -286,8 +289,13 @@ def ivf_train(
     ]
     members: dict[int, int] = {}
     for _ in range(n_iters):
-        cent_df = e.sparkSession.createDataFrame(cents, "cell int, cvec array<double>")
-        assign = _nearest_cell(e, cent_df, "id", "v", keep=("v",))
+        cent_df = e.sparkSession.createDataFrame(
+            [(cents,)], "cents array<struct<cell: int, cvec: array<double>>>"
+        )
+        # project cell before posexplode; beside it, it re-runs per (vector, dim) row
+        assign = e.crossJoin(F.broadcast(cent_df)).select(
+            "v", _ranked_cells(F.col("v"), F.col("cents"))[0]["cell"].alias("cell")
+        )
         sums = (
             assign.select("cell", F.posexplode("v").alias("dim", "x"))
             .select(
@@ -333,36 +341,23 @@ def ivf_probe_topk(
     """IVF probe: score only vectors in the ``nprobe`` cells whose
     centroids are nearest the query (ties to the lower cell id).
 
-    At scale the table is partitioned by cell, so a probe is partition
-    pruning + a small scan instead of a corpus pass; this is the IVF
-    counterpart of the SRP-LSH bucket probe (ann_lsh_topk). ``nprobe`` is
-    THE IVF recall knob: a query near a cell boundary misses neighbors
-    assigned to the adjacent cell at nprobe=1; probing the next-nearest
-    cells recovers them at nprobe x the scan cost — still cells/nprobe
-    times cheaper than the corpus pass.
+    One broadcast row carries the centroids and the query's first
+    ``nprobe`` cells of ``_ranked_cells``; each probe still ranks every
+    row's cell in the row (a table partitioned by cell, read only for the
+    probed cells, is future work). The IVF counterpart of the SRP-LSH bucket
+    probe (ann_lsh_topk). ``nprobe`` is THE IVF recall knob: a query near a
+    cell boundary misses neighbors assigned to the adjacent cell at
+    nprobe=1; probing the next-nearest cells recovers them.
     """
-    assign = ivf_assign(embeddings, n_cells, id_col, vec_col).select(id_col, "cell")
-    e = embeddings.join(assign, id_col)
-    cents = embeddings.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).alias("qcell"), F.col(vec_col).alias("cvec")
-    )
-    qv = embeddings.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("qvec")
-    )
-    # rank the k centroids by distance to the query; tiny (n_cells rows,
-    # broadcast both ways), so the "which partitions to read" decision
-    # costs nothing
     q = (
-        qv.crossJoin(F.broadcast(cents))
-        .select(
-            "qvec", "qcell", F.round(_l2sq(F.col("qvec"), F.col("cvec")), 6).alias("qd")
-        )
-        .orderBy(F.asc("qd"), F.asc("qcell"))
-        .limit(nprobe)
-        .select("qvec", "qcell")
+        embeddings.filter(F.col(id_col) == query_id)
+        .select(F.col(vec_col).alias("qvec"))
+        .crossJoin(F.broadcast(_centroids(embeddings, n_cells, id_col, vec_col)))
     )
-    cand = e.join(F.broadcast(q), F.col("cell") == F.col("qcell")).filter(
-        F.col(id_col) != query_id
+    qcells = F.slice(_ranked_cells(F.col("qvec"), F.col("cents")), 1, nprobe)["cell"]
+    cell = _ranked_cells(F.col(vec_col), F.col("cents"))[0]["cell"]
+    cand = embeddings.crossJoin(F.broadcast(q.withColumn("qcells", qcells))).filter(
+        (F.col(id_col) != query_id) & F.array_contains("qcells", cell)
     )
     return _top_by_cosine(cand, id_col, vec_col, k)
 

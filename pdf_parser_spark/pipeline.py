@@ -274,7 +274,9 @@ def _input_bytes(path: str) -> int:
     cannot stat). Callers must treat unknown as *large*: the r04 verdict's
     one scale hazard was this function returning 0 for object-store paths,
     which flipped ``plan_scan`` into salting — a full-payload shuffle of the
-    100 TB corpus at exactly the scale where the salt must never fire."""
+    100 TB corpus at exactly the scale where the salt must never fire.
+    Like Spark's file index it skips ``_``/``.`` files and directories
+    (``_temporary/``, ``.hidden/``)."""
     m = _URI_SCHEME_RE.match(path)
     if m:
         if m.group(1).lower() != "file":
@@ -287,7 +289,8 @@ def _input_bytes(path: str) -> int:
     if not os.path.isdir(path):
         return -1
     total = 0
-    for root, _, files in os.walk(path):
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for name in files:
             if not name.startswith(("_", ".")):
                 total += os.path.getsize(os.path.join(root, name))

@@ -229,6 +229,31 @@ def test_ivf_train_invariants(spark):
     assert (out["centroid_norm"] > 0).all() and out["centroid_norm"].notna().all()
 
 
+def test_ivf_ties_go_to_the_lower_cell(spark):
+    """Cells 0 and 1 are seeded from the same vector, and id 3 is exactly
+    equidistant from cells 0 and 2: every tie goes to the lower cell, in
+    assignment, in the probe's ranking of the query's cells and in every
+    training round, so cell 1 never gets a member."""
+    from pdf_parser_spark.operators.similarity import (
+        ivf_assign,
+        ivf_probe_topk,
+        ivf_train,
+    )
+
+    vecs = [(1.0, 0.0), (1.0, 0.0), (0.0, 1.0), (0.5, 0.5), (1.5, -0.5), (0.2, 2.0)]
+    emb = spark.createDataFrame(
+        [(i, list(v)) for i, v in enumerate(vecs)], "vec_id long, embedding array<float>"
+    )
+    assigned = [tuple(r) for r in ivf_assign(emb, n_cells=3).collect()]
+    assert assigned == [
+        (0, 0, 0.0), (1, 0, 0.0), (2, 2, 0.0), (3, 0, 0.5), (4, 0, 0.5), (5, 2, 1.04)
+    ]
+    probed = ivf_probe_topk(emb, query_id=4, k=5, n_cells=3, nprobe=1).collect()
+    assert [r["vec_id"] for r in probed] == [0, 1, 3]
+    trained = ivf_train(emb, n_cells=3, n_iters=2).collect()
+    assert [(r["cell"], r["n_members"]) for r in trained] == [(0, 4), (2, 2)]
+
+
 def test_minhash_finds_truncated_copies(spark):
     docs = spark.read.parquet(os.path.join(SF, "documents.parquet")).select(
         "doc_id", "text"

@@ -139,14 +139,15 @@ def test_embedding_near_dup_buckets_computed_once(spark):
 
 def test_ivf_broadcasts_centroids(spark):
     """IVF assignment must broadcast the k centroids, never shuffle or
-    cartesian the corpus side. Both entries run the shared
-    ``_nearest_cell`` argmin."""
+    cartesian the corpus side. Both entries take each row's argmin inside
+    the row (``_ranked_cells``), so no Window re-partitions the corpus."""
     import __spark_entry__ as em
 
     for q in (em.q_ivf_assign, em.q_ivf_probe2_topk):
         plan = physical_plan(q(spark, SF))
         assert "BroadcastNestedLoopJoin" in plan, q
         assert "CartesianProduct" not in plan, q
+        assert "Window" not in plan, q
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
@@ -298,6 +299,19 @@ def test_scan_plan_object_store_paths_never_salt():
     import os
     split, salt = scan_plan("file://" + os.path.join(SF, "documents.parquet"), 1)
     assert salt is False and split >= 4 * 1024 * 1024
+
+
+def test_input_bytes_skips_dirs_spark_never_reads(tmp_path):
+    """Spark's file index skips ``_``/``.`` directories such as a failed
+    job's ``_temporary/``; counting their bytes would skew scan_plan's
+    split and salt decisions."""
+    from pdf_parser_spark.pipeline import _input_bytes
+
+    (tmp_path / "part-0.parquet").write_bytes(b"x" * 1000)
+    for sub, size in (("_temporary/0", 5000), (".hidden", 3000)):
+        (tmp_path / sub).mkdir(parents=True)
+        (tmp_path / sub / "part-1.parquet").write_bytes(b"x" * size)
+    assert _input_bytes(str(tmp_path)) == 1000
 
 
 def test_run_extraction_leaves_caller_conf_untouched(spark, transcripts_parquet):
