@@ -40,7 +40,7 @@ from pdf_parser_spark.operators import (
     text_stats,
 )
 from pdf_parser_spark.operators.text_stats import _LANG_MARKERS
-from pdf_parser_spark.pipeline import extract_with_fallback, reassemble, run_extraction
+from pdf_parser_spark.pipeline import reassemble, run_extraction
 
 ORACLE_SF_DIR = "/root/testdata/sf0.01"  # the driver's correctness sf
 SEP = "\x1f"
@@ -119,15 +119,16 @@ def q_extract_reassembly_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_fallback_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fallback replan (§4.1): second extraction pass over failed rows as a
-    filter → rescue-kernel → unionByName plan; vs the strict golden with
-    every non-empty error row rescued as plain text."""
-    from pdf_parser_spark.pipeline import job_session, scan_plan
+    """Fallback replan (§4.1): the kernel retries each PDF-sniffed turn that
+    does not open as plain text in the same per-row call, as the reference
+    retries a failed file (``pdf_image_extractor.py:761-821``); vs the
+    strict golden with every non-empty error row rescued as plain text."""
+    from pdf_parser_spark.pipeline import extract_turns, job_session, scan_plan
 
     p = G.ensure_transcripts(sf_dir)
     split, salt = scan_plan(p, spark.sparkContext.defaultParallelism)
     df = job_session(spark, split).read.parquet(p)
-    out = reassemble(extract_with_fallback(df, salt=salt), num_partitions=16)
+    out = reassemble(extract_turns(df, salt=salt, fallback=True), num_partitions=16)
     return out.select(
         "conv_id", "turn_idx", "role", "tool", "payload_kind", "extracted_text",
         F.to_json("spans").alias("spans_json"), "n_blocks", "extraction_ok",
@@ -156,11 +157,10 @@ def _transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transcripts corpus with the job's scan policy (pipeline.scan_plan):
     adaptive split sizing, applied through a per-job session so the
     caller's conf is untouched. Split sizing ONLY — no repartition here: a
-    pre-kernel repartition would embed an Exchange into EVERY branch
-    derived from this df (e.g. the fallback rescue join's source re-scan
-    would pay a payload shuffle it never needs); operators that want the
-    balancing shuffle ask for it on their kernel branch alone
-    (extract_turns/extract_with_fallback salt)."""
+    pre-kernel repartition would embed a payload Exchange into EVERY
+    operator built on this df, whether or not its kernel needs balancing;
+    operators that want the balancing shuffle ask for it on their kernel
+    alone (``extract_turns(salt=True)``)."""
     from pdf_parser_spark.pipeline import job_session, scan_plan
 
     p = G.ensure_transcripts(sf_dir)
@@ -220,33 +220,27 @@ def q_image_histograms(spark: SparkSession, sf_dir: str) -> DataFrame:
       ``pdf_api/core/pdf_image_extractor.py:655-704``) — one row per
       admitted turn, n = its image-record count on pages 0..2
 
-    One image-records kernel pass persisted, four cheap aggregation arms."""
-    recs = track(images_op.image_records(_transcripts_df(spark, sf_dir)).persist())
-    n = F.count("*").cast("long").alias("n")
-    a5 = (
-        recs.filter(F.col("kept"))
-        .groupBy(F.col("page").cast("string").alias("key"))
-        .agg(n)
-        .select(F.lit("a5_page").alias("metric"), "key", "n")
+    One image-records kernel pass: each record emits one (metric, key) per
+    arm it belongs to (null arms are dropped), and one groupBy counts them
+    all — no persist, no union."""
+    recs = images_op.image_records(_transcripts_df(spark, sf_dir))
+
+    def arm(cond, metric, key):
+        return F.when(cond, F.struct(F.lit(metric).alias("metric"), key.alias("key")))
+
+    kept, page = F.col("kept"), F.col("page")
+    arms = F.array(
+        arm(kept, "a5_page", page.cast("string")),
+        arm(kept, "a6_format", F.col("format")),
+        arm(F.lit(True), "a8_drop_reason", F.col("drop_reason")),
+        arm(page <= 2, "f9_first3", F.concat_ws("|", "conv_id", "turn_idx")),
     )
-    a6 = (
-        recs.filter(F.col("kept"))
-        .groupBy(F.col("format").alias("key"))
-        .agg(n)
-        .select(F.lit("a6_format").alias("metric"), "key", "n")
+    return (
+        recs.select(F.inline(F.filter(arms, lambda a: a.isNotNull())))
+        .groupBy("metric", "key")
+        .agg(F.count("*").cast("long").alias("n"))
+        .orderBy("metric", "key")
     )
-    a8 = (
-        recs.groupBy(F.col("drop_reason").alias("key"))
-        .agg(n)
-        .select(F.lit("a8_drop_reason").alias("metric"), "key", "n")
-    )
-    f9 = (
-        recs.filter(F.col("page") <= 2)
-        .groupBy(F.concat_ws("|", "conv_id", "turn_idx").alias("key"))
-        .agg(n)
-        .select(F.lit("f9_first3").alias("metric"), "key", "n")
-    )
-    return a5.unionByName(a6).unionByName(a8).unionByName(f9).orderBy("metric", "key")
 
 
 def q_analysis_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:

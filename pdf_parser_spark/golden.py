@@ -164,9 +164,10 @@ def ensure_bpe_golden(sf_dir: str) -> str:
 
 
 def ensure_golden_fallback(sf_dir: str) -> str:
-    """The strict golden with ``pipeline.extract_with_fallback``'s rescue
-    applied: every error row with a non-empty payload becomes plain text
-    (identity text, one full-range span, one block)."""
+    """The strict golden with the fallback rescue applied by its own pandas
+    code, independent of the kernel's ``fallback`` flag: every error row
+    with a non-empty payload becomes plain text (identity text, one
+    full-range span, one block)."""
     return _ensure_extraction_golden(sf_dir, "golden_fb", rescue=True)
 
 

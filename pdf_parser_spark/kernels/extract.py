@@ -90,20 +90,25 @@ def _spans_to_dicts(spans: list[tuple[int, int]]) -> list[dict]:
 
 
 def extract_one(
-    text: str | None, cfg: ExtractConfig = DEFAULT_CONFIG
+    text: str | None, cfg: ExtractConfig = DEFAULT_CONFIG, fallback: bool = False
 ) -> tuple[str, str, list[dict], int, bool]:
-    """Extract a single payload. Returns (kind, text, spans, n_blocks, ok)."""
+    """Extract a single payload. Returns (kind, text, spans, n_blocks, ok).
+
+    ``fallback`` retries a PDF-sniffed payload that does not open as plain
+    text, inside the same call (SURVEY.md §4.1: the reference retries a
+    failed file with the other method, ``pdf_image_extractor.py:761-821``).
+    Empty and missing payloads stay ``error`` either way."""
     kind = sniff_kind(text)
     if kind == KIND_ERROR:
         return KIND_ERROR, "", [], 0, False
-    if kind == KIND_PLAIN:
-        return KIND_PLAIN, text, _spans_to_dicts([(0, len(text))]), 1, True
     if kind == KIND_HTML:
         out, spans, n_blocks = extract_html(text, cfg)
         return KIND_HTML, out, _spans_to_dicts(spans), n_blocks, True
-    doc = open_pdf(text)
+    doc = open_pdf(text) if kind == "pdf" else None
     if doc is None:
-        return KIND_ERROR, "", [], 0, False
+        if kind == "pdf" and not fallback:
+            return KIND_ERROR, "", [], 0, False
+        return KIND_PLAIN, text, _spans_to_dicts([(0, len(text))]), 1, True
     # each page is laid out once: the classification sample first, the rest
     # only if the doc has text to extract
     pages = [page_text(p, cfg) for p in doc.pages[: cfg.classify_page_cap]]
@@ -123,9 +128,10 @@ def extract_one(
 
 
 def extract_batch(
-    pdf: pd.DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
+    pdf: pd.DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG, fallback: bool = False
 ) -> pd.DataFrame:
     """Vectorized-batch extraction: adds the output columns, passes others through.
+    ``fallback`` as in ``extract_one``.
 
     The Python loop here iterates WITHIN an Arrow batch (the reference's
     per-file loops become per-row kernel work inside a vectorized batch —
@@ -138,7 +144,7 @@ def extract_batch(
     ok_col: list[bool] = []
     for t in pdf["text"].astype(object):
         kind, out, spans, n_blocks, ok = extract_one(
-            t if isinstance(t, str) else None, cfg
+            t if isinstance(t, str) else None, cfg, fallback
         )
         kinds.append(kind)
         texts.append(out)

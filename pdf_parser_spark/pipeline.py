@@ -47,7 +47,6 @@ __all__ = [
     "RESULT_SCHEMA",
     "session_defaults",
     "extract_turns",
-    "extract_with_fallback",
     "reassemble",
     "scan_plan",
     "job_session",
@@ -119,12 +118,12 @@ def session_defaults(builder, cpus: int | None = None):
     return b
 
 
-def _kernel_factory(cfg: ExtractConfig):
+def _kernel_factory(cfg: ExtractConfig, fallback: bool):
     out_cols = [f.name for f in RESULT_SCHEMA.fields]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            res = extract_batch(pdf, cfg)
+            res = extract_batch(pdf, cfg, fallback)
             yield res[out_cols]
 
     return kernel
@@ -134,6 +133,7 @@ def extract_turns(
     df: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
     salt: bool = False,
+    fallback: bool = False,
 ) -> DataFrame:
     """transcripts DataFrame → extraction results (unordered).
 
@@ -152,13 +152,17 @@ def extract_turns(
     (``run_extraction``/``run_job`` choose it automatically via
     ``scan_plan`` — never at production scale, and never when the input
     size is unknown).
+
+    ``fallback=True`` rescues each PDF-sniffed turn that does not open as
+    plain text inside the kernel (``extract_one``): one pass, per row, so
+    duplicate ``(conv_id, turn_idx)`` keys cannot fan out.
     """
     from . import ship_package
 
     ship_package(df.sparkSession)
     if salt:
         df = df.repartition(F.xxhash64("conv_id", "turn_idx"))
-    return df.mapInPandas(_kernel_factory(cfg), schema=RESULT_SCHEMA)
+    return df.mapInPandas(_kernel_factory(cfg, fallback), schema=RESULT_SCHEMA)
 
 
 def reassemble(extracted: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -190,74 +194,6 @@ def reassemble(extracted: DataFrame, num_partitions: int | None = None) -> DataF
         ranged = extracted.repartitionByRange("conv_id")
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     return ranged.withColumn("turn_seq", F.row_number().over(w))
-
-
-def extract_with_fallback(
-    df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG, salt: bool = False
-) -> DataFrame:
-    """Two-pass fallback replan as a DataFrame program (SURVEY.md §4.1: the
-    reference retries failed extractions with the other method,
-    ``pdf_image_extractor.py:761-821`` — no Catalyst analog, so it is a
-    second pass over the failed subset).
-
-    Pass 1 runs the strict kernel WITHOUT the payload column (the payload
-    never crosses Arrow back out of the kernel, so the kernel output stays
-    small enough to persist at corpus scale); the rare failed rows are then
-    re-joined to the SOURCE by key — a broadcast hash join of the tiny error
-    set against a streamed source scan, no shuffle of either side — and
-    re-extracted as plain text (identity + full-range span); results union
-    back. Row-for-row equal to the strict golden with that rescue applied
-    (``golden.ensure_golden_fallback``; tests pin this), expressed as the
-    filter → rescue-join → unionByName plan the reference's control flow
-    maps to.
-
-    PRECONDITION: ``(conv_id, turn_idx)`` is unique in ``df`` — it is the
-    transcripts table's primary key (TRANSCRIPT_SPARK_SCHEMA; the turn id).
-    Duplicate keys would fan out rows at the rescue join and break the
-    pinned row-for-row equivalence with the single-pass kernel. The
-    extraction kernel itself is duplicate-safe (per-row), so a caller with
-    a non-keyed source must dedup it before this operator, not after.
-
-    ``first`` is persisted because it feeds two sub-plans of one action
-    (ok_rows and the error set) and Spark has no cross-branch CSE — without
-    it the extraction kernel executes twice per materialization. The persist
-    must outlive the returned lazy plan, so it is tracked: callers running
-    many queries per session call ``caching.release_persisted()`` after
-    each action.
-    """
-    from pyspark import StorageLevel
-
-    # ``salt`` applies to the KERNEL branch only — the rescue join's source
-    # re-scan must stay shuffle-free (broadcast join against a streamed scan)
-    first = extract_turns(df, cfg, salt=salt)
-    first = track(first.persist(StorageLevel.MEMORY_AND_DISK))
-    ok_rows = first.filter(F.col("payload_kind") != "error")
-    err = first.filter(F.col("payload_kind") == "error")
-    src = df.select("conv_id", "turn_idx", F.col("text").alias("_payload"))
-    # error rows are the broadcast side: the reference's fallback fires on
-    # the rare 0-result files (pdf_image_extractor.py:761-821), so the set
-    # is driver-sized; the source is streamed, never shuffled or cached.
-    err2 = src.join(F.broadcast(err), ["conv_id", "turn_idx"], "inner")
-    result_cols = [f.name for f in RESULT_SCHEMA.fields]
-    rescued = err2.filter(
-        F.col("_payload").isNotNull() & (F.col("_payload") != "")
-    ).select(
-        "conv_id", "turn_idx", "role", "tool", "ts",
-        F.lit("plain").alias("payload_kind"),
-        F.col("_payload").alias("extracted_text"),
-        F.array(
-            F.struct(
-                F.lit(0).cast("int").alias("start"),
-                F.length("_payload").cast("int").alias("end"),
-            )
-        ).alias("spans"),
-        F.lit(1).cast("int").alias("n_blocks"),
-        F.lit(True).alias("extraction_ok"),
-    )
-    kept_err = err2.filter(
-        F.col("_payload").isNull() | (F.col("_payload") == "")
-    ).select(*result_cols)
-    return ok_rows.unionByName(rescued).unionByName(kept_err)
 
 
 _SPLIT_MAX = 16 * 1024 * 1024  # session default; see session_defaults

@@ -17,7 +17,13 @@ def physical_plan(df: DataFrame) -> str:
 
 
 def count_exchanges(df: DataFrame) -> int:
-    return physical_plan(df).count("Exchange")
+    """Exchange operators in the plan. The formatted plan names each
+    operator twice (tree, then details), so only the numbered detail
+    lines ``(n) …Exchange…`` are counted."""
+    return sum(
+        1 for line in physical_plan(df).splitlines()
+        if line.startswith("(") and "Exchange" in line
+    )
 
 
 def has_pushed_filter(df: DataFrame, fragment: str) -> bool:

@@ -130,17 +130,17 @@ def test_exact_dedup_keeps_first(spark):
     assert all(i < 1000000 for i in ids)  # originals (lowest id) survive
 
 
-def test_fallback_two_pass_equals_kernel_flag(spark, transcripts_pdf, transcripts_parquet):
-    """The filter→rescue→union DataFrame plan (extract_with_fallback) must be
-    row-for-row equal to the fallback golden (the strict golden with every
-    non-empty error row rescued as plain text)."""
+def test_fallback_flag_matches_rescued_golden(spark, transcripts_pdf, transcripts_parquet):
+    """extract_turns(fallback=True) must be row-for-row equal, in every
+    column, to the fallback golden (the strict golden with every non-empty
+    error row rescued as plain text by its own pandas code)."""
     import pandas as pd
 
     from pdf_parser_spark.kernels.extract import extract_batch
-    from pdf_parser_spark.pipeline import extract_with_fallback
+    from pdf_parser_spark.pipeline import extract_turns
 
     got = (
-        extract_with_fallback(spark.read.parquet(transcripts_parquet))
+        extract_turns(spark.read.parquet(transcripts_parquet), fallback=True)
         .toPandas()
         .sort_values(["conv_id", "turn_idx"], kind="mergesort")
         .reset_index(drop=True)
@@ -150,9 +150,12 @@ def test_fallback_two_pass_equals_kernel_flag(spark, transcripts_pdf, transcript
         .sort_values(["conv_id", "turn_idx"], kind="mergesort")
         .reset_index(drop=True)
     )
-    assert got["payload_kind"].tolist() == want["payload_kind"].tolist()
-    assert got["extracted_text"].tolist() == want["extracted_text"].tolist()
-    assert got["extraction_ok"].tolist() == want["extraction_ok"].tolist()
+    got["spans_json"] = [G.spans_to_json(s) for s in got["spans"]]
+    for col in (
+        "conv_id", "turn_idx", "role", "tool", "payload_kind", "extracted_text",
+        "spans_json", "n_blocks", "extraction_ok",
+    ):
+        assert got[col].tolist() == want[col].tolist(), col
     # rescued rows exist: strict run had errors with non-empty payloads
     strict = extract_batch(transcripts_pdf)
     n_rescuable = (
@@ -164,20 +167,42 @@ def test_fallback_two_pass_equals_kernel_flag(spark, transcripts_pdf, transcript
     assert (want["extraction_ok"].sum() - strict["extraction_ok"].sum()) == n_rescuable
 
 
+def test_fallback_keeps_duplicate_keys_one_row_each(spark):
+    """The rescue is per row: two turns sharing a (conv_id, turn_idx) key
+    with an unparseable PDF payload come back as two rows, not four."""
+    from pdf_parser_spark.pipeline import TRANSCRIPT_SPARK_SCHEMA, extract_turns
+
+    bad_pdf = "JVBERi0xLjQKbm90IGEgcGRm"  # base64 of b"%PDF-1.4\nnot a pdf"
+    df = spark.createDataFrame(
+        [
+            ("c", 0, "user", bad_pdf, None, None),
+            ("c", 0, "user", bad_pdf, None, None),
+            ("c", 1, "user", "hello", None, None),
+        ],
+        TRANSCRIPT_SPARK_SCHEMA,
+    )
+    rows = sorted(
+        (r["turn_idx"], r["payload_kind"], r["extracted_text"])
+        for r in extract_turns(df, fallback=True).collect()
+    )
+    assert rows == [(0, "plain", bad_pdf), (0, "plain", bad_pdf), (1, "plain", "hello")]
+
+
 def test_release_persisted_frees_pipeline_persists(spark, transcripts_parquet):
-    """extract_with_fallback and reassemble persist frames that outlive the
-    call; release_persisted() must free both once the action has run."""
+    """reassemble persists the kernel output, which outlives the call;
+    release_persisted() must free it once the action has run. The fallback
+    path adds no persist of its own."""
     from pdf_parser_spark.caching import release_persisted
-    from pdf_parser_spark.pipeline import extract_with_fallback, reassemble
+    from pdf_parser_spark.pipeline import extract_turns, reassemble
 
     jsc = spark.sparkContext._jsc.sc()
     spark.catalog.clearCache()
     release_persisted(blocking=True)
     base = jsc.getPersistentRDDs().size()
-    out = reassemble(extract_with_fallback(spark.read.parquet(transcripts_parquet)))
+    out = reassemble(extract_turns(spark.read.parquet(transcripts_parquet), fallback=True))
     out.write.format("noop").mode("overwrite").save()
-    assert jsc.getPersistentRDDs().size() == base + 2
-    assert release_persisted(blocking=True) == 2
+    assert jsc.getPersistentRDDs().size() == base + 1
+    assert release_persisted(blocking=True) == 1
     assert jsc.getPersistentRDDs().size() == base
 
 

@@ -33,7 +33,7 @@ import pytest
 @pytest.fixture(autouse=True)
 def _cold_cache(spark):
     """Plan shapes assume a cold cache: a persist left by an earlier test
-    (e.g. extract_with_fallback's kernel persist) substitutes an
+    (e.g. reassemble's persist of the kernel output) substitutes an
     InMemoryTableScan into any later plan with a matching subtree and
     collapses its exchanges."""
     spark.catalog.clearCache()
@@ -63,10 +63,7 @@ def test_reassembly_single_exchange(spark, transcripts_parquet):
     plan = physical_plan(out)
     # exactly one post-kernel exchange: the range repartition; the window
     # reuses its clustering (no hashpartitioning(conv_id) exchange)
-    n_exchange = sum(
-        1 for l in plan.splitlines() if l.strip().startswith("(") and "Exchange" in l
-    )
-    assert n_exchange == 1, plan
+    assert count_exchanges(out) == 1, plan
     assert "rangepartitioning" in plan.lower()
     assert plan.lower().count("hashpartitioning(conv_id") == 0
 
@@ -74,11 +71,8 @@ def test_reassembly_single_exchange(spark, transcripts_parquet):
 def test_salted_pipeline_two_exchanges(spark, transcripts_parquet):
     raw = spark.read.parquet(transcripts_parquet)
     out = reassemble(extract_turns(raw, salt=True), num_partitions=4)
-    plan = physical_plan(out)
-    n_exchange = sum(
-        1 for l in plan.splitlines() if l.strip().startswith("(") and "Exchange" in l
-    )
-    assert n_exchange == 2, plan  # salt + range, nothing else
+    # salt + range, nothing else
+    assert count_exchanges(out) == 2, physical_plan(out)
 
 
 def test_relational_glue_codegen(spark):
@@ -108,17 +102,17 @@ def test_lineage_resume_join_broadcasts(spark, transcripts_parquet):
 
 
 def test_fallback_kernel_runs_once(spark, transcripts_parquet):
-    """extract_with_fallback's pass-1 output feeds two sub-plans (ok_rows +
-    error set); the persist must be in the plan (InMemoryTableScan) so the
-    extraction kernel executes once, and the rescue join must broadcast the
-    tiny error side instead of shuffling the source."""
-    from pdf_parser_spark.pipeline import extract_with_fallback
-
-    out = extract_with_fallback(spark.read.parquet(transcripts_parquet))
+    """The fallback rescue runs inside the kernel: one MapInPandas over the
+    scan, so the kernel executes once by construction — no persist, no
+    rescue join back to a second scan of the source, no exchange."""
+    out = extract_turns(spark.read.parquet(transcripts_parquet), fallback=True)
     plan = physical_plan(out)
-    assert "InMemoryTableScan" in plan
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    assert sum(
+        1 for line in plan.splitlines() if line.startswith("(") and "MapInPandas" in line
+    ) == 1, plan
+    assert count_exchanges(out) == 0, plan
+    assert "InMemoryTableScan" not in plan
+    assert "Join" not in plan
 
 
 def test_embedding_near_dup_buckets_computed_once(spark):
