@@ -77,8 +77,9 @@ def _cents(col) -> Column:
 # ===================================================== extraction (kernel) ==
 
 def q_extract_turns_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: full pipeline (salt → mapInPandas kernel → range repartition
-    → window reassembly); compared per-turn against the single-node golden."""
+    """Flagship: full pipeline (mapInPandas kernel → hash repartition on
+    conv_id → window reassembly); compared per-turn against the single-node
+    golden."""
     out = run_extraction(spark, G.ensure_transcripts(sf_dir), num_partitions=16)
     return out.select(
         "conv_id",

@@ -12,7 +12,7 @@ Layout:
   implementation used both by the single-node golden runner (pytest) and by
   the Spark UDF wrappers (SURVEY.md §7.1 shared-kernel rule).
 - ``pipeline.py`` the Spark extraction pipeline (classify → extract →
-  repartitionByRange → window reassembly).
+  hash repartition(conv_id) → window reassembly).
 - ``lineage.py`` per-partition lineage + idempotent checkpoint resume.
 - ``operators/`` DataFrame-level operators: NMS, dedup (exact/minhash/
   simhash/jaccard), similarity search, text analysis.

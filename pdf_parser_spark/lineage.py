@@ -69,19 +69,16 @@ def cluster_by_bucket(
     bucketed output layout — no persist, no sampling pass, single kernel
     execution.
 
-    ``pipeline.reassemble`` (the standalone path) range-partitions for a
-    globally ordered result, which costs a persist of the full extracted
-    output (RangePartitioner SAMPLES its child) plus an exchange whose
-    ordering the bucketed ``partitionBy("bucket")`` write then destroys
-    anyway. Here the window partitions by ``(bucket, conv_id)`` —
-    semantically identical to ``conv_id`` alone since bucket is a pure
-    function of conv_id — so Catalyst accepts hashpartitioning(bucket) as
-    satisfying the window's required clustering and plans ONE exchange and
-    a partition-local sort (pinned by ``test_cluster_by_bucket_plan``).
-    Measured at x256/local[32]: wall parity with the range shape, whose
-    persist spills the whole corpus at production scale to feed a sampler.
-    ``turn_seq`` values are row-for-row identical to ``reassemble``'s
-    (same partition-by set modulo the redundant bucket, same ordering).
+    ``pipeline.reassemble`` (the standalone path) has the same shape keyed
+    by ``conv_id``; here the key is the output bucket, so the exchange also
+    lays out the bucketed ``partitionBy("bucket")`` write. The window
+    partitions by ``(bucket, conv_id)`` — semantically identical to
+    ``conv_id`` alone since bucket is a pure function of conv_id — so
+    Catalyst accepts hashpartitioning(bucket) as satisfying the window's
+    required clustering and plans ONE exchange and a partition-local sort
+    (pinned by ``test_cluster_by_bucket_plan``). ``turn_seq`` values are
+    row-for-row identical to ``reassemble``'s (same partition-by set
+    modulo the redundant bucket, same ordering).
     """
     cols = (num_partitions, "bucket") if num_partitions else ("bucket",)
     bucketed = with_bucket(extracted, n_buckets).repartition(*cols)

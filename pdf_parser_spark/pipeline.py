@@ -6,12 +6,12 @@
         Arrow-batched Python crossing; all per-payload work (sniff, html
         strip, pdf parse, layout, NMS, dedup) happens inside the batch,
         JVM↔Python only at batch boundaries
-      → repartitionByRange(conv_id)   (BASELINE.json:14)
+      → repartition(conv_id)   (hash; the window reuses it)
       → window-ordered reassembly: row_number over (conv_id ORDER BY turn_idx)
       → write + lineage
 
 Scale notes (100 TB / 1000 executors):
-- The only wide exchange is the post-kernel range repartition, which moves
+- The only wide exchange is the post-kernel hash repartition, which moves
   the EXTRACTED rows (much smaller than the raw payloads for html/pdf kinds;
   the heavy payload column is dropped before the shuffle). The kernel runs
   on scan partitions directly: the 16 MB
@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .caching import track
 from .config import DEFAULT_CONFIG, ExtractConfig
 from .kernels.extract import extract_batch
 
@@ -106,11 +105,11 @@ def session_defaults(builder, cpus: int | None = None):
         # parallelism >= core count even for modest inputs; AQE re-coalesces
         # downstream exchanges so small splits cost nothing after the kernel
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
-        # the engine caches only short-lived intermediates (the extracted
-        # rows between the kernel and the range exchange — see reassemble);
-        # columnar-cache compression costs one compress + two decompress
-        # passes over that text within a single job (measured 2x the whole
-        # reassembly phase) and saves memory we don't need saved
+        # the engine caches only short-lived per-call operator persists
+        # (dedup's minhash doc table, shingle tables and simhash chunks;
+        # similarity's SRP bucket tables and ivf_train vectors), each read
+        # by 2+ sub-plans of one job; compressing them costs a compress
+        # plus a decompress per read and saves memory we don't need saved
         .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
     )
     if cpus:
@@ -166,34 +165,21 @@ def extract_turns(
 
 
 def reassemble(extracted: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Range-repartition + window-ordered reassembly (W1, SURVEY.md §2.6).
+    """Hash-repartition + window-ordered reassembly (W1, SURVEY.md §2.6).
 
-    The range key is ``conv_id`` ALONE: RangePartitioning(conv_id) satisfies
-    the window's ClusteredDistribution(conv_id), so the window needs only a
-    partition-local Sort on (conv_id, turn_idx) — ONE exchange total, and
-    the output is globally ordered by (conv_id, turn_idx). Ranging on
-    (conv_id, turn_idx) instead would let one conversation straddle a range
-    boundary, forcing Catalyst to insert a second, hash exchange for the
-    window (verified via .explain — tests/test_plan_shapes.py pins this).
-
-    The input is persisted first: RangePartitioner runs a SAMPLING JOB over
-    its child to pick boundaries, and without a persist that sample pass
-    re-executes the upstream extraction kernel — the whole Python kernel ran
-    TWICE per job (measured: 244 core-s at local[2] vs 104 core-s of kernel
-    cost for 320k turns). Extracted rows are small (payload column already
-    dropped), so MEMORY_AND_DISK is cheap relative to one kernel pass. The
-    persist is tracked: ``caching.release_persisted()`` frees it once the
-    consuming action has run.
+    The output is clustered by ``conv_id`` and sorted by (conv_id,
+    turn_idx) inside each partition; it is not globally ordered across
+    partitions, and no reader needs that (every one groups by conv_id).
+    hashpartitioning(conv_id) satisfies the window's
+    ClusteredDistribution(conv_id), so the plan has ONE exchange and a
+    partition-local Sort (pinned by tests/test_plan_shapes.py). There is
+    no persist and no sampling job, so the kernel runs once and callers of
+    ``run_extraction`` have nothing to ``release_persisted()``. The same
+    shape as ``lineage.cluster_by_bucket``, keyed by conv_id.
     """
-    from pyspark import StorageLevel
-
-    extracted = track(extracted.persist(StorageLevel.MEMORY_AND_DISK))
-    if num_partitions:
-        ranged = extracted.repartitionByRange(num_partitions, "conv_id")
-    else:
-        ranged = extracted.repartitionByRange("conv_id")
+    cols = (num_partitions, "conv_id") if num_partitions else ("conv_id",)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return ranged.withColumn("turn_seq", F.row_number().over(w))
+    return extracted.repartition(*cols).withColumn("turn_seq", F.row_number().over(w))
 
 
 _SPLIT_MAX = 16 * 1024 * 1024  # session default; see session_defaults

@@ -2,7 +2,7 @@
 
 Used by tests and bench to verify (SURVEY.md §4.3):
 - filters/projections reach the parquet scan (PushedFilters / ReadSchema),
-- no extra Exchange between the range repartition and the window sort,
+- no extra Exchange between the conv_id repartition and the window sort,
 - small-side joins go broadcast.
 """
 from __future__ import annotations

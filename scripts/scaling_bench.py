@@ -340,7 +340,7 @@ and 4N (`BASELINE.json`). Sandbox stand-in per task mandate: the same job
 at two `local[k]` levels on identical input, fresh JVM per level, warm-up
 excluded. Job = full pipeline: scan (16 MB splits) -> mapInPandas
 extraction kernel on the scan partitions (pre-kernel salt is opt-in; the
-payload corpus no longer crosses a shuffle) -> repartitionByRange(conv_id)
+payload corpus no longer crosses a shuffle) -> repartition(conv_id) (hash)
 -> window reassembly -> noop sink.
 
 ## Primary pair local[{PRIMARY[0]}] -> local[{PRIMARY[1]}] (absolute criterion)

@@ -189,9 +189,9 @@ def test_fallback_keeps_duplicate_keys_one_row_each(spark):
 
 
 def test_release_persisted_frees_pipeline_persists(spark, transcripts_parquet):
-    """reassemble persists the kernel output, which outlives the call;
-    release_persisted() must free it once the action has run. The fallback
-    path adds no persist of its own."""
+    """The extraction pipeline (fallback path included) leaves no persist
+    behind. An operator's per-call persist outlives the call, and
+    release_persisted() must free it once the action has run."""
     from pdf_parser_spark.caching import release_persisted
     from pdf_parser_spark.pipeline import extract_turns, reassemble
 
@@ -201,6 +201,14 @@ def test_release_persisted_frees_pipeline_persists(spark, transcripts_parquet):
     base = jsc.getPersistentRDDs().size()
     out = reassemble(extract_turns(spark.read.parquet(transcripts_parquet), fallback=True))
     out.write.format("noop").mode("overwrite").save()
+    assert jsc.getPersistentRDDs().size() == base
+    assert release_persisted(blocking=True) == 0
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat"), (2, "the cat sat on the hat"), (3, "zz")],
+        "doc_id long, text string",
+    )
+    dedup.ngram_jaccard_pairs(docs).collect()
     assert jsc.getPersistentRDDs().size() == base + 1
     assert release_persisted(blocking=True) == 1
     assert jsc.getPersistentRDDs().size() == base

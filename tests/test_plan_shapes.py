@@ -3,8 +3,8 @@
 
 - predicate pushdown + column pruning reach the parquet scan,
 - small dims broadcast,
-- the reassembly does ONE exchange (range on conv_id; no second hash
-  exchange for the window),
+- the reassembly does ONE exchange (hash on conv_id; the window reuses it),
+- no extraction query samples or caches the kernel output,
 - relational glue stays in whole-stage codegen.
 """
 from __future__ import annotations
@@ -33,7 +33,7 @@ import pytest
 @pytest.fixture(autouse=True)
 def _cold_cache(spark):
     """Plan shapes assume a cold cache: a persist left by an earlier test
-    (e.g. reassemble's persist of the kernel output) substitutes an
+    (e.g. _srp_bands' persist of the bucketed vectors) substitutes an
     InMemoryTableScan into any later plan with a matching subtree and
     collapses its exchanges."""
     spark.catalog.clearCache()
@@ -61,18 +61,41 @@ def test_reassembly_single_exchange(spark, transcripts_parquet):
     extracted = extract_turns(raw, salt=False)
     out = reassemble(extracted, num_partitions=4)
     plan = physical_plan(out)
-    # exactly one post-kernel exchange: the range repartition; the window
-    # reuses its clustering (no hashpartitioning(conv_id) exchange)
+    # exactly one post-kernel exchange: the hash repartition on conv_id;
+    # the window reuses its clustering. No range sampler, no persist.
     assert count_exchanges(out) == 1, plan
-    assert "rangepartitioning" in plan.lower()
-    assert plan.lower().count("hashpartitioning(conv_id") == 0
+    assert "hashpartitioning(conv_id" in plan.lower()
+    assert "rangepartitioning" not in plan.lower()
+    assert "InMemoryTableScan" not in plan
 
 
 def test_salted_pipeline_two_exchanges(spark, transcripts_parquet):
     raw = spark.read.parquet(transcripts_parquet)
     out = reassemble(extract_turns(raw, salt=True), num_partitions=4)
-    # salt + range, nothing else
+    # salt + hash, nothing else
     assert count_exchanges(out) == 2, physical_plan(out)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "extract_turns_full",
+        "extract_kind_stats",
+        "extract_reassembly_digest",
+        "o5_turn_slice",
+        "fallback_extraction",
+    ],
+)
+def test_extraction_queries_never_sample_the_kernel(spark, name):
+    """A range exchange samples its child, so an unpersisted kernel below
+    it runs twice and a persisted one is cached in full. Every extraction
+    query must plan the kernel once, with neither."""
+    plan = physical_plan(entrymod.queries()[name](spark, SF))
+    assert sum(
+        1 for line in plan.splitlines() if line.startswith("(") and "MapInPandas" in line
+    ) == 1, plan
+    assert "rangepartitioning" not in plan.lower(), plan
+    assert "InMemoryTableScan" not in plan, plan
 
 
 def test_relational_glue_codegen(spark):

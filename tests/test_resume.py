@@ -115,9 +115,7 @@ def test_cluster_by_bucket_plan(spark, transcripts_parquet):
     """The write path's reassembly must plan ONE exchange
     (hashpartitioning on bucket), no persist, and only a partition-local
     sort for the window — the bucket-aligned shape that reuses the output
-    layout's exchange and never materializes the extracted corpus (the
-    range shape persists it in full just to feed the boundary sampler —
-    bench-scale parity, production-scale storage win)."""
+    layout's exchange and never materializes the extracted corpus."""
     from pdf_parser_spark.lineage import cluster_by_bucket
     from pdf_parser_spark.pipeline import extract_turns
 
@@ -136,7 +134,7 @@ def test_cluster_by_bucket_plan(spark, transcripts_parquet):
 
 
 def test_cluster_by_bucket_turn_seq_matches_reassemble(spark, transcripts_parquet):
-    """Row-for-row turn_seq equality with the standalone range-shape
+    """Row-for-row turn_seq equality with the standalone conv_id-hashed
     reassembly: partitioning the window by (bucket, conv_id) is
     semantically identical to conv_id alone (bucket is a pure function of
     conv_id)."""
