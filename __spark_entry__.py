@@ -40,7 +40,7 @@ from pdf_parser_spark.operators import (
     text_stats,
 )
 from pdf_parser_spark.operators.text_stats import _LANG_MARKERS
-from pdf_parser_spark.pipeline import reassemble, run_extraction
+from pdf_parser_spark.pipeline import extract_input, reassemble, run_extraction
 
 ORACLE_SF_DIR = "/root/testdata/sf0.01"  # the driver's correctness sf
 SEP = "\x1f"
@@ -96,7 +96,7 @@ def q_extract_turns_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_extract_kind_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = run_extraction(spark, G.ensure_transcripts(sf_dir), num_partitions=16)
+    out = extract_input(spark, G.ensure_transcripts(sf_dir), num_partitions=16)
     return out.groupBy("payload_kind").agg(
         F.count("*").cast("long").alias("n"),
         F.sum(F.length("extracted_text")).cast("long").alias("sum_chars"),
@@ -124,12 +124,10 @@ def q_fallback_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     does not open as plain text in the same per-row call, as the reference
     retries a failed file (``pdf_image_extractor.py:761-821``); vs the
     strict golden with every non-empty error row rescued as plain text."""
-    from pdf_parser_spark.pipeline import extract_turns, job_session, scan_plan
-
-    p = G.ensure_transcripts(sf_dir)
-    split, salt = scan_plan(p, spark.sparkContext.defaultParallelism)
-    df = job_session(spark, split).read.parquet(p)
-    out = reassemble(extract_turns(df, salt=salt, fallback=True), num_partitions=16)
+    out = reassemble(
+        extract_input(spark, G.ensure_transcripts(sf_dir), num_partitions=16, fallback=True),
+        num_partitions=16,
+    )
     return out.select(
         "conv_id", "turn_idx", "role", "tool", "payload_kind", "extracted_text",
         F.to_json("spans").alias("spans_json"), "n_blocks", "extraction_ok",
@@ -141,8 +139,9 @@ def q_o5_turn_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedicated O5 range slice (``pdfplumber/pdf_page_extractor.py:101-135``
     extracts a page_range=(start,end); the per-conversation analog slices a
     turn range): BETWEEN filter ahead of the projection, pushed to the scan
-    of the extraction output."""
-    out = run_extraction(spark, G.ensure_transcripts(sf_dir), num_partitions=16)
+    of the extraction output. It reads no ``turn_seq``, so it skips the
+    reassembly exchange."""
+    out = extract_input(spark, G.ensure_transcripts(sf_dir), num_partitions=16)
     return out.filter(F.col("turn_idx").between(1, 3)).select(
         "conv_id", "turn_idx", "payload_kind", "extracted_text"
     )
@@ -512,14 +511,16 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both simhash widths in one driver-checked entry (registry curation —
-    see q_image_histograms): the 32-bit digest plus the standard-width
+    """Per-doc simhash at both widths from ONE token pass: the standard
     64-bit digest as the 4x16-bit chunks the Hamming-pair operator bands
-    on. Each arm is the unmodified operator; one equi-join on id."""
-    docs = _t(spark, sf_dir, "documents")
-    s32 = dedup.simhash(docs, bits=32).withColumnRenamed("simhash", "simhash32")
-    s64 = dedup.simhash64_chunks(docs)
-    return s32.join(s64, "id").orderBy("id")
+    on, and the 32-bit digest derived from them. The 32-bit digest hashes
+    each token by md5 hex chars [0..7], which are exactly chunks 0 and 1,
+    and a per-bit majority does not depend on which word holds the bit, so
+    ``simhash32 = c0 * 2^16 + c1``. The oracle still builds the 32-bit
+    digest from its own hash/sum pass, so it checks this identity too."""
+    ch = dedup.simhash64_chunks(_t(spark, sf_dir, "documents"))
+    s32 = (F.col("c0") * 65536 + F.col("c1")).cast("long").alias("simhash32")
+    return ch.select("id", s32, "c0", "c1", "c2", "c3").orderBy("id")
 
 
 def q_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -536,28 +537,19 @@ def q_fingerprint48(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the Hamming<=3 simhash near-dup graph by
-    BOTH algorithms in one driver-checked entry (registry curation — the
-    r05 slot freed here holds decontamination_hits): min-label propagation
-    (`component`) and large-star/small-star contraction (`component_star`,
-    Kiveris et al. — the web-scale path: O(log n) rounds regardless of
-    graph diameter). The oracle emits the recursive-CTE reachability-min
-    labelling for both columns, so the driver's hash check asserts the two
-    algorithms agree with the oracle AND each other. A dedup pipeline
-    keeps one doc per COMPONENT — pairs alone under-dedup transitive
-    duplicate chains."""
+    iterative min-label propagation; the oracle is the recursive-CTE
+    reachability-min labelling. A dedup pipeline keeps one doc per
+    COMPONENT — pairs alone under-dedup transitive duplicate chains."""
     nodes, edges = _neardup_graph(spark, sf_dir)
-    lp = dedup.connected_components(nodes, edges)
-    star = dedup.connected_components_star(nodes, edges).withColumnRenamed(
-        "component", "component_star"
-    )
-    return lp.join(star, "id").orderBy("id")
+    return dedup.connected_components(nodes, edges)
 
 
 def _neardup_graph(spark: SparkSession, sf_dir: str):
     """(nodes, edges) of the Hamming<=3 simhash near-dup graph. Edges are
-    persisted (tracked): both CC algorithms eagerly checkpoint their edge
-    transforms up front, so without the persist the whole banding join
-    would execute once PER algorithm."""
+    persisted (tracked): ``connected_components`` checkpoints the
+    symmetric edge union up front, whose two arms each read the edges, so
+    without the persist the union would plan the whole banding join once
+    per arm."""
     from pyspark import StorageLevel
 
     docs = _doubled_docs(spark, sf_dir, exact=False)
@@ -599,9 +591,7 @@ def q_decontamination_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup pipeline's final act: keep exactly ONE doc per near-dup
     component (the min id — same first-wins rule as D1), emitting survivor
-    rows with their duplicate count. Uses label propagation alone — the
-    merged two-algorithm entry exists to pin algorithm agreement, which
-    this query need not re-prove."""
+    rows with their duplicate count."""
     nodes, edges = _neardup_graph(spark, sf_dir)
     comp = dedup.connected_components(nodes, edges)
     return (
@@ -1188,8 +1178,7 @@ reach AS (
   UNION
   SELECT s.y AS id, reach.r AS r FROM reach JOIN sym s ON s.x = reach.id
 )
-SELECT CAST(id AS BIGINT) AS id, CAST(min(r) AS BIGINT) AS component,
-       CAST(min(r) AS BIGINT) AS component_star
+SELECT CAST(id AS BIGINT) AS id, CAST(min(r) AS BIGINT) AS component
 FROM reach GROUP BY id ORDER BY id
 """
 

@@ -39,11 +39,9 @@ __all__ = [
     "minhash_lsh_pairs_incremental",
     "ngram_jaccard_pairs",
     "decontamination_hits",
-    "simhash",
     "simhash64_chunks",
     "simhash_hamming_pairs",
     "connected_components",
-    "connected_components_star",
 ]
 
 
@@ -359,41 +357,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 32
-) -> DataFrame:
-    """Per-doc SimHash over whitespace tokens.
-
-    Each token hashes to a ``bits``-wide integer via the first 8 hex chars of
-    md5 (portable); bit b of the simhash is 1 iff the majority of tokens have
-    bit b set. Returns (id, simhash bigint). Hamming-near docs are near-dups.
-    """
-    toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
-    ).filter(F.length("tok") > 0)
-    h = F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long")
-    toks = toks.select("id", h.alias("h"))
-    per_tok_bits = toks.select(
-        "id",
-        *[
-            F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)).alias(f"b{b}")
-            for b in range(bits)
-        ],
-    )
-    agg = per_tok_bits.groupBy("id").agg(
-        F.count("*").alias("n"),
-        *[F.sum(f"b{b}").alias(f"s{b}") for b in range(bits)],
-    )
-    sim = None
-    for b in range(bits):
-        term = F.when(
-            F.col(f"s{b}") * 2 > F.col("n"), F.lit(2 ** b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        sim = term if sim is None else (sim + term)
-    return agg.select("id", sim.alias("simhash")).orderBy("id")
-
-
 def simhash64_chunks(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -544,9 +507,7 @@ def connected_components(
     rounds. If the loop exhausts ``max_iters`` without converging the
     result is a WRONG (over-split) labelling — a chain deeper than
     max_iters hops keeps propagating — so that case raises rather than
-    returning silently. At extreme scale swap the body for the
-    large-star/small-star alternation (same driver-loop shape, fewer skew
-    hazards on giant components).
+    returning silently.
     """
     # localCheckpoint (not persist) on every iteration output: a persisted
     # DataFrame still CARRIES its full logical plan, so by iteration k
@@ -598,83 +559,3 @@ def connected_components(
             "raise max_iters (graph diameter exceeds it)"
         )
     return labels.orderBy("id")
-
-
-def connected_components_star(
-    nodes: DataFrame, edges: DataFrame, max_iters: int = 50
-) -> DataFrame:
-    """Connected components via large-star / small-star alternation — the
-    web-scale algorithm (Kiveris et al., "Connected Components in MapReduce
-    and Beyond") this module's min-label propagation documents as its
-    upgrade path.
-
-    Why it scales where label propagation doesn't: propagation needs
-    diameter-many rounds, each joining the FULL edge set against the full
-    label table; star contraction converges in O(log n) rounds and each
-    round's aggregation key is a node with its (shrinking) neighbor list,
-    so a giant component costs its min-node one hot groupBy key instead of
-    re-shuffling every edge every round.
-
-    One round =
-      large-star: per node u over its full neighborhood, connect every
-        LARGER neighbor directly to m = min(N(u) ∪ {u});
-      small-star: per node u over its smaller neighbors (edges oriented
-        big->small), connect them and u to their minimum.
-    The fixpoint is a union of stars centered at each component's min node.
-    Same contract as ``connected_components``: nodes (id), edges
-    (id_a, id_b) undirected -> (id, component=min reachable id); raises on
-    non-convergence rather than returning a wrong (unfinished) labelling.
-    """
-    e, e_id = _local_checkpoint_tracked(
-        edges.filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.greatest("id_a", "id_b").alias("big"),
-            F.least("id_a", "id_b").alias("small"),
-        )
-        .distinct()
-    )
-    converged = False
-    for _ in range(max_iters):
-        # ---- large-star (full neighborhood, each undirected edge seen once
-        # from its smaller endpoint)
-        sym = e.select(F.col("big").alias("u"), F.col("small").alias("v")).unionByName(
-            e.select(F.col("small").alias("u"), F.col("big").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
-        large = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("big"), F.col("m").alias("small"))
-            .distinct()
-        )
-        # ---- small-star (smaller-neighbor lists of the big endpoints)
-        mins2 = large.groupBy("big").agg(F.min("small").alias("m"))
-        joined = large.join(mins2, "big")
-        new_e, new_id = _local_checkpoint_tracked(
-            joined.filter(F.col("small") != F.col("m"))
-            .select(F.col("small").alias("big"), F.col("m").alias("small"))
-            .unionByName(joined.select("big", F.col("m").alias("small")))
-            .distinct()
-        )
-        changed = (
-            new_e.exceptAll(e).count() + e.exceptAll(new_e).count()
-        )
-        _unpersist_rdd_id(e, e_id)
-        e, e_id = new_e, new_id
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iters} rounds"
-        )
-    out = (
-        nodes.join(
-            e.select(F.col("big").alias("id"), F.col("small").alias("component")),
-            "id",
-            "left",
-        )
-        .groupBy("id")
-        .agg(F.coalesce(F.min("component"), F.first("id")).alias("component"))
-    )
-    return out.orderBy("id")

@@ -49,6 +49,7 @@ __all__ = [
     "reassemble",
     "scan_plan",
     "job_session",
+    "extract_input",
     "run_extraction",
 ]
 
@@ -302,20 +303,33 @@ def job_session(spark: SparkSession, split_bytes: int | None = None) -> SparkSes
     return s2
 
 
+def extract_input(
+    spark: SparkSession,
+    input_path: str,
+    cfg: ExtractConfig = DEFAULT_CONFIG,
+    num_partitions: int | None = None,
+    fallback: bool = False,
+) -> DataFrame:
+    """Read → extract, unordered: ``scan_plan`` sizes the scan for
+    ``num_partitions`` cores (default: the context's parallelism), a
+    ``job_session`` applies it, and ``extract_turns`` runs the kernel.
+
+    The returned DataFrame is bound to that per-job session, so the
+    caller's session conf is never touched and concurrent jobs in one
+    application can't inherit another input's tuning. Readers that need
+    ``turn_seq`` wrap it in ``reassemble``; the rest skip its exchange."""
+    cpus = num_partitions or spark.sparkContext.defaultParallelism
+    split, salt = scan_plan(input_path, cpus)
+    df = job_session(spark, split).read.schema(TRANSCRIPT_SPARK_SCHEMA).parquet(input_path)
+    return extract_turns(df, cfg, salt=salt, fallback=fallback)
+
+
 def run_extraction(
     spark: SparkSession,
     input_path: str,
     cfg: ExtractConfig = DEFAULT_CONFIG,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Read → extract → reassemble. Write/lineage live in lineage.py.
-
-    The returned DataFrame is bound to a per-job session (``job_session``)
-    carrying this input's scan sizing; the caller's session conf is never
-    touched, so concurrent jobs in one application can't inherit another
-    input's tuning."""
-    cpus = num_partitions or spark.sparkContext.defaultParallelism
-    split, salt = scan_plan(input_path, cpus)
-    s = job_session(spark, split)
-    df = s.read.schema(TRANSCRIPT_SPARK_SCHEMA).parquet(input_path)
-    return reassemble(extract_turns(df, cfg, salt=salt), num_partitions)
+    """Read → extract → reassemble (``extract_input`` then ``reassemble``).
+    Write/lineage live in lineage.py."""
+    return reassemble(extract_input(spark, input_path, cfg, num_partitions), num_partitions)

@@ -42,6 +42,24 @@ def row_key(row: dict, cols: list[str]) -> tuple:
     return tuple(norm(row[c]) for c in cols)
 
 
+def mismatches(srows: list[dict], scols: list[str], orows: list[dict], ocols: list[str]) -> list[str]:
+    """Spark rows vs oracle rows (column lists sorted): column names, row
+    count, then the value multiset. Empty means equal."""
+    msgs = []
+    if scols != ocols:
+        msgs.append(f"cols spark={scols} oracle={ocols}")
+    if len(srows) != len(orows):
+        msgs.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
+    if not msgs:
+        sset = Counter(row_key(r, scols) for r in srows)
+        oset = Counter(row_key(r, scols) for r in orows)
+        if sset != oset:
+            diff_s = list((sset - oset).items())[:3]
+            diff_o = list((oset - sset).items())[:3]
+            msgs.append(f"values spark-only={diff_s} oracle-only={diff_o}")
+    return msgs
+
+
 def main() -> int:
     from pyspark.sql import SparkSession
 
@@ -99,18 +117,7 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL {name}: duckdb error: {type(e).__name__}: {e}")
             continue
-        msgs = []
-        if scols != ocols:
-            msgs.append(f"cols spark={scols} oracle={ocols}")
-        if len(srows) != len(orows):
-            msgs.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
-        if not msgs:
-            sset = Counter(row_key(r, scols) for r in srows)
-            oset = Counter(row_key(r, scols) for r in orows)
-            if sset != oset:
-                diff_s = list((sset - oset).items())[:3]
-                diff_o = list((oset - sset).items())[:3]
-                msgs.append(f"values spark-only={diff_s} oracle-only={diff_o}")
+        msgs = mismatches(srows, scols, orows, ocols)
         if msgs:
             failures.append(name)
             print(f"FAIL {name}: " + " | ".join(msgs))

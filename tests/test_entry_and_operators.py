@@ -529,9 +529,9 @@ def test_connected_components_transitive(spark):
 
 
 def test_star_components_match_label_propagation(spark):
-    """large-star/small-star must produce the IDENTICAL labelling as the
-    label-propagation baseline on chains, cliques, stars, and a pseudo-
-    random graph (the two implementations share no code)."""
+    """Label propagation must produce the labelling a pure-Python
+    union-find gives (component = min id reachable) on a long chain, a
+    clique, a star and a pseudo-random graph with self-loops."""
     import random
 
     rng = random.Random(42)
@@ -542,33 +542,45 @@ def test_star_components_match_label_propagation(spark):
     edges += [
         (rng.randrange(60, n), rng.randrange(60, n)) for _ in range(60)
     ]  # random (incl. self-loops to ignore)
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # the root stays the min id
+    expected = {i: find(i) for i in range(n)}
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
     edf = spark.createDataFrame(edges, "id_a long, id_b long")
-    base = {
+    out = {
         r["id"]: r["component"]
         for r in dedup.connected_components(nodes, edf, max_iters=60).collect()
     }
-    star = {
-        r["id"]: r["component"]
-        for r in dedup.connected_components_star(nodes, edf).collect()
-    }
-    assert star == base
-    assert star[30] == 0 and star[45] == 40 and star[59] == 50
+    assert out == expected
+    assert out[30] == 0 and out[45] == 40 and out[59] == 50
 
 
 def test_star_components_round_count(spark):
-    """The point of star contraction: a diameter-64 chain converges in
-    O(log n) rounds, far under the diameter the propagation loop needs."""
+    """Label propagation needs diameter-many rounds: a diameter-63 chain
+    raises at ``max_iters=12`` instead of returning an over-split
+    labelling, and converges to one component at ``max_iters=64`` (63
+    propagating rounds plus the round that sees no change)."""
     n = 64
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(nodes, chain, max_iters=12)
     out = {
         r["id"]: r["component"]
-        for r in dedup.connected_components_star(nodes, chain, max_iters=12).collect()
+        for r in dedup.connected_components(nodes, chain, max_iters=64).collect()
     }
-    assert out == {i: 0 for i in range(n)}  # 12 rounds suffice for diameter 63
+    assert out == {i: 0 for i in range(n)}
 
 
 def test_connected_components_nonconvergence_raises(spark):
@@ -610,6 +622,32 @@ def test_connected_components_frees_checkpoint_blocks(spark):
     # >= 20 checkpoints were created across the iterations; at most the
     # final labels generation should still be resident
     assert n_persistent() <= base + 1
+
+
+@pytest.mark.parametrize(
+    "name", ["simhash_digests", "neardup_components", "neardup_survivors"]
+)
+def test_simhash_and_neardup_match_oracles(spark, name):
+    """The simhash digests and both near-dup component queries equal their
+    DuckDB oracles at sf0.001, compared as scripts/check_oracles.py does:
+    column names, row count and the value multiset."""
+    import duckdb
+
+    from pdf_parser_spark.caching import release_persisted
+    from scripts.check_oracles import mismatches
+
+    sdf = entrymod.queries()[name](spark, SF)
+    srows = [r.asDict() for r in sdf.collect()]
+    spark.catalog.clearCache()
+    release_persisted()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{os.path.join(SF, 'documents.parquet')}'"
+    )
+    rel = con.sql(entrymod.oracle_sql()[name])
+    orows = [dict(zip(rel.columns, r)) for r in rel.fetchall()]
+    assert srows
+    assert mismatches(srows, sorted(sdf.columns), orows, sorted(rel.columns)) == []
 
 
 _LANG_ROWS = [

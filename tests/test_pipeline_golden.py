@@ -4,7 +4,7 @@ byte-for-byte, under stable (conv_id, turn_idx) ordering (BASELINE.json:2).
 The golden is produced by calling kernels.extract.extract_batch directly on
 pandas (no Spark); the pipeline wraps the identical function in mapInPandas.
 Equality therefore validates the Spark orchestration: salting, Arrow
-round-trip, range repartition, window reassembly.
+round-trip, hash repartition, window reassembly.
 """
 from __future__ import annotations
 

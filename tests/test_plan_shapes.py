@@ -98,6 +98,15 @@ def test_extraction_queries_never_sample_the_kernel(spark, name):
     assert "InMemoryTableScan" not in plan, plan
 
 
+@pytest.mark.parametrize("name", ["extract_kind_stats", "o5_turn_slice"])
+def test_queries_without_turn_seq_skip_reassembly(spark, name):
+    """Queries that never read ``turn_seq`` build on the unordered
+    extraction: no conv_id exchange (only the salt exchange, keyed on
+    xxhash64(conv_id, turn_idx), may appear)."""
+    plan = physical_plan(entrymod.queries()[name](spark, SF))
+    assert "hashpartitioning(conv_id" not in plan.lower(), plan
+
+
 def test_relational_glue_codegen(spark):
     # AQE materializes the final plan at execution; codegen-mode explain then
     # reports the fused subtrees — the scan/filter/agg glue must be in them
