@@ -11,7 +11,9 @@ accumulate MEMORY_AND_DISK blocks for the whole session.
 Per-call broadcasts have the same lifetime problem: the lazy plan reads
 them when it runs, and an undestroyed broadcast keeps its blocks on the
 driver and every executor for the whole session. Operators register those
-too, and ``release_persisted()`` destroys them.
+too, and ``release_persisted()`` destroys them. The same goes for a
+checkpointed JVM RDD that a returned plan reads (``connected_components``'
+final label generation): it is registered and unpersisted the same way.
 
 Contract: operators register their per-call persists via ``track``; a
 long-running caller (driver harness, bench loop, ingestion scheduler,
@@ -37,8 +39,8 @@ _LOCK = threading.Lock()
 
 
 def track(obj: DataFrame | Broadcast) -> DataFrame | Broadcast:
-    """Register an already-persisted DataFrame, or a per-call broadcast,
-    for later release."""
+    """Register an already-persisted DataFrame (or JVM RDD), or a per-call
+    broadcast, for later release."""
     with _LOCK:
         _TRACKED.append(obj)
     return obj

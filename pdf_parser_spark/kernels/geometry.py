@@ -16,7 +16,10 @@ Behavioral parity with the reference's served product (``pdf_api/core``):
   filter_contained) or overlap ratio strictly > overlap_threshold
   (``pdf_image_extractor.py:594-640`` ``_filter_overlapping_images``).
 
-All functions are vectorized numpy; NMS is O(n²) per group, which is safe
+``merge_ranges`` applies the same touching-counts rule to 1-D half-open
+ranges (HTML character spans, PDF byte ranges, base64 spans).
+
+The box functions are vectorized numpy; NMS is O(n²) per group, which is safe
 because groups are single pages (reference never crosses pages —
 ``pdfplumber/pdf_image_extractor_improved.py:326-342``).
 """
@@ -29,6 +32,7 @@ __all__ = [
     "overlap_ratio_matrix",
     "contained_matrix",
     "nms_keep_mask",
+    "merge_ranges",
 ]
 
 
@@ -119,3 +123,15 @@ def nms_keep_mask(
             keep[i] = True
             kept_idx.append(int(i))
     return keep
+
+
+def merge_ranges(ranges) -> list[tuple[int, int]]:
+    """Sorted maximal ranges covering ``ranges``; a range starting at or
+    before the previous end (nested, overlapping or touching) merges."""
+    merged: list[tuple[int, int]] = []
+    for s, e in sorted(ranges):
+        if merged and s <= merged[-1][1]:
+            merged[-1] = (merged[-1][0], max(merged[-1][1], e))
+        else:
+            merged.append((s, e))
+    return merged

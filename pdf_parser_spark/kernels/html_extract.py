@@ -6,17 +6,19 @@ reference (SURVEY.md §2.10 K8), so this is a from-scratch kernel.
 
 Algorithm (deterministic, regex tokenizer — no external HTML lib):
 
-1. Strip ``<script>``/``<style>``/comments wholesale (they never contribute
-   main content).
-2. Linear scan of tags and text nodes; maintain a stack of open elements and
-   boilerplate-ancestor depth (nav/header/footer/aside/form/button/select).
+1. Blank out ``<script>``/``<style>``/comments with spaces of the same
+   length, so tags inside them are never seen and offsets stay valid.
+2. One linear scan of tags and text nodes. ``_TAGS`` classifies a tag by the
+   depth counter it opens or closes (link ``<a>``; boilerplate
+   nav/header/footer/aside/form/button/select; dropped content head/title)
+   and by whether it starts a block; unclassified tags only end a text node.
 3. Text nodes accumulate into the current *block*, delimited by block-level
    tags (p, div, article, section, h1..h6, li, td, th, pre, blockquote, main,
    table, ul, ol, tr, br, title, body, html, head, nav, header, footer,
-   aside, figure, figcaption).
+   aside, figure, figcaption, form). A block that starts, or has a text node,
+   inside boilerplate or dropped content is discarded.
 4. Per block compute ``text_len`` (entity-decoded, whitespace-collapsed) and
    ``link_text_len`` (portion inside <a>); keep a block iff:
-   - not inside a boilerplate ancestor, AND
    - link_density = link_text_len / text_len <= max_link_density, AND
    - text_len >= min_block_chars, OR (block tag is h1..h6 and
      text_len >= heading_min_chars and link_text_len == 0).
@@ -27,9 +29,9 @@ Algorithm (deterministic, regex tokenizer — no external HTML lib):
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
 
 from ..config import ExtractConfig, DEFAULT_CONFIG
+from .geometry import merge_ranges
 
 __all__ = ["extract_html"]
 
@@ -38,16 +40,19 @@ _SCRIPT_RE = re.compile(
     re.DOTALL | re.IGNORECASE,
 )
 _TAG_RE = re.compile(r"<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9]*)[^>]*?(/?)\s*>")
-_WS_RE = re.compile(r"\s+")
-
-_BLOCK_TAGS = frozenset(
-    "p div article section h1 h2 h3 h4 h5 h6 li td th pre blockquote main "
-    "table ul ol tr br title body html head nav header footer aside figure "
-    "figcaption form".split()
-)
-_BOILER_TAGS = frozenset("nav header footer aside form button select".split())
 _HEADING_TAGS = frozenset("h1 h2 h3 h4 h5 h6".split())
-_DROP_CONTENT_TAGS = frozenset("head title".split())
+
+# tag -> (index into the depth counters it opens/closes or None, starts a block)
+_LINK, _BOILER, _DROP = 0, 1, 2
+_TAGS = {
+    **dict.fromkeys(
+        "p div article section h1 h2 h3 h4 h5 h6 li td th pre blockquote main "
+        "table ul ol tr br body html figure figcaption".split(), (None, True)),
+    **dict.fromkeys("nav header footer aside form".split(), (_BOILER, True)),
+    **dict.fromkeys("button select".split(), (_BOILER, False)),
+    **dict.fromkeys("head title".split(), (_DROP, True)),
+    "a": (_LINK, False),
+}
 
 # Named character references: the XML five + the names that dominate wild
 # HTML (typography, spaces, legal marks, arrows/math common in docs, and the
@@ -124,110 +129,67 @@ def _decode_entities(s: str) -> str:
     return _ENTITY_RE.sub(_entity_char, s)
 
 
-def _normalize(s: str) -> str:
-    return _WS_RE.sub(" ", _decode_entities(s)).strip()
+def extract_html(
+    raw: str, cfg: ExtractConfig = DEFAULT_CONFIG
+) -> tuple[str, list[tuple[int, int]], int]:
+    """Return (main_text, spans into raw html, n_blocks_kept)."""
+    masked = _SCRIPT_RE.sub(lambda m: " " * (m.end() - m.start()), raw)
+    # blocks are (tag, [(raw_start, raw_end, inside_link) per text node]),
+    # kept only outside boilerplate and dropped content
+    blocks: list[tuple[str, list[tuple[int, int, bool]]]] = []
+    tag, segs, skip = "body", [], False
+    depth = [0, 0, 0]  # link, boilerplate, dropped content
+    pos = 0
+    for m in _TAG_RE.finditer(masked):
+        start = m.start()
+        if start > pos and not masked[pos:start].isspace():
+            skip = skip or depth[_BOILER] > 0 or depth[_DROP] > 0
+            segs.append((pos, start, depth[_LINK] > 0))
+        pos = m.end()
+        closing, name, self_close = m.groups()
+        name = name.lower()
+        kind = _TAGS.get(name)
+        if kind is None:
+            continue
+        counter, starts_block = kind
+        if counter is not None and not self_close:
+            depth[counter] = max(0, depth[counter] - 1) if closing else depth[counter] + 1
+        if starts_block:
+            if segs and not skip:
+                blocks.append((tag, segs))
+            tag, segs = ("body" if closing else name), []
+            skip = depth[_BOILER] > 0 or depth[_DROP] > 0
+    if pos < len(masked) and not masked[pos:].isspace():
+        segs.append((pos, len(masked), depth[_LINK] > 0))
+    if segs and not skip:
+        blocks.append((tag, segs))
 
-
-@dataclass
-class _Block:
-    tag: str
-    segments: list[tuple[int, int, bool]] = field(default_factory=list)
-    # (raw_start, raw_end, inside_link) per text node
-    boiler: bool = False
-    dropped: bool = False
-
-    def finalize(self, raw: str) -> tuple[str, int, int, list[tuple[int, int]]]:
+    kept_texts: list[str] = []
+    kept_spans: list[tuple[int, int]] = []
+    for tag, segs in blocks:
         texts: list[str] = []
-        link_len = 0
         spans: list[tuple[int, int]] = []
-        for s, e, in_link in self.segments:
+        link_len = 0
+        for s, e, in_link in segs:
             seg = raw[s:e]
-            norm = _normalize(seg)
+            norm = " ".join((_decode_entities(seg) if "&" in seg else seg).split())
             if not norm:
                 continue
             texts.append(norm)
             if in_link:
                 link_len += len(norm)
             # trim span to non-whitespace extent of the raw segment
-            ls = len(seg) - len(seg.lstrip())
-            rs = len(seg) - len(seg.rstrip())
-            spans.append((s + ls, e - rs))
+            spans.append((e - len(seg.lstrip()), s + len(seg.rstrip())))
         text = " ".join(texts)
-        return text, len(text), link_len, spans
-
-
-def extract_html(
-    raw: str, cfg: ExtractConfig = DEFAULT_CONFIG
-) -> tuple[str, list[tuple[int, int]], int]:
-    """Return (main_text, spans into raw html, n_blocks_kept)."""
-    # Blank out scripts/styles/comments in a COPY with same length so raw
-    # offsets stay valid.
-    masked_chars = list(raw)
-    for m in _SCRIPT_RE.finditer(raw):
-        for i in range(m.start(), m.end()):
-            masked_chars[i] = " "
-    masked = "".join(masked_chars)
-
-    blocks: list[_Block] = []
-    cur = _Block(tag="body")
-    link_depth = 0
-    boiler_depth = 0
-    drop_depth = 0
-    pos = 0
-
-    def flush(next_tag: str) -> None:
-        nonlocal cur
-        if cur.segments:
-            blocks.append(cur)
-        cur = _Block(tag=next_tag, boiler=boiler_depth > 0, dropped=drop_depth > 0)
-
-    for m in _TAG_RE.finditer(masked):
-        if m.start() > pos:
-            seg_start, seg_end = pos, m.start()
-            if masked[seg_start:seg_end].strip():
-                cur.boiler = cur.boiler or boiler_depth > 0
-                cur.dropped = cur.dropped or drop_depth > 0
-                cur.segments.append((seg_start, seg_end, link_depth > 0))
-        closing, tag, self_close = m.group(1) == "/", m.group(2).lower(), m.group(3) == "/"
-        if tag == "a" and not self_close:
-            link_depth = max(0, link_depth - 1) if closing else link_depth + 1
-        if tag in _BOILER_TAGS and not self_close:
-            boiler_depth = max(0, boiler_depth - 1) if closing else boiler_depth + 1
-        if tag in _DROP_CONTENT_TAGS and not self_close:
-            drop_depth = max(0, drop_depth - 1) if closing else drop_depth + 1
-        if tag in _BLOCK_TAGS:
-            flush(next_tag=tag if not closing else "body")
-        pos = m.end()
-    if pos < len(masked) and masked[pos:].strip():
-        cur.segments.append((pos, len(masked), link_depth > 0))
-    if cur.segments:
-        blocks.append(cur)
-
-    kept_texts: list[str] = []
-    kept_spans: list[tuple[int, int]] = []
-    n_kept = 0
-    for blk in blocks:
-        if blk.dropped or blk.boiler:
-            continue
-        text, tlen, link_len, spans = blk.finalize(raw)
+        tlen = len(text)
         if tlen == 0:
             continue
-        link_density = link_len / tlen
-        is_heading = blk.tag in _HEADING_TAGS
-        keep = (
+        if (
             tlen >= cfg.html_min_block_chars
-            and link_density <= cfg.html_max_link_density
-        ) or (is_heading and tlen >= cfg.html_heading_min_chars and link_len == 0)
-        if keep:
+            and link_len / tlen <= cfg.html_max_link_density
+        ) or (
+            tag in _HEADING_TAGS and tlen >= cfg.html_heading_min_chars and link_len == 0
+        ):
             kept_texts.append(text)
             kept_spans.extend(spans)
-            n_kept += 1
-
-    kept_spans.sort()
-    merged: list[tuple[int, int]] = []
-    for s, e in kept_spans:
-        if merged and s <= merged[-1][1]:
-            merged[-1] = (merged[-1][0], max(merged[-1][1], e))
-        else:
-            merged.append((s, e))
-    return "\n\n".join(kept_texts), merged, n_kept
+    return "\n\n".join(kept_texts), merge_ranges(kept_spans), len(kept_texts)

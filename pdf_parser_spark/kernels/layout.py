@@ -26,6 +26,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from math import isfinite
 
+from .geometry import merge_ranges
 from .pdf_mini import CHAR_WIDTH_RATIO, ParsedPage, ParsedRun
 from ..config import ExtractConfig, DEFAULT_CONFIG
 
@@ -190,13 +191,8 @@ def join_pages(
     """Join ``page_text`` results into (text, sorted maximal byte ranges
     into the raw PDF bytes, n_blocks). Pages without blocks leave no gap."""
     text = "\n\n".join(t for t, _, n in pages if n)
-    ranges: list[list[int]] = []
-    for s, e in sorted(seg for _, segs, _ in pages for seg in segs):
-        if ranges and s <= ranges[-1][1]:
-            ranges[-1][1] = max(ranges[-1][1], e)
-        else:
-            ranges.append([s, e])
-    return text, [(s, e) for s, e in ranges], sum(n for _, _, n in pages)
+    ranges = merge_ranges(seg for _, segs, _ in pages for seg in segs)
+    return text, ranges, sum(n for _, _, n in pages)
 
 
 def layout_text_and_offsets(
@@ -216,12 +212,6 @@ def byte_ranges_to_base64_spans(
     documented as the span contract for pdf payload kinds (spans point into
     the raw ``text`` column per FIXTURES.md §3, which for PDFs is base64).
     """
-    spans = [((s // 3) * 4, min(((e + 2) // 3) * 4, b64_len)) for s, e in ranges]
-    spans.sort()
-    merged: list[tuple[int, int]] = []
-    for s, e in spans:
-        if merged and s <= merged[-1][1]:
-            merged[-1] = (merged[-1][0], max(merged[-1][1], e))
-        else:
-            merged.append((s, e))
-    return merged
+    return merge_ranges(
+        ((s // 3) * 4, min(((e + 2) // 3) * 4, b64_len)) for s, e in ranges
+    )

@@ -455,36 +455,17 @@ def simhash_hamming_pairs(
 
 
 def _local_checkpoint_tracked(df: DataFrame):
-    """localCheckpoint(eager) + the persistent-RDD id holding its blocks.
+    """localCheckpoint(eager) + the JVM RDD holding its blocks.
 
-    The id lets the caller free the blocks explicitly once a later iteration
-    no longer reads them (checkpoint blocks otherwise accumulate until the
-    ContextCleaner happens to GC them). Identified by snapshotting
-    ``getPersistentRDDs`` around the checkpoint — the driver loop is
-    sequential so the diff is exactly the new checkpoint's RDD; if anything
-    else raced in we return None and skip explicit cleanup (safe: cleanup
-    is an optimization, correctness never depends on it).
+    The handle lets the caller free the blocks explicitly once a later
+    iteration no longer reads them (checkpoint blocks otherwise accumulate
+    until the ContextCleaner happens to GC them). The checkpointed frame's
+    plan is a ``LogicalRDD`` over exactly that RDD; diffing
+    ``getPersistentRDDs`` around the checkpoint would also catch a persisted
+    input that the checkpoint job materializes.
     """
-    jsc = df.sparkSession.sparkContext._jsc.sc()
-
-    def _ids():
-        m = jsc.getPersistentRDDs().toList()
-        return {m.apply(i)._1() for i in range(m.size())}
-
-    before = _ids()
     out = df.localCheckpoint(eager=True)
-    new = _ids() - before
-    return out, (new.pop() if len(new) == 1 else None)
-
-
-def _unpersist_rdd_id(df: DataFrame, rdd_id) -> None:
-    if rdd_id is None:
-        return
-    m = df.sparkSession.sparkContext._jsc.sc().getPersistentRDDs().toList()
-    for i in range(m.size()):
-        if m.apply(i)._1() == rdd_id:
-            m.apply(i)._2().unpersist(False)
-            return
+    return out, out._jdf.logicalPlan().rdd()
 
 
 def connected_components(
@@ -501,7 +482,9 @@ def connected_components(
     fixpoint (each iteration: one join + one groupBy; convergence checked
     with a count action on changed labels; the previous iteration's
     checkpoint blocks are explicitly unpersisted once ``changed`` has been
-    computed, so block storage holds at most two label generations).
+    computed, so block storage holds at most two label generations; the
+    final generation is ``track``ed, so ``caching.release_persisted()``
+    frees it).
     Iterations needed = graph diameter; near-dup graphs are
     shallow (dup clusters are cliques-ish), so this converges in 2-3
     rounds. If the loop exhausts ``max_iters`` without converging the
@@ -514,13 +497,13 @@ def connected_components(
     # Catalyst re-analyzes a k-deep plan and the driver-side cost grows
     # super-linearly (measured 1.5s -> 18s by iteration 3); checkpointing
     # truncates the lineage so every round plans against a flat scan.
-    sym, sym_id = _local_checkpoint_tracked(
+    sym, sym_rdd = _local_checkpoint_tracked(
         edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
             edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
     )
-    labels, labels_id = _local_checkpoint_tracked(
+    labels, labels_rdd = _local_checkpoint_tracked(
         nodes.select(F.col("id"), F.col("id").alias("component"))
     )
     changed = -1
@@ -530,7 +513,7 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("component").alias("nbr_min"))
         )
-        new_labels, new_id = _local_checkpoint_tracked(
+        new_labels, new_rdd = _local_checkpoint_tracked(
             labels.join(nbr, labels["id"] == nbr["src"], "left")
             .select(
                 labels["id"],
@@ -547,11 +530,12 @@ def connected_components(
         )
         # the old generation's blocks fed the eager checkpoint and the
         # `changed` count above; nothing reads them after this point
-        _unpersist_rdd_id(labels, labels_id)
-        labels, labels_id = new_labels, new_id
+        labels_rdd.unpersist(False)
+        labels, labels_rdd = new_labels, new_rdd
         if changed == 0:
             break
-    _unpersist_rdd_id(sym, sym_id)
+    sym_rdd.unpersist(False)
+    track(labels_rdd)  # the returned plan reads it until released
     if changed != 0:
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} iterations "

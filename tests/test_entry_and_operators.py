@@ -624,6 +624,32 @@ def test_connected_components_frees_checkpoint_blocks(spark):
     assert n_persistent() <= base + 1
 
 
+def test_release_persisted_frees_final_label_generation(spark):
+    """The final label generation is a localCheckpoint the returned plan
+    reads; release_persisted() must free it, so repeated runs in one
+    session return the persistent-RDD count to its base every time. The
+    edges are persisted and tracked as the registry's near-dup graph is:
+    the edge checkpoint materializes that persist, and its own blocks
+    must still be found and freed."""
+    from pyspark import StorageLevel
+
+    from pdf_parser_spark.caching import release_persisted, track
+
+    jsc = spark.sparkContext._jsc.sc()
+    release_persisted(blocking=True)
+    base = jsc.getPersistentRDDs().size()
+    nodes = spark.createDataFrame([(i,) for i in range(6)], "id long")
+    for _ in range(3):
+        edges = track(
+            spark.createDataFrame([(0, 1), (1, 2), (4, 5)], "id_a long, id_b long")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        out = dedup.connected_components(nodes, edges).collect()
+        assert [r["component"] for r in out] == [0, 0, 0, 3, 4, 4]
+        release_persisted(blocking=True)
+        assert jsc.getPersistentRDDs().size() == base
+
+
 @pytest.mark.parametrize(
     "name", ["simhash_digests", "neardup_components", "neardup_survivors"]
 )

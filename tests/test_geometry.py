@@ -7,6 +7,7 @@ import pytest
 from pdf_parser_spark.kernels.geometry import (
     boxes_overlap,
     contained_matrix,
+    merge_ranges,
     nms_keep_mask,
     overlap_ratio_matrix,
 )
@@ -98,3 +99,18 @@ def test_nms_idempotent():
     keep = nms_keep_mask(boxes, areas, min_size=10)
     again = nms_keep_mask(boxes[keep], areas[keep], min_size=10)
     assert again.all()
+
+
+@pytest.mark.parametrize(
+    "ranges, want",
+    [
+        ([], []),
+        ([(5, 9), (0, 2), (3, 4)], [(0, 2), (3, 4), (5, 9)]),  # unsorted, disjoint
+        ([(0, 10), (2, 3), (4, 10)], [(0, 10)]),  # nested
+        ([(0, 3), (3, 6), (7, 8)], [(0, 6), (7, 8)]),  # touching (e == s) merges
+        ([(4, 8), (0, 5), (6, 7), (9, 9)], [(0, 8), (9, 9)]),  # overlap, unsorted
+    ],
+)
+def test_merge_ranges(ranges, want):
+    assert merge_ranges(ranges) == want
+    assert merge_ranges(iter(ranges)) == want

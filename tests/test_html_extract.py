@@ -1,7 +1,19 @@
 """HTML boilerplate-strip kernel (K8) tests."""
 from __future__ import annotations
 
-from pdf_parser_spark.kernels.html_extract import extract_html
+import re
+from dataclasses import dataclass, field
+
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+
+from pdf_parser_spark.config import DEFAULT_CONFIG, ExtractConfig
+from pdf_parser_spark.kernels.html_extract import (
+    _SCRIPT_RE,
+    _TAG_RE,
+    _decode_entities,
+    extract_html,
+)
 
 PAGE = (
     "<html><head><title>t</title><style>.x{}</style>"
@@ -122,3 +134,156 @@ def test_entities_decode_inside_blocks_spans_stay_raw():
         assert 0 <= s < e <= len(html)
     s, e = spans[0]
     assert "&#8217;" in html[s:e]
+
+
+# ------------------------------------------------ frozen block-object oracle ---
+# The kernel before it became one pass over one tag table: a _Block object
+# per block, a flush closure, three tag sets, a per-char script mask and a
+# regex whitespace collapse. extract_html must return exactly what it did.
+
+_REF_WS_RE = re.compile(r"\s+")
+_REF_BLOCK_TAGS = frozenset(
+    "p div article section h1 h2 h3 h4 h5 h6 li td th pre blockquote main "
+    "table ul ol tr br title body html head nav header footer aside figure "
+    "figcaption form".split()
+)
+_REF_BOILER_TAGS = frozenset("nav header footer aside form button select".split())
+_REF_HEADING_TAGS = frozenset("h1 h2 h3 h4 h5 h6".split())
+_REF_DROP_CONTENT_TAGS = frozenset("head title".split())
+
+
+@dataclass
+class _Block:
+    tag: str
+    segments: list[tuple[int, int, bool]] = field(default_factory=list)
+    boiler: bool = False
+    dropped: bool = False
+
+    def finalize(self, raw):
+        texts, link_len, spans = [], 0, []
+        for s, e, in_link in self.segments:
+            seg = raw[s:e]
+            norm = _REF_WS_RE.sub(" ", _decode_entities(seg)).strip()
+            if not norm:
+                continue
+            texts.append(norm)
+            if in_link:
+                link_len += len(norm)
+            ls = len(seg) - len(seg.lstrip())
+            rs = len(seg) - len(seg.rstrip())
+            spans.append((s + ls, e - rs))
+        text = " ".join(texts)
+        return text, len(text), link_len, spans
+
+
+def ref_extract_html(raw, cfg=DEFAULT_CONFIG):
+    masked_chars = list(raw)
+    for m in _SCRIPT_RE.finditer(raw):
+        for i in range(m.start(), m.end()):
+            masked_chars[i] = " "
+    masked = "".join(masked_chars)
+
+    blocks = []
+    cur = _Block(tag="body")
+    link_depth = boiler_depth = drop_depth = 0
+    pos = 0
+
+    def flush(next_tag):
+        nonlocal cur
+        if cur.segments:
+            blocks.append(cur)
+        cur = _Block(tag=next_tag, boiler=boiler_depth > 0, dropped=drop_depth > 0)
+
+    for m in _TAG_RE.finditer(masked):
+        if m.start() > pos:
+            seg_start, seg_end = pos, m.start()
+            if masked[seg_start:seg_end].strip():
+                cur.boiler = cur.boiler or boiler_depth > 0
+                cur.dropped = cur.dropped or drop_depth > 0
+                cur.segments.append((seg_start, seg_end, link_depth > 0))
+        closing, tag, self_close = m.group(1) == "/", m.group(2).lower(), m.group(3) == "/"
+        if tag == "a" and not self_close:
+            link_depth = max(0, link_depth - 1) if closing else link_depth + 1
+        if tag in _REF_BOILER_TAGS and not self_close:
+            boiler_depth = max(0, boiler_depth - 1) if closing else boiler_depth + 1
+        if tag in _REF_DROP_CONTENT_TAGS and not self_close:
+            drop_depth = max(0, drop_depth - 1) if closing else drop_depth + 1
+        if tag in _REF_BLOCK_TAGS:
+            flush(next_tag=tag if not closing else "body")
+        pos = m.end()
+    if pos < len(masked) and masked[pos:].strip():
+        cur.segments.append((pos, len(masked), link_depth > 0))
+    if cur.segments:
+        blocks.append(cur)
+
+    kept_texts, kept_spans, n_kept = [], [], 0
+    for blk in blocks:
+        if blk.dropped or blk.boiler:
+            continue
+        text, tlen, link_len, spans = blk.finalize(raw)
+        if tlen == 0:
+            continue
+        keep = (
+            tlen >= cfg.html_min_block_chars
+            and link_len / tlen <= cfg.html_max_link_density
+        ) or (
+            blk.tag in _REF_HEADING_TAGS
+            and tlen >= cfg.html_heading_min_chars
+            and link_len == 0
+        )
+        if keep:
+            kept_texts.append(text)
+            kept_spans.extend(spans)
+            n_kept += 1
+
+    kept_spans.sort()
+    merged = []
+    for s, e in kept_spans:
+        if merged and s <= merged[-1][1]:
+            merged[-1] = (merged[-1][0], max(merged[-1][1], e))
+        else:
+            merged.append((s, e))
+    return "\n\n".join(kept_texts), merged, n_kept
+
+
+# ------------------------------------------------------------- tag soup -------
+
+_TOKENS = [
+    "<p>", "</p>", "<P class='x'>", "<div>", "</DIV>", "<h1>", "</h1>", "<H2 id=a>",
+    "<a href='/x'>", "</a>", "<A HREF=\"y\">", "</A >", "<a/>", "<br/>", "<br>",
+    "<nav>", "</nav>", "<NAV>", "<head>", "</head>", "<title>", "</title>",
+    "<header>", "</footer>", "<aside>", "<form>", "</form>", "<button>",
+    "</button>", "<select/>", "<span>", "</span>", "<li>", "<td>", "<b>",
+    "<html>", "<body>", "</body>", "< / p >", "<h3/>", "</nav></nav>",
+    "<script>x<p>y</p></script>", "<SCRIPT type=t>a</SCRIPT >", "<style>.p{}</style>",
+    "<!-- c <p>d</p> -->", "<!---->", "<!doctype html>", "<!",
+    "&amp;", "&lt;", "&#31;", "&#x27;", "&#146;", "&nbsp;", "&mdash;", "&shy;",
+    "&#9;", "&bogus;", "&", ";", "#", "!", "-", "<", ">", "/",
+    " ", "  ", "\n", "\t", "\xa0", "\u2003",
+    "word", "Content", "text that is long enough to be a kept block",
+]
+_SOUP = st.lists(
+    st.one_of(
+        st.sampled_from(_TOKENS),
+        st.text(alphabet="ab &;#!-<>/=' \n", max_size=6),
+    ),
+    max_size=60,
+).map("".join)
+# small thresholds so random blocks are often kept, with a heading rule
+# that differs from the density rule
+_LOW = ExtractConfig(
+    html_min_block_chars=4, html_max_link_density=0.5, html_heading_min_chars=2
+)
+
+
+@given(_SOUP, st.sampled_from([DEFAULT_CONFIG, _LOW]))
+@settings(max_examples=400, deadline=None)
+@example("<a/>text after a self-closed link is not link text", DEFAULT_CONFIG)
+@example("<p>a&#31;b and more words than the block minimum</p>", DEFAULT_CONFIG)
+@example("<a href='/'><h1>A Heading Inside A Link</h1></a>", DEFAULT_CONFIG)
+@example("<nav>menu</nav>text after the closed nav is main content", DEFAULT_CONFIG)
+@example("<p>long paragraph text<button>tail after an unclosed button", DEFAULT_CONFIG)
+@example("</p></a></nav></head>closers without openers stay at depth zero", _LOW)
+@example(PAGE, DEFAULT_CONFIG)
+def test_extract_html_matches_block_object_oracle(raw, cfg):
+    assert extract_html(raw, cfg) == ref_extract_html(raw, cfg)
