@@ -79,16 +79,14 @@ ANALYSIS_SCHEMA = T.StructType(
 def _explode(transcripts: DataFrame, payload_fn, schema: T.StructType) -> DataFrame:
     """One mapInPandas crossing over (conv_id, turn_idx, text): each batch
     becomes ``explode_records`` of its turns."""
-    from .. import ship_package
-
-    ship_package(transcripts.sparkSession)
+    from .. import map_in_pandas
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield explode_records(pdf, payload_fn, schema.names)
 
     df = transcripts.select("conv_id", "turn_idx", "text")
-    return df.mapInPandas(kernel, schema=schema)
+    return map_in_pandas(df, kernel, schema)
 
 
 def image_records(

@@ -54,9 +54,8 @@ def media_features(
     decode for PNG/JPEG bytes), so joining them against independently
     recorded dimensions cross-checks the decoder, not just the plumbing.
     """
-    from .. import ship_package
+    from .. import map_in_pandas
 
-    ship_package(media.sparkSession)
     key_cols = list(key_cols)
     schema = T.StructType(
         [media.schema[c] for c in key_cols]
@@ -92,7 +91,7 @@ def media_features(
             fdf = pd.DataFrame(feats, columns=schema.names[len(key_cols):])
             yield pd.concat([out, fdf], axis=1)
 
-    return media.mapInPandas(kernel, schema=schema)
+    return map_in_pandas(media, kernel, schema)
 
 
 def perceptual_dedup(
@@ -110,7 +109,7 @@ def perceptual_dedup(
     (``pdf_image_extractor_improved.py:77-124``), ordered first-wins by
     media_id within each group.
     """
-    from .. import ship_package
+    from .. import drop_zip_finders, ship_package
     from ..kernels.images import mostly_black, mostly_white, perceptual_keep_mask
 
     ship_package(media.sparkSession)
@@ -131,6 +130,7 @@ def perceptual_dedup(
             for b in pdf["payload"]
         ]
         keep = perceptual_keep_mask(arrays, sim_threshold)
+        drop_zip_finders()
         return pd.DataFrame(
             {
                 group_col: pdf[group_col],

@@ -39,7 +39,7 @@ def nms_filter(
     Returns the input rows plus a ``kept`` boolean, original order preserved
     within groups via img_idx.
     """
-    from .. import ship_package
+    from .. import drop_zip_finders, ship_package
 
     ship_package(boxes.sparkSession)
     schema = T.StructType(
@@ -62,6 +62,7 @@ def nms_filter(
         )
         out = pdf.copy()
         out["kept"] = keep
+        drop_zip_finders()
         return out
 
     return boxes.groupBy(*group_cols).applyInPandas(_group_nms, schema=schema)

@@ -136,9 +136,8 @@ def with_srp_buckets(
     Scale shape: narrow map, no shuffle, no state — the bucket column lands
     before any exchange, so at 100 TB this is scan-speed Arrow batches.
     """
-    from .. import ship_package
+    from .. import map_in_pandas
 
-    ship_package(df.sparkSession)
     out_schema = T.StructType(
         list(df.schema.fields)
         + [T.StructField(name, T.StringType(), False) for name, _, _ in bucket_specs]
@@ -157,7 +156,7 @@ def with_srp_buckets(
                     pdf[name] = pd.Series([], dtype=object)
             yield pdf
 
-    return df.mapInPandas(kernel, schema=out_schema)
+    return map_in_pandas(df, kernel, out_schema)
 
 
 def ann_lsh_topk(

@@ -179,10 +179,9 @@ def with_bpe_token_count(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from .. import ship_package
+    from .. import map_in_pandas
     from ..kernels.bpe import count_batch, default_ranks
 
-    ship_package(docs.sparkSession)
     # released with the call's persists: caching.release_persisted()
     bc = track(docs.sparkSession.sparkContext.broadcast(default_ranks()))
     schema = T.StructType(
@@ -198,7 +197,7 @@ def with_bpe_token_count(
             )
             yield pdf
 
-    return docs.mapInPandas(fn, schema)
+    return map_in_pandas(docs, fn, schema)
 
 
 def token_profile(

@@ -157,12 +157,11 @@ def extract_turns(
     plain text inside the kernel (``extract_one``): one pass, per row, so
     duplicate ``(conv_id, turn_idx)`` keys cannot fan out.
     """
-    from . import ship_package
+    from . import map_in_pandas
 
-    ship_package(df.sparkSession)
     if salt:
         df = df.repartition(F.xxhash64("conv_id", "turn_idx"))
-    return df.mapInPandas(_kernel_factory(cfg, fallback), schema=RESULT_SCHEMA)
+    return map_in_pandas(df, _kernel_factory(cfg, fallback), RESULT_SCHEMA)
 
 
 def reassemble(extracted: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -235,7 +234,11 @@ def adaptive_split_bytes(total_bytes: int, cpus: int) -> int:
     real cluster is far above the 16 MB cap, so the session default rules
     and the only effect is at bench/test scale where the input is small
     relative to the core count. Floor of 4 MB keeps per-task fixed costs
-    (python worker handshake, Arrow setup) amortized.
+    (python worker handshake, Arrow setup) amortized. Measured on a 4-vCPU
+    host, ``local[1]``, identity kernel: a reused worker takes a median
+    0.6 ms from task start to its first batch under ``map_in_pandas``,
+    against 150-156 ms while each task re-read its zip archives; a fresh
+    worker's first task still pays its imports.
     """
     if cpus <= 0:
         return _SPLIT_MAX

@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .. import drop_zip_finders, ship_package
+
 __all__ = [
     "PROGRESS_SCHEMA",
     "DEDUP_SCHEMA",
@@ -63,6 +65,7 @@ def _update(
         c += int(pdf["extracted_text"].str.len().fillna(0).sum())
         m = max(m, int(pdf["turn_idx"].max()))
     state.update((n, f, c, m))
+    drop_zip_finders()
     yield pd.DataFrame(
         [
             {
@@ -82,8 +85,6 @@ def conversation_progress(extracted: DataFrame) -> DataFrame:
     micro-batch that touched it. State lives in the state store keyed by
     conv_id — at cluster scale the store is partitioned with the stream,
     so a hot conversation costs one key, not a shuffle of history."""
-    from .. import ship_package
-
     ship_package(extracted.sparkSession)
     return extracted.groupBy("conv_id").applyInPandasWithState(
         _update,
@@ -120,6 +121,7 @@ def _dedup_update(
             int(first["turn_idx"]),
         ):
             first = cand
+    drop_zip_finders()
     if state.exists or first is None:
         return  # hash already claimed by an earlier micro-batch
     state.update((True,))
@@ -150,8 +152,6 @@ def streaming_exact_dedup(turns: DataFrame, text_col: str = "text") -> DataFrame
     novel hash per micro-batch; consumers anti-join their payload stream
     against the claims to materialize survivors.
     """
-    from .. import ship_package
-
     ship_package(turns.sparkSession)
     hashed = turns.select(
         F.md5(F.col(text_col)).alias("content_md5"), "conv_id", "turn_idx"
