@@ -8,12 +8,9 @@ expensive subtree once per consuming branch. But without any cleanup,
 repeated batch-ingestion calls (e.g. hourly incremental near-dup runs)
 accumulate MEMORY_AND_DISK blocks for the whole session.
 
-Per-call broadcasts have the same lifetime problem: the lazy plan reads
-them when it runs, and an undestroyed broadcast keeps its blocks on the
-driver and every executor for the whole session. Operators register those
-too, and ``release_persisted()`` destroys them. The same goes for a
-checkpointed JVM RDD that a returned plan reads (``connected_components``'
-final label generation): it is registered and unpersisted the same way.
+The same goes for a checkpointed JVM RDD that a returned plan reads
+(``connected_components``' final label generation): it is registered and
+unpersisted the same way.
 
 Contract: operators register their per-call persists via ``track``; a
 long-running caller (driver harness, bench loop, ingestion scheduler,
@@ -31,25 +28,23 @@ from __future__ import annotations
 
 import threading
 
-from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame
 
-_TRACKED: list[DataFrame | Broadcast] = []
+_TRACKED: list[DataFrame] = []
 _LOCK = threading.Lock()
 
 
-def track(obj: DataFrame | Broadcast) -> DataFrame | Broadcast:
-    """Register an already-persisted DataFrame (or JVM RDD), or a per-call
-    broadcast, for later release."""
+def track(obj: DataFrame) -> DataFrame:
+    """Register an already-persisted DataFrame (or JVM RDD) for later
+    release."""
     with _LOCK:
         _TRACKED.append(obj)
     return obj
 
 
 def release_persisted(blocking: bool = False) -> int:
-    """Unpersist every tracked frame and destroy every tracked broadcast;
-    call after the batch result is materialized. Returns the number
-    released."""
+    """Unpersist every tracked frame; call after the batch result is
+    materialized. Returns the number released."""
     n = 0
     while True:
         with _LOCK:
@@ -57,10 +52,7 @@ def release_persisted(blocking: bool = False) -> int:
                 return n
             obj = _TRACKED.pop()
         try:
-            if isinstance(obj, Broadcast):
-                obj.destroy(blocking)
-            else:
-                obj.unpersist(blocking)
+            obj.unpersist(blocking)
             n += 1
         except Exception:
             pass  # session already stopped — nothing to release

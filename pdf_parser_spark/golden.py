@@ -141,7 +141,7 @@ def ensure_golden(sf_dir: str) -> str:
 def ensure_bpe_golden(sf_dir: str) -> str:
     """Exact BPE token counts of the documents table by the single-node
     kernel (kernels.bpe.count_batch — the SAME function the Spark
-    mapInPandas wrapper broadcasts), as (doc_id, n_bpe_tokens). The BPE
+    mapInPandas wrapper calls), as (doc_id, n_bpe_tokens). The BPE
     arm of the token_stats oracle joins this, golden-parquet style; the
     SQL-expressible columns keep their independent DuckDB mirror."""
     from .kernels.bpe import count_batch

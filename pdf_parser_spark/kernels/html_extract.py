@@ -140,7 +140,9 @@ def extract_html(
     tag, segs, skip = "body", [], False
     depth = [0, 0, 0]  # link, boilerplate, dropped content
     pos = 0
-    for m in _TAG_RE.finditer(masked):
+    # every tag ends at a '>': past the last one no attempt can match, and
+    # each attempt there would scan to the end of the string
+    for m in _TAG_RE.finditer(masked, 0, masked.rfind(">") + 1):
         start = m.start()
         if start > pos and not masked[pos:start].isspace():
             skip = skip or depth[_BOILER] > 0 or depth[_DROP] > 0

@@ -25,16 +25,18 @@ Decoder (``decode_jpeg``) — baseline (SOF0/1) AND progressive (SOF2) reader:
   >2 sampling files, so callers fall back VISIBLY (decode_ok=False).
 
 Encoders — deterministic writers used by the render-media pipeline and the
-test vectors: ``encode_jpeg`` (baseline), ``encode_jpeg_progressive``
-(SOF2, arbitrary scan script; defaults to the libjpeg-style 10-scan
-progression), and ``encode_jpeg_cmyk`` (4-component Adobe baseline,
-transform 0 or 2 — the decoder's CMYK test-vector source). Both quantize identically, so decoding both encodings of one
-image yields byte-identical pixels — the codec tests pin this. 4:4:4 or
-4:2:0, the Annex-K example quantization tables, and SELF-DEFINED flat
-canonical Huffman tables (all DC symbols at 4 bits, all AC symbols at 8
-bits — valid per the spec, carried in DHT, and never emitting the all-ones
-code). Any conformant decoder reads the output; table choice only costs
-compression.
+test vectors, all three one call to ONE scan writer (``_write_jpeg``) with
+a scan script: ``encode_jpeg`` (baseline: the one scan that holds every
+band), ``encode_jpeg_progressive`` (SOF2, arbitrary scan script; defaults
+to the libjpeg-style 10-scan progression), and ``encode_jpeg_cmyk``
+(4-component Adobe baseline, transform 0 or 2 — the decoder's CMYK
+test-vector source). All quantize identically, so decoding a baseline and
+a progressive encoding of one image yields byte-identical pixels — the
+codec tests pin this. 4:4:4 or 4:2:0, the Annex-K example quantization
+tables, and SELF-DEFINED flat canonical Huffman tables (all DC symbols at
+4 bits, all AC symbols at 8 bits — valid per the spec, carried in DHT, and
+never emitting the all-ones code). Any conformant decoder reads the
+output; table choice only costs compression.
 
 Everything is integer/float64-deterministic: no RNG, no platform-dependent
 fast paths.
@@ -121,36 +123,26 @@ _QT_CHROMA = np.array(
 
 # --------------------------------------------------------- huffman tables ---
 
-def _canonical_codes(bits: list[int], huffval: list[int]) -> dict[int, tuple[int, int]]:
-    """JPEG canonical code assignment: symbol -> (code, length)."""
-    out: dict[int, tuple[int, int]] = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[huffval[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
+def _flat_table(length: int, symbols) -> tuple[bytes, dict[int, tuple[int, int]]]:
+    """DHT body (code-length counts + symbols) and symbol -> (code, length)
+    map of a canonical table that codes every symbol in ``length`` bits —
+    with a single code length, canonical assignment gives each symbol its
+    rank as its code."""
+    vals = sorted(symbols)
+    bits = [0] * 16
+    bits[length - 1] = len(vals)
+    return bytes(bits + vals), {s: (i, length) for i, s in enumerate(vals)}
 
 
-# encoder tables: flat canonical layouts (see module docstring)
-_ENC_DC_BITS = [0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_ENC_DC_VALS = list(range(12))
+# encoder tables: flat canonical layouts (see module docstring); progressive
+# scans additionally need the EOBn symbols (r<<4, r=1..14), which a baseline
+# file's table leaves out
 _AC_SYMBOLS = [0x00, 0xF0] + [
     (run << 4) | size for run in range(16) for size in range(1, 11)
 ]
-_ENC_AC_BITS = [0, 0, 0, 0, 0, 0, 0, len(_AC_SYMBOLS), 0, 0, 0, 0, 0, 0, 0, 0]
-_ENC_AC_VALS = sorted(_AC_SYMBOLS)
-_ENC_DC = _canonical_codes(_ENC_DC_BITS, _ENC_DC_VALS)
-_ENC_AC = _canonical_codes(_ENC_AC_BITS, _ENC_AC_VALS)
-
-# progressive scans additionally need the EOBn symbols (r<<4, r=1..14);
-# a separate flat table keeps the baseline encoder's bytes unchanged
-_AC_PROG_SYMBOLS = sorted(_AC_SYMBOLS + [r << 4 for r in range(1, 15)])
-_ENC_ACP_BITS = [0, 0, 0, 0, 0, 0, 0, len(_AC_PROG_SYMBOLS), 0, 0, 0, 0, 0, 0, 0, 0]
-_ENC_ACP = _canonical_codes(_ENC_ACP_BITS, _AC_PROG_SYMBOLS)
+_DHT_DC, _ENC_DC = _flat_table(4, range(12))
+_DHT_AC, _ENC_AC = _flat_table(8, _AC_SYMBOLS)
+_DHT_ACP, _ENC_ACP = _flat_table(8, _AC_SYMBOLS + [r << 4 for r in range(1, 15)])
 
 
 class _BitWriter:
@@ -238,88 +230,200 @@ def _ycc_planes(rgb: np.ndarray, subsample: bool) -> tuple[list, list]:
     return [ycc[0], cc[0], cc[1]], [(2, 2), (1, 1), (1, 1)]
 
 
-def _write_baseline(
+class _ScanWriter:
+    """Per-scan entropy writer over one AC table, with EOB-run and
+    buffered-correction-bit state (the encode_mcu_AC_* shape from T.81
+    Annex G). A baseline scan flushes the EOB run after every block."""
+
+    def __init__(self, table: dict[int, tuple[int, int]]):
+        self.bw = _BitWriter()
+        self.table = table
+        self.eob_run = 0
+        self.pending = []  # correction bits buffered behind the EOB run
+
+    def flush_eobrun(self) -> None:
+        if self.eob_run > 0:
+            r = self.eob_run.bit_length() - 1
+            code, ln = self.table[r << 4]  # EOBr; r = 0 is the plain EOB
+            self.bw.write((code << r) | (self.eob_run - (1 << r)), ln + r)
+            self.eob_run = 0
+        for b in self.pending:
+            self.bw.write(b, 1)
+        self.pending = []
+
+    def end_block_with_eob(self, correction_bits: list[int]) -> None:
+        self.eob_run += 1
+        self.pending.extend(correction_bits)
+        if self.eob_run == 0x7FFF:
+            self.flush_eobrun()
+
+    def finish(self) -> bytes:
+        self.flush_eobrun()
+        return self.bw.flush()
+
+
+def _encode_ac_first(sw: _ScanWriter, pos: list[int], vals: list[int], last: int) -> None:
+    """First-pass AC coding of one block: ``pos``/``vals`` are the band
+    offsets and point-transformed values of its nonzero coefficients,
+    ``last`` the band's last offset. A baseline block is the band 1..63 at
+    Al=0, whose EOB is an EOB run of one."""
+    if pos:
+        sw.flush_eobrun()
+        table, write = sw.table, sw.bw.write
+        prev = -1
+        for k, v in zip(pos, vals):
+            run = k - prev - 1
+            while run >= 16:
+                write(*table[0xF0])
+                run -= 16
+            size, bits = _magnitude(v)
+            code, ln = table[(run << 4) | size]
+            write((code << size) | bits, ln + size)
+            prev = k
+        if prev == last:
+            return
+    sw.end_block_with_eob([])
+
+
+def _encode_ac_refine(sw: _ScanWriter, pos: list[int], vals: list[int], last: int) -> None:
+    """Refinement AC coding of one block (same inputs as the first pass): a
+    coefficient at 1 is newly significant and coded with its sign, a larger
+    one carries one buffered correction bit."""
+    eob = max((k for k, v in zip(pos, vals) if abs(v) == 1), default=-1)
+    table, write = sw.table, sw.bw.write
+    run, prev = 0, -1
+    buffered: list[int] = []
+    for k, v in zip(pos, vals):
+        run += k - prev - 1
+        prev = k
+        while run > 15 and k <= eob:
+            sw.flush_eobrun()
+            write(*table[0xF0])
+            run -= 16
+            for b in buffered:
+                write(b, 1)
+            buffered = []
+        a = abs(v)
+        if a > 1:  # history nonzero: one correction bit, run unaffected
+            buffered.append(a & 1)
+            continue
+        sw.flush_eobrun()
+        code, ln = table[(run << 4) | 1]
+        write((code << 1) | (v > 0), ln + 1)
+        for b in buffered:
+            write(b, 1)
+        buffered = []
+        run = 0
+    if run + last - prev > 0 or buffered:
+        sw.end_block_with_eob(buffered)
+
+
+def _scan_blocks(
+    coefs: list[np.ndarray], sampling: list[tuple[int, int]], comp_ids, h: int, w: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(blocks x 64 coefficients, each block's component) of one scan, in
+    the order it codes them — the decoder's walk (T.81 A.2): a
+    one-component scan covers that component's own block grid, a
+    multi-component scan the MCU grid with each component's h x v blocks per
+    MCU. Grid cells past a plane's last block repeat that block's row or
+    column."""
+    hmax = max(s[0] for s in sampling)
+    vmax = max(s[1] for s in sampling)
+    one = len(comp_ids) == 1
+    sh, sv = sampling[comp_ids[0]] if one else (1, 1)
+    units_y, units_x = -(-h * sv // (8 * vmax)), -(-w * sh // (8 * hmax))
+    per_unit = [(1, 1)] if one else [sampling[ci] for ci in comp_ids]
+    parts = []
+    for ci, (sh, sv) in zip(comp_ids, per_unit):
+        c = coefs[ci]
+        r = np.minimum(np.arange(units_y * sv), c.shape[0] - 1)
+        q = np.minimum(np.arange(units_x * sh), c.shape[1] - 1)
+        grid = c[r.reshape(units_y, 1, sv, 1), q.reshape(1, units_x, 1, sh)]
+        parts.append(grid.reshape(units_y, units_x, sv * sh, 64))
+    comps = np.repeat(comp_ids, [sh * sv for sh, sv in per_unit])
+    return np.concatenate(parts, axis=2).reshape(-1, 64), np.tile(comps, units_y * units_x)
+
+
+def _write_jpeg(
     planes: list[np.ndarray], sampling: list[tuple[int, int]], qids: list[int],
-    app_segment: bytes,
+    app_segment: bytes, script: list[tuple],
 ) -> bytes:
-    """One interleaved baseline (SOF0) scan over ``planes`` — the first at
-    full resolution — with quant table ``qids[i]`` (0 luma, 1 chroma) and
-    ``sampling[i]`` = (h, v) per component, after ``app_segment``."""
+    """The one JPEG writer: ``planes`` — the first at full resolution — with
+    quant table ``qids[i]`` (0 luma, 1 chroma) and ``sampling[i]`` = (h, v)
+    per component, after ``app_segment``, as the scans of ``script``, each
+    (component indices, Ss, Se, Ah, Al).
+
+    Only a baseline scan has Ss=0 and Se>0: a script with one is written as
+    a baseline (SOF0) file, each block's AC band coded right after its DC
+    and its EOB run ended before the next block. Every other script is a
+    progressive (SOF2) file."""
     h, w = planes[0].shape
     qt = (_QT_LUMA, _QT_CHROMA)
     coefs = [_encode_plane_blocks(_blocks_of(p), qt[q]) for p, q in zip(planes, qids)]
-    hmax = max(s[0] for s in sampling)
-    vmax = max(s[1] for s in sampling)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    bw = _BitWriter()
-    pred = [0] * len(planes)
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for ci, (sh, sv) in enumerate(sampling):
-                c = coefs[ci]
-                for by in range(sv):
-                    for bx in range(sh):
-                        r = min(my * sv + by, c.shape[0] - 1)
-                        q = min(mx * sh + bx, c.shape[1] - 1)
-                        blk = c[r, q]
-                        diff = int(blk[0]) - pred[ci]
-                        pred[ci] = int(blk[0])
-                        size, bits = _magnitude(diff)
-                        code, ln = _ENC_DC[size]
-                        bw.write(code, ln)
-                        if size:
-                            bw.write(bits, size)
-                        run = 0
-                        last_nz = 0
-                        for k in range(63, 0, -1):
-                            if blk[k]:
-                                last_nz = k
-                                break
-                        for k in range(1, last_nz + 1):
-                            v = int(blk[k])
-                            if v == 0:
-                                run += 1
-                                continue
-                            while run >= 16:
-                                code, ln = _ENC_AC[0xF0]
-                                bw.write(code, ln)
-                                run -= 16
-                            size, bits = _magnitude(v)
-                            code, ln = _ENC_AC[(run << 4) | size]
-                            bw.write(code, ln)
-                            bw.write(bits, size)
-                            run = 0
-                        if last_nz != 63:
-                            code, ln = _ENC_AC[0x00]
-                            bw.write(code, ln)
-    entropy = bw.flush()
+    baseline = any(ss == 0 < se for _, ss, se, _, _ in script)
+    ac_table = _ENC_AC if baseline else _ENC_ACP
 
-    n = len(planes)
     out = bytearray(b"\xff\xd8") + app_segment
     out += _seg(0xDB, bytes([0x00]) + bytes(int(x) for x in _QT_LUMA[_ZIGZAG]))
     out += _seg(0xDB, bytes([0x01]) + bytes(int(x) for x in _QT_CHROMA[_ZIGZAG]))
-    sof = struct.pack(">BHHB", 8, h, w, n)
+    sof = struct.pack(">BHHB", 8, h, w, len(planes))
     for i, ((sh, sv), qid) in enumerate(zip(sampling, qids), start=1):
         sof += bytes([i, (sh << 4) | sv, qid])
-    out += _seg(0xC0, sof)
-    out += _seg(0xC4, bytes([0x00]) + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
-    out += _seg(0xC4, bytes([0x10]) + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
-    sos = bytes([n]) + b"".join(bytes([i + 1, 0x00]) for i in range(n))
-    out += _seg(0xDA, sos + bytes([0, 63, 0]))
-    return bytes(out + entropy + b"\xff\xd9")
+    out += _seg(0xC0 if baseline else 0xC2, sof)
+    out += _seg(0xC4, b"\x00" + _DHT_DC)
+    out += _seg(0xC4, b"\x10" + (_DHT_AC if baseline else _DHT_ACP))
+
+    for comp_ids, ss, se, ah, al in script:
+        blocks, comps = _scan_blocks(coefs, sampling, comp_ids, h, w)
+        sw = _ScanWriter(ac_table)
+        write = sw.bw.write
+        if ss == 0:
+            dc = blocks[:, 0] >> al  # arithmetic shift, like libjpeg
+            if ah:  # refinement: one raw bit per block
+                dc &= 1
+            else:  # the difference to the component's previous block
+                for ci in comp_ids:
+                    dc[comps == ci] = np.diff(dc[comps == ci], prepend=0)
+            dc = dc.tolist()
+        if se:
+            lo = max(ss, 1)
+            band = blocks[:, lo:se + 1]
+            band = np.sign(band) * (np.abs(band) >> al)
+            rows, pos = np.nonzero(band)
+            ends = [0] + np.cumsum(np.bincount(rows, minlength=len(blocks))).tolist()
+            pos, vals = pos.tolist(), band[rows, pos].tolist()
+            encode_ac = _encode_ac_refine if ah else _encode_ac_first
+        for i in range(len(blocks)):
+            if ss == 0:
+                if ah:
+                    write(dc[i], 1)
+                else:
+                    size, bits = _magnitude(dc[i])
+                    code, ln = _ENC_DC[size]
+                    write((code << size) | bits, ln + size)
+            if se:
+                encode_ac(sw, pos[ends[i]:ends[i + 1]], vals[ends[i]:ends[i + 1]], se - lo)
+                if baseline:
+                    sw.flush_eobrun()
+        sos = bytes([len(comp_ids)])
+        for ci in comp_ids:
+            sos += bytes([ci + 1, 0x00 if ss == 0 else 0x10])
+        out += _seg(0xDA, sos + bytes([ss, se, (ah << 4) | al]))
+        out += sw.finish()
+    return bytes(out + b"\xff\xd9")
 
 
 _JFIF = _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
 
 
 def encode_jpeg(rgb: np.ndarray, subsample: bool = False) -> bytes:
-    """Encode an HxWx3 uint8 array as a baseline JFIF JPEG.
+    """Encode an HxWx3 uint8 array as a baseline JFIF JPEG: one interleaved
+    scan that holds every band.
 
     ``subsample=True`` emits 4:2:0 (luma 2x2 per MCU), else 4:4:4.
     """
     planes, samp = _ycc_planes(rgb, subsample)
-    return _write_baseline(planes, samp, [0, 1, 1], _JFIF)
+    return _write_jpeg(planes, samp, [0, 1, 1], _JFIF, [((0, 1, 2), 0, 63, 0, 0)])
 
 
 def encode_jpeg_cmyk(cmyk: np.ndarray, ycck: bool = False) -> bytes:
@@ -342,10 +446,8 @@ def encode_jpeg_cmyk(cmyk: np.ndarray, ycck: bool = False) -> bytes:
     else:
         planes = [255.0 - ink[:, :, i] for i in range(4)]
     adobe = _seg(0xEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, 2 if ycck else 0))
-    return _write_baseline(planes, [(1, 1)] * 4, [0, 1, 1, 0], adobe)
+    return _write_jpeg(planes, [(1, 1)] * 4, [0, 1, 1, 0], adobe, [((0, 1, 2, 3), 0, 63, 0, 0)])
 
-
-# ---------------------------------------------------- progressive encoder ---
 
 # libjpeg-style default progression: DC first at Al=1, luma AC split into two
 # spectral bands at Al=2, chroma AC at Al=1, then refinements down to Al=0.
@@ -357,105 +459,6 @@ _DEFAULT_SCRIPT = [
     ((0, 1, 2), 0, 0, 1, 0),
     ((0,), 1, 63, 1, 0), ((1,), 1, 63, 1, 0), ((2,), 1, 63, 1, 0),
 ]
-
-
-class _ProgressiveWriter:
-    """Per-scan entropy writer with EOB-run and buffered-correction-bit
-    state (the encode_mcu_AC_* shape from T.81 Annex G)."""
-
-    def __init__(self):
-        self.bw = _BitWriter()
-        self.eob_run = 0
-        self.pending = []  # correction bits buffered behind the EOB run
-
-    def flush_eobrun(self) -> None:
-        if self.eob_run > 0:
-            r = self.eob_run.bit_length() - 1
-            code, ln = _ENC_ACP[r << 4] if r else _ENC_ACP[0x00]
-            self.bw.write(code, ln)
-            if r:
-                self.bw.write(self.eob_run - (1 << r), r)
-            self.eob_run = 0
-        for b in self.pending:
-            self.bw.write(b, 1)
-        self.pending = []
-
-    def end_block_with_eob(self, correction_bits: list[int]) -> None:
-        self.eob_run += 1
-        self.pending.extend(correction_bits)
-        if self.eob_run == 0x7FFF:
-            self.flush_eobrun()
-
-    def finish(self) -> bytes:
-        self.flush_eobrun()
-        return self.bw.flush()
-
-
-def _encode_ac_first(pw: _ProgressiveWriter, blk, ss: int, se: int, al: int) -> None:
-    vals = [
-        (abs(int(blk[k])) >> al) * (1 if blk[k] >= 0 else -1)
-        for k in range(ss, se + 1)
-    ]
-    last_nz = -1
-    for i, v in enumerate(vals):
-        if v:
-            last_nz = i
-    if last_nz < 0:
-        pw.end_block_with_eob([])
-        return
-    run = 0
-    for i in range(last_nz + 1):
-        v = vals[i]
-        if v == 0:
-            run += 1
-            continue
-        pw.flush_eobrun()
-        while run >= 16:
-            code, ln = _ENC_ACP[0xF0]
-            pw.bw.write(code, ln)
-            run -= 16
-        size, bits = _magnitude(v)
-        code, ln = _ENC_ACP[(run << 4) | size]
-        pw.bw.write(code, ln)
-        pw.bw.write(bits, size)
-        run = 0
-    if last_nz < se - ss:
-        pw.end_block_with_eob([])
-
-
-def _encode_ac_refine(pw: _ProgressiveWriter, blk, ss: int, se: int, al: int) -> None:
-    absvals = [abs(int(blk[k])) >> al for k in range(ss, se + 1)]
-    eob = -1  # index of the last NEWLY-significant coefficient
-    for i, a in enumerate(absvals):
-        if a == 1:
-            eob = i
-    run = 0
-    buffered: list[int] = []
-    for i, a in enumerate(absvals):
-        if a == 0:
-            run += 1
-            continue
-        while run > 15 and i <= eob:
-            pw.flush_eobrun()
-            code, ln = _ENC_ACP[0xF0]
-            pw.bw.write(code, ln)
-            run -= 16
-            for b in buffered:
-                pw.bw.write(b, 1)
-            buffered = []
-        if a > 1:  # history nonzero: one correction bit, run unaffected
-            buffered.append(a & 1)
-            continue
-        pw.flush_eobrun()
-        code, ln = _ENC_ACP[(run << 4) | 1]
-        pw.bw.write(code, ln)
-        pw.bw.write(1 if blk[ss + i] >= 0 else 0, 1)
-        for b in buffered:
-            pw.bw.write(b, 1)
-        buffered = []
-        run = 0
-    if run > 0 or buffered:
-        pw.end_block_with_eob(buffered)
 
 
 def encode_jpeg_progressive(
@@ -472,72 +475,7 @@ def encode_jpeg_progressive(
     yield byte-identical pixels — the property the codec tests pin.
     """
     planes, samp = _ycc_planes(rgb, subsample)
-    h, w = planes[0].shape
-    qts = [_QT_LUMA, _QT_CHROMA, _QT_CHROMA]
-    qids = [0, 1, 1]
-    coefs = [
-        _encode_plane_blocks(_blocks_of(p), qt) for p, qt in zip(planes, qts)
-    ]
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-
-    out = bytearray(b"\xff\xd8") + _JFIF
-    out += _seg(0xDB, bytes([0x00]) + bytes(int(x) for x in _QT_LUMA[_ZIGZAG]))
-    out += _seg(0xDB, bytes([0x01]) + bytes(int(x) for x in _QT_CHROMA[_ZIGZAG]))
-    sof = struct.pack(">BHHB", 8, h, w, 3)
-    for i, ((sh, sv), qid) in enumerate(zip(samp, qids), start=1):
-        sof += bytes([i, (sh << 4) | sv, qid])
-    out += _seg(0xC2, sof)  # SOF2: progressive
-    out += _seg(0xC4, bytes([0x00]) + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
-    out += _seg(0xC4, bytes([0x10]) + bytes(_ENC_ACP_BITS) + bytes(_AC_PROG_SYMBOLS))
-
-    for comp_ids, ss, se, ah, al in script or _DEFAULT_SCRIPT:
-        pw = _ProgressiveWriter()
-        if ss == 0:  # DC scan: interleaved MCU walk over listed components
-            pred = {ci: 0 for ci in comp_ids}
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    for ci in comp_ids:
-                        sh, sv = samp[ci]
-                        c = coefs[ci]
-                        for by in range(sv):
-                            for bx in range(sh):
-                                r = min(my * sv + by, c.shape[0] - 1)
-                                q = min(mx * sh + bx, c.shape[1] - 1)
-                                dc = int(c[r, q, 0])
-                                if ah:  # refinement: one raw bit per block
-                                    pw.bw.write((dc >> al) & 1, 1)
-                                else:
-                                    v = dc >> al  # arithmetic shift, like libjpeg
-                                    diff = v - pred[ci]
-                                    pred[ci] = v
-                                    size, bits = _magnitude(diff)
-                                    code, ln = _ENC_DC[size]
-                                    pw.bw.write(code, ln)
-                                    if size:
-                                        pw.bw.write(bits, size)
-        else:  # AC scan: single component, its own block grid
-            (ci,) = comp_ids
-            sh, sv = samp[ci]
-            cw = -(-w * sh // hmax)
-            chh = -(-h * sv // vmax)
-            wb, hb = -(-cw // 8), -(-chh // 8)
-            c = coefs[ci]
-            enc = _encode_ac_refine if ah else _encode_ac_first
-            for by in range(hb):
-                for bx in range(wb):
-                    enc(pw, c[min(by, c.shape[0] - 1), min(bx, c.shape[1] - 1)],
-                        ss, se, al)
-        sos = bytes([len(comp_ids)])
-        for ci in comp_ids:
-            sos += bytes([ci + 1, 0x00 if ss == 0 else 0x10])
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += _seg(0xDA, sos)
-        out += pw.finish()
-    out += b"\xff\xd9"
-    return bytes(out)
+    return _write_jpeg(planes, samp, [0, 1, 1], _JFIF, script or _DEFAULT_SCRIPT)
 
 
 # ---------------------------------------------------------------- decoder ---

@@ -344,7 +344,9 @@ class ParsedDoc:
     metadata: dict[str, str] = field(default_factory=dict)
 
 
-_OBJ_RE = re.compile(rb"(\d+) 0 obj\n(.*?)\nendobj\n", re.DOTALL)
+# (?<!\d): an attempt that fails at a digit run's first digit fails at
+# every later digit of the run, so only the first is tried
+_OBJ_RE = re.compile(rb"(?<!\d)(\d+) 0 obj\n(.*?)\nendobj\n", re.DOTALL)
 _REF_RE = re.compile(rb"/(\w+) (\d+) 0 R")
 _NUM = rb"(-?\d+(?:\.\d+)?)"
 _TEXT_OP = re.compile(
@@ -380,7 +382,8 @@ def _parse_objects(
     objs: dict[int, bytes] = {}
     spans: dict[int, int] = {}
     heads: dict[int, int] = {}
-    for m in _OBJ_RE.finditer(data):
+    # every object ends at a '\nendobj\n': the scan stops after the last one
+    for m in _OBJ_RE.finditer(data, 0, data.rfind(b"\nendobj\n") + 8):
         oid = int(m.group(1))
         objs[oid] = m.group(2)
         spans[oid] = m.start(2)

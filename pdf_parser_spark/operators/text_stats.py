@@ -11,8 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import track
-
 __all__ = [
     "occurrences",
     "lang_id",
@@ -165,10 +163,11 @@ def with_bpe_token_count(
     """Append the EXACT BPE token count (kernels.bpe — the committed
     deterministic merge table) as one Arrow-batched mapInPandas crossing.
 
-    100 TB design: the merge table is a SparkContext broadcast (sent to
-    each executor once, not per task via closure pickling); the kernel
-    memoizes per-word counts within each batch, so the cost is bounded by
-    DISTINCT words per batch, not total tokens. No shuffle — the column
+    100 TB design: the merge table is a pure function of the shipped code,
+    so each Python worker builds it once (``default_ranks`` memoizes it)
+    instead of receiving it as a broadcast; the kernel memoizes per-word
+    counts within each batch, so the cost is bounded by DISTINCT words per
+    batch, not total tokens. No shuffle — the column
     rides the scan partitions like the extraction kernel does. This is the
     slow-but-exact arm next to ``token_profile``'s ~4-chars/token
     ``n_subwords`` estimate (kept for comparison) — a training pipeline
@@ -180,20 +179,17 @@ def with_bpe_token_count(
     from pyspark.sql import types as T
 
     from .. import map_in_pandas
-    from ..kernels.bpe import count_batch, default_ranks
+    from ..kernels.bpe import count_batch
 
-    # released with the call's persists: caching.release_persisted()
-    bc = track(docs.sparkSession.sparkContext.broadcast(default_ranks()))
     schema = T.StructType(
         docs.schema.fields + [T.StructField(out_col, T.IntegerType(), False)]
     )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ranks = bc.value
         for pdf in batches:
             pdf = pdf.copy()
             pdf[out_col] = pd.Series(
-                count_batch(pdf[text_col], ranks), index=pdf.index, dtype="int32"
+                count_batch(pdf[text_col]), index=pdf.index, dtype="int32"
             )
             yield pdf
 

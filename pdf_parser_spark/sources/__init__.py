@@ -18,11 +18,7 @@ from ..pipeline import TRANSCRIPT_SPARK_SCHEMA
 def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
     """The primary input: transcripts parquet with the fixed schema.
 
-    With an Iceberg catalog on the classpath this would be
-    ``spark.read.table(name)`` + snapshot options; the sandbox substitutes
-    parquet with the identical schema (SURVEY.md §1.3). Gated, not stubbed:
-    """
-    if path.startswith("iceberg:"):
-        # Iceberg jars are not in this image; keep the call-shape documented.
-        return spark.read.table(path[len("iceberg:"):])
+    An Iceberg catalog would make this ``spark.read.table(name)`` plus
+    snapshot options; parquet with the identical schema stands in for it
+    (SURVEY.md §1.3)."""
     return spark.read.schema(TRANSCRIPT_SPARK_SCHEMA).parquet(path)

@@ -182,6 +182,21 @@ def test_progressive_scripts_match_baseline(script):
         assert np.array_equal(base, prog), (seed, h, w)
 
 
+def test_progressive_one_component_dc_scans_subsampled():
+    """A one-component DC scan walks that component's own block grid
+    (T.81 A.2.2), not the MCU grid: with 4:2:0 the two differ for luma,
+    and a writer that walked MCUs would place luma DC values in the wrong
+    blocks."""
+    from pdf_parser_spark.kernels.jpeg import encode_jpeg_progressive
+
+    script = [((0,), 0, 0, 0, 0), ((1, 2), 0, 0, 0, 0),
+              ((0,), 1, 63, 0, 0), ((1,), 1, 63, 0, 0), ((2,), 1, 63, 0, 0)]
+    img = _rand_img(3, 37, 45)
+    base = decode_jpeg(encode_jpeg(img, subsample=True))
+    prog = decode_jpeg(encode_jpeg_progressive(img, script=script, subsample=True))
+    assert np.array_equal(base, prog)
+
+
 def test_progressive_smooth_gradient_sparse_ac():
     """Smooth content quantizes to sparse AC blocks — the EOB-run +
     buffered-correction-bit paths get their coverage here (the bug class
@@ -200,72 +215,19 @@ def test_progressive_smooth_gradient_sparse_ac():
 def test_noninterleaved_multiscan_baseline_decodes():
     """A spec-legal baseline file with one SOS per component (T.81 A.2.2)
     must decode identically to the interleaved encoding — previously this
-    raised unsupported_format."""
-    from pdf_parser_spark.kernels.jpeg import (
-        _ENC_AC, _ENC_DC, _BitWriter, _blocks_of, _encode_plane_blocks,
-        _magnitude, _rgb_to_ycbcr, _QT_CHROMA, _QT_LUMA,
-        _ENC_AC_BITS, _ENC_AC_VALS, _ENC_DC_BITS, _ENC_DC_VALS, _ZIGZAG,
-    )
+    raised unsupported_format. The writer makes it from a baseline script
+    of one full-band scan per component; its bytes are pinned by digest."""
+    import hashlib
+
+    from pdf_parser_spark.kernels.jpeg import _write_jpeg, _ycc_planes
 
     img = _rand_img(11, 24, 17)
-    h, w = img.shape[:2]
-    ycc = _rgb_to_ycbcr(img)
-    qts = [_QT_LUMA, _QT_CHROMA, _QT_CHROMA]
-
-    def seg(marker, body):
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0x00]) + bytes(int(x) for x in _QT_LUMA[_ZIGZAG]))
-    out += seg(0xDB, bytes([0x01]) + bytes(int(x) for x in _QT_CHROMA[_ZIGZAG]))
-    sof = struct.pack(">BHHB", 8, h, w, 3)
-    for i, qid in enumerate([0, 1, 1], start=1):
-        sof += bytes([i, 0x11, qid])
-    out += seg(0xC0, sof)
-    out += seg(0xC4, bytes([0x00]) + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
-    out += seg(0xC4, bytes([0x10]) + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
-    for ci in range(3):  # one full-band scan per component
-        coefs = _encode_plane_blocks(_blocks_of(ycc[ci]), qts[ci])
-        bw = _BitWriter()
-        pred = 0
-        for by in range(coefs.shape[0]):
-            for bx in range(coefs.shape[1]):
-                blk = coefs[by, bx]
-                diff = int(blk[0]) - pred
-                pred = int(blk[0])
-                size, bits = _magnitude(diff)
-                code, ln = _ENC_DC[size]
-                bw.write(code, ln)
-                if size:
-                    bw.write(bits, size)
-                run, last_nz = 0, 0
-                for k in range(63, 0, -1):
-                    if blk[k]:
-                        last_nz = k
-                        break
-                for k in range(1, last_nz + 1):
-                    v = int(blk[k])
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run >= 16:
-                        code, ln = _ENC_AC[0xF0]
-                        bw.write(code, ln)
-                        run -= 16
-                    size, bits = _magnitude(v)
-                    code, ln = _ENC_AC[(run << 4) | size]
-                    bw.write(code, ln)
-                    bw.write(bits, size)
-                    run = 0
-                if last_nz != 63:
-                    code, ln = _ENC_AC[0x00]
-                    bw.write(code, ln)
-        out += seg(0xDA, bytes([1, ci + 1, 0x00, 0, 63, 0]))
-        out += bw.flush()
-    out += b"\xff\xd9"
-
-    interleaved = decode_jpeg(encode_jpeg(img))
-    assert np.array_equal(decode_jpeg(bytes(out)), interleaved)
+    planes, samp = _ycc_planes(img, False)
+    script = [((ci,), 0, 63, 0, 0) for ci in range(3)]
+    data = _write_jpeg(planes, samp, [0, 1, 1], b"", script)
+    assert hashlib.md5(data).hexdigest() == "bcc27354efef51f5aa5259e73dfc972c"
+    assert data.count(b"\xff\xda") == 3 and b"\xff\xc0" in data
+    assert np.array_equal(decode_jpeg(data), decode_jpeg(encode_jpeg(img)))
 
 
 # ------------------------------------------------------- CMYK / YCCK ---
@@ -319,3 +281,52 @@ def test_cmyk_through_decode_status():
     ink[:, :, 1] = 200
     arr, st = decode_image_status(encode_jpeg_cmyk(ink, ycck=True))
     assert st == "ok" and arr.shape == (8, 8, 3)
+
+
+# ------------------------------------------------------- pinned output ---
+
+
+def _pin_img(channels):
+    """A 45x61 smooth field with a noise patch: sparse AC blocks (EOB runs,
+    refinement corrections) and dense ones in one image."""
+    yy, xx = np.mgrid[0:45, 0:61]
+    img = np.stack([(xx * 4 + yy * (c + 1)) % 256 for c in range(channels)], axis=2)
+    img[10:27, 20:41] = np.random.default_rng(5).integers(0, 256, (17, 21, channels))
+    return img.astype(np.uint8)
+
+
+_SPECTRAL_ONLY = [((0, 1, 2), 0, 0, 0, 0), ((0,), 1, 9, 0, 0), ((0,), 10, 63, 0, 0),
+                  ((1,), 1, 63, 0, 0), ((2,), 1, 63, 0, 0)]
+
+
+@pytest.mark.parametrize(
+    "case, digest",
+    [
+        ("baseline_444", "966cba451ab8fbb9b05b2bd34309e967"),
+        ("baseline_420", "9c57401a06cb4e919ca791a2af09725b"),
+        ("cmyk_t0", "93a7c59fc5bf678767fdc259c768665e"),
+        ("cmyk_t2", "421c07d762f4761bc948e3a613b58332"),
+        ("progressive_444", "df5bd586828088290c38b9cc05cc715b"),
+        ("progressive_420", "a3a374eff3484a15c719db60627c25de"),
+        ("progressive_spectral_420", "3f95380490c481e16dbc6cd37ffe4daf"),
+    ],
+)
+def test_encoder_bytes_pinned(case, digest):
+    """Every encoder's output is pinned byte for byte: the three encoders
+    share one scan writer, and a change to it must not move any file."""
+    import hashlib
+
+    from pdf_parser_spark.kernels.jpeg import encode_jpeg_cmyk, encode_jpeg_progressive
+
+    rgb = _pin_img(3)
+    data = {
+        "baseline_444": lambda: encode_jpeg(rgb),
+        "baseline_420": lambda: encode_jpeg(rgb, subsample=True),
+        "cmyk_t0": lambda: encode_jpeg_cmyk(_pin_img(4)),
+        "cmyk_t2": lambda: encode_jpeg_cmyk(_pin_img(4), ycck=True),
+        "progressive_444": lambda: encode_jpeg_progressive(rgb),
+        "progressive_420": lambda: encode_jpeg_progressive(rgb, subsample=True),
+        "progressive_spectral_420": lambda: encode_jpeg_progressive(
+            rgb, script=_SPECTRAL_ONLY, subsample=True),
+    }[case]()
+    assert hashlib.md5(data).hexdigest() == digest

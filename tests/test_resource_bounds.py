@@ -132,3 +132,44 @@ def test_inflate_bounds_and_truncation():
     with pytest.raises(zlib.error):
         inflate(z[:-5], 300)  # truncated, as zlib.decompress would say
     assert inflate(z + b"trailing", 300) == b"abc" * 100
+
+
+_HOSTILE_SCAN = r"""
+import base64, sys, time
+from pdf_parser_spark.kernels.extract import extract_one
+
+n = 256 << 10
+digits = b"7" * n
+shapes = {
+    "html_unclosed_tags": "<a " * (n // 3),
+    "pdf_digit_run": base64.b64encode(b"%PDF-1.5\n" + digits).decode(),
+    "pdf_digit_run_then_endobj": base64.b64encode(b"%PDF-1.5\n" + digits + b"\nendobj\n").decode(),
+    "pdf_unended_objects": base64.b64encode(b"%PDF-1.5\n" + b"1 0 obj\n" * (n // 8)).decode(),
+}
+for name, payload in shapes.items():
+    t = time.perf_counter()
+    kind, _, _, _, ok = extract_one(payload)
+    print(name, kind, ok, round(time.perf_counter() - t, 3), flush=True)
+"""
+
+
+def test_hostile_regex_scans_are_linear():
+    """Payloads that made a regex retry to the end of the string from every
+    start position — ``<a `` repeated with no ``>`` after it, a PDF of one
+    long digit run, and ``1 0 obj`` headers with no ``endobj`` — finish at
+    256 KB in well under a second each (a
+    quadratic scan takes minutes at that size). A subprocess with a
+    timeout keeps a regression from hanging the suite."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _HOSTILE_SCAN], cwd=root, capture_output=True,
+        text=True, timeout=30, check=True,
+    ).stdout.split()
+    rows = {out[i]: out[i + 1:i + 4] for i in range(0, len(out), 4)}
+    assert rows["html_unclosed_tags"][:2] == ["html", "True"]
+    assert {r[1] for name, r in rows.items() if name.startswith("pdf")} == {"False"}
+    assert all(float(r[2]) < 5.0 for r in rows.values()), rows
